@@ -209,18 +209,22 @@ def connected_components(
         both = undirected(edges)
     idt = both.schema["src"].dataType.simpleString()
     # Round-12: LOCAL STAR CONTRACTION before the distributed loop.
-    # Measured (tools/profile_cc.py, sf0.1): each loop round costs a
+    # Measured (sf0.1, per-round phase timings; plans/r12/
+    # cc_rounds_{before,after}.txt): each loop round costs a
     # near-constant ~0.45s of driver-side planning + tiny-stage
     # scheduling regardless of data size, and the embedding near-dup
     # graph needed 14 rounds (long chains) on a 1,309-edge graph — the
     # fixpoint was ALL fixed overhead. One partition-local union-find
-    # pass (no shuffle: ``both`` is already hash-partitioned) collapses
-    # every within-partition path to a star; the loop then only has to
-    # stitch stars across partitions, in ~log(#partitions-per-chain)
-    # rounds. The ``nodes``-restriction contract is preserved by
-    # semi-joining both endpoints before the contraction (only ids
-    # present in ``nodes`` may relay connectivity — the same effective
-    # edge set the old loop's label join enforced).
+    # pass collapses every within-partition path to a star; the loop
+    # then only has to stitch stars across partitions, in
+    # ~log(#partitions-per-chain) rounds. The ``nodes``-restriction
+    # contract is preserved by semi-joining both endpoints before the
+    # contraction (only ids present in ``nodes`` may relay
+    # connectivity — the same effective edge set the old loop's label
+    # join enforced). Those two ``left_semi`` joins are not free:
+    # ``both`` is hash-partitioned on ``src`` only, so unless ``nodes``
+    # broadcasts, the ``dst`` join re-exchanges the edge rows and the
+    # union-find runs over that join's output partitioning.
     eligible = (
         both.join(
             nodes.select(F.col("doc_id").alias("src")), "src", "left_semi"

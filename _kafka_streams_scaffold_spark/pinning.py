@@ -24,7 +24,6 @@ for the session lifetime.
 
 from __future__ import annotations
 
-import os
 import threading
 from contextlib import contextmanager
 
@@ -55,19 +54,10 @@ _KEY_LOCKS_GUARD = threading.Lock()
 # Cluster posture: localCheckpoint stores unreplicated blocks — the
 # same trade clustering.py documents for its iteration checkpoints;
 # a production deployment swaps in reliable checkpoint(dir) or a
-# parquet stage table. Set SPARK_GRAFT_PIN_MODE=persist (or call
-# set_truncate(False)) to keep full-lineage persist pins — the plan
-# inspection tests use this to audit upstream plan shapes through
-# the pin boundary.
-_TRUNCATE = os.environ.get("SPARK_GRAFT_PIN_MODE", "ckpt") != "persist"
-
-
-def set_truncate(on: bool) -> bool:
-    """Toggle checkpoint-backed pins; returns the previous mode."""
-    global _TRUNCATE
-    prev = _TRUNCATE
-    _TRUNCATE = on
-    return prev
+# parquet stage table. ``full_lineage()`` switches to full-lineage
+# persist pins for the plan inspection tests, which audit upstream
+# plan shapes through the pin boundary.
+_TRUNCATE = True
 
 
 @contextmanager
@@ -77,12 +67,14 @@ def full_lineage():
     anti-pattern sweeps over complete trees) run inside this, so the
     checkpoint default never hides an upstream plan from them. Pins
     created inside are released on exit."""
-    prev = set_truncate(False)
+    global _TRUNCATE
+    prev = _TRUNCATE
+    _TRUNCATE = False
     try:
         yield
     finally:
         unpersist_all()
-        set_truncate(prev)
+        _TRUNCATE = prev
 
 
 def pin(df: DataFrame) -> DataFrame:
@@ -144,7 +136,7 @@ def shared_pin(key, build) -> DataFrame:
         return df
 
 
-def unpersist_all(keep=None) -> int:
+def unpersist_all(keep: tuple[str, ...] = ()) -> int:
     """Release every pinned table; returns how many were released.
     Consumers that already materialized their results are unaffected.
 
@@ -157,13 +149,13 @@ def unpersist_all(keep=None) -> int:
     Harness and test call sites must therefore fully execute every
     consumer BEFORE releasing (bench.py, check_oracle.py and the test
     suites all do: one query's actions complete before the release
-    between queries). Only persist-mode pins
-    (``SPARK_GRAFT_PIN_MODE=persist`` / ``full_lineage()``) keep the
-    old recompute-on-release semantics — use that mode for any path
-    that may re-execute a released frame.
+    between queries). Only persist-mode pins (``full_lineage()``)
+    keep the old recompute-on-release semantics — use that mode for
+    any path that may re-execute a released frame.
 
-    ``keep``: optional predicate over SHARED-pin keys. Matching
-    shared pins (and their cached tables) survive the release — the
+    ``keep``: optional tuple of key prefixes. SHARED pins whose key is
+    a tuple with a ``str`` first element starting with one of them
+    (and their cached tables) survive the release — the
     scope harnesses use to let a CONSECUTIVE family of composite
     queries (the dedup audits, which all derive the same
     shingle/signature/pair roots) share one materialization instead
@@ -171,8 +163,8 @@ def unpersist_all(keep=None) -> int:
     between queries. Keeping a derived pin keeps only ITSELF alive,
     not its upstream lineage — shared chains (capped_inter over
     capped_shingles) stay correct because each level is its own
-    shared pin and the predicate keeps the whole prefix family."""
-    if keep is None:
+    shared pin and the prefixes keep the whole family."""
+    if not keep:
         n = len(_PINNED)
         while _PINNED:
             _release(_PINNED.pop())
@@ -185,7 +177,11 @@ def unpersist_all(keep=None) -> int:
         with _KEY_LOCKS_GUARD:
             _KEY_LOCKS.clear()
         return n
-    kept = {k: df for k, df in _SHARED.items() if keep(k)}
+    kept = {
+        k: df
+        for k, df in _SHARED.items()
+        if isinstance(k, tuple) and str(k[0]).startswith(keep)
+    }
     kept_ids = {id(df) for df in kept.values()}
     n = 0
     survivors: list[DataFrame] = []

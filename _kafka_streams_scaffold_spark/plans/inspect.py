@@ -11,6 +11,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from .. import pinning
+
 
 def explain_str(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
@@ -49,7 +51,13 @@ def reads_pinned(tree_text: str) -> bool:
     createDataFrame renders the same leaf, so a query that stopped
     reading its pinned artifact could still pass. Plan-shape tests
     that assert on pins now run under ``pinning.full_lineage()`` so
-    pins render distinguishably."""
+    pins render distinguishably; called outside it, this raises
+    instead of answering False for every plan."""
+    if pinning._TRUNCATE:
+        raise RuntimeError(
+            "reads_pinned needs persist-backed pins: build and check the "
+            "plan inside pinning.full_lineage()"
+        )
     return "InMemoryTableScan" in tree_text
 
 

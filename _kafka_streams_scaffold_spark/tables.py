@@ -87,7 +87,10 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # no dead session (or its plans) alive
         if ref() is spark:
             return df
-        del _TABLE_MEMO[key]  # dead weakref: evict, don't accumulate
+        # dead weakref: evict, don't accumulate. pop, not del: curation
+        # builds plans from a thread pool, and a concurrent caller may
+        # already have evicted (or replaced) this key.
+        _TABLE_MEMO.pop(key, None)
     df = _load_table(spark, sf_dir, name)
     _TABLE_MEMO[key] = (weakref.ref(spark), df)
     return df
@@ -116,7 +119,7 @@ def df_token(df: DataFrame) -> int:
         ref, tok = hit
         if ref() is df:
             return tok
-        del _TOKEN_MEMO[key]  # dead weakref: evict, don't accumulate
+        _TOKEN_MEMO.pop(key, None)  # dead weakref; racy like table()
     tok = df.semanticHash()
     try:
         _TOKEN_MEMO[key] = (weakref.ref(df), tok)

@@ -111,50 +111,17 @@ def main() -> None:
     _calibration(spark)
     cal_first = _calibration(spark)
 
-    # Shared-pin families: consecutive composite queries that derive
-    # the same shared roots (the r6 verdict's triple-pay observation,
-    # generalized in round 11 from the dedup-audit family to the
-    # SimHash doc-graph and embedding/ANN families). Within a
-    # consecutive run of one family, release everything EXCEPT that
-    # family's shared_pin roots so later members read the first
-    # member's materializations instead of re-deriving them; the keys
-    # are cleared the moment the next query is an outsider, so solo
-    # measurements and every other query keep the honest
-    # per-query-release contract. Membership lists live next to the
-    # registry order they depend on (registry._*_CHAIN).
-    from _kafka_streams_scaffold_spark import registry as _reg
-
-    families: list[tuple[set, tuple]] = [
-        # audit chain + the second-tier pair/linkage consumers share
-        # the same dedup.* roots and run as one consecutive block
-        (
-            set(_reg._DEDUP_AUDIT_CHAIN) | set(_reg._DEDUP_PAIRS_CHAIN),
-            ("dedup.",),
-        ),
-        # the graph family starts on the window's trailing
-        # dedup_clusters / dup_pagerank slots and continues into the
-        # appended _GRAPH_CHAIN block
-        (
-            set(_reg._GRAPH_CHAIN) | {"dedup_clusters", "dup_pagerank"},
-            ("graph.",),
-        ),
-        (set(_reg._EMB_CHAIN) | {"ann_topk"}, ("sim.",)),
-        # curation keep-gates + trained BPE artifact
-        (set(_reg._CUR_CHAIN) | {"corpus_keep"}, ("cur.", "bpe.")),
-        # multimodal: phash chain + the window-adjacent codec pair
-        (
-            set(_reg._MM_CHAIN) | {"codec_moments", "codec_audit"},
-            ("mm.",),
-        ),
-    ]
-
-    def _family(n: str | None):
-        for fid, (members, prefixes) in enumerate(families):
-            if n in members:
-                return fid, prefixes
-        return None, ()
+    # Shared-pin families (registry.family / registry.PIN_PREFIXES):
+    # within a consecutive run of one family, release everything
+    # EXCEPT that family's shared_pin roots so later members read the
+    # first member's materializations instead of re-deriving them; the
+    # keys are cleared the moment the next query is an outsider, so
+    # solo measurements and every other query keep the honest
+    # per-query-release contract.
+    from _kafka_streams_scaffold_spark import registry
 
     names = list(qs)
+    fams = [registry.family(n) for n in names]
     timings: dict[str, float] = {}
     # Queries whose timing was taken with their family's shared pins
     # still WARM from the preceding family member — their numbers
@@ -166,9 +133,8 @@ def main() -> None:
     t_all = time.time()
     for i, name in enumerate(names):
         fn = qs[name]
-        prev = names[i - 1] if i > 0 else None
-        fid, prefixes = _family(name)
-        if fid is not None and _family(prev)[0] == fid:
+        fam = fams[i]
+        if fam is not None and i > 0 and fams[i - 1] == fam:
             warm_family.append(name)
         t0 = time.time()
         df = fn(spark, sf_dir)
@@ -181,12 +147,8 @@ def main() -> None:
         # storage pressure inverts that: measured 83s -> 68s over the
         # first 21 registry slots with per-query release (ivf_assign
         # alone: 9.1s pinned-accumulating vs 1.1s clean).
-        nxt = names[i + 1] if i + 1 < len(names) else None
-        if fid is not None and _family(nxt)[0] == fid:
-            pinning.unpersist_all(
-                keep=lambda k: isinstance(k, tuple)
-                and str(k[0]).startswith(prefixes)
-            )
+        if fam is not None and i + 1 < len(names) and fams[i + 1] == fam:
+            pinning.unpersist_all(keep=registry.PIN_PREFIXES[fam])
         else:
             pinning.unpersist_all()
     total = round(time.time() - t_all, 3)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from _kafka_streams_scaffold_spark import pinning
@@ -54,19 +55,31 @@ def test_unpersist_all_frees_checkpoint_blocks(spark):
 
 
 def test_persist_mode_still_available(spark):
-    prev = pinning.set_truncate(False)
-    try:
+    with pinning.full_lineage():
         pinned = pinning.pin(spark.range(0, 10).select("id"))
         plan = pinned._jdf.queryExecution().withCachedData().toString()
         assert "InMemoryRelation" in plan
-    finally:
-        pinning.unpersist_all()
-        pinning.set_truncate(prev)
+
+
+def test_reads_pinned_raises_outside_full_lineage(spark):
+    """Checkpoint pins render as the same leaf as any localCheckpoint,
+    so outside ``full_lineage()`` the check could only ever answer
+    False; it must say so loudly instead."""
+    from _kafka_streams_scaffold_spark.plans import inspect as pi
+
+    tree = pi.tree(pinning.pin(spark.range(0, 10).select("id")))
+    pinning.unpersist_all()
+    with pytest.raises(RuntimeError, match="full_lineage"):
+        pi.reads_pinned(tree)
+    with pinning.full_lineage():
+        assert pi.reads_pinned(
+            pi.tree(pinning.pin(spark.range(0, 10).select("id")))
+        )
 
 
 def test_shared_pin_keep_scope_survives_family_release(spark):
-    """bench.py's family keep: unpersist_all(keep=...) must retain the
-    kept shared pin's storage and drop everything else."""
+    """bench.py's family keep: unpersist_all(keep=prefixes) must retain
+    the kept shared pin's storage and drop everything else."""
     pinning.unpersist_all()
     a = pinning.shared_pin(
         ("sim.test_keep", 1), lambda: spark.range(0, 10).select("id")
@@ -74,9 +87,7 @@ def test_shared_pin_keep_scope_survives_family_release(spark):
     pinning.shared_pin(
         ("other.test_drop", 1), lambda: spark.range(0, 20).select("id")
     )
-    released = pinning.unpersist_all(
-        keep=lambda k: isinstance(k, tuple) and str(k[0]).startswith("sim.")
-    )
+    released = pinning.unpersist_all(keep=("sim.",))
     assert released == 1
     # the kept pin is still the memoized object and still readable
     again = pinning.shared_pin(

@@ -3,8 +3,7 @@
 The external correctness gate hash-checks only the FIRST 50 registered
 queries, so registration ORDER is part of the contract: each round the
 window must carry exactly the queries that still need a driver
-CORRECTNESS row (see registry._WINDOW_R11 and the module docstring's
-rotation history).
+CORRECTNESS row (see registry._WINDOW_R12 and the module docstring).
 """
 
 from __future__ import annotations
@@ -141,6 +140,30 @@ def test_material_is_entirely_in_the_window():
     assert R12_MATERIAL <= set(registry._WINDOW_R12)
 
 
+def _family_slots(fam: str) -> list[int]:
+    """Registry slots of every query registered with ``family=fam``."""
+    return [i for i, n in enumerate(registry.queries())
+            if registry.family(n) == fam]
+
+
+def _is_consecutive(pos: list[int]) -> bool:
+    return pos == list(range(pos[0], pos[0] + len(pos)))
+
+
+def test_each_pin_family_runs_as_one_consecutive_block():
+    """Keep-scope pin sharing (bench.py) holds a family's pins warm only
+    between CONSECUTIVE members, so every family declared with
+    ``register(..., family=...)`` must occupy one consecutive run of
+    slots — a member that drifts out pays a cold pin build per bench
+    run. The dedup family's deliberate split is checked on its own
+    below."""
+    declared = {registry.family(n) for n in registry.queries()} - {None}
+    assert declared == set(registry.PIN_PREFIXES)
+    for fam in declared - {"dedup"}:
+        pos = _family_slots(fam)
+        assert _is_consecutive(pos), f"{fam} family not consecutive: {pos}"
+
+
 def test_dedup_audit_chain_runs_as_two_consecutive_blocks():
     """Keep-scope pin sharing (bench.py dedup family) wants the dedup
     audit+pairs family back-to-back. Round 12 deliberately SPLITS it:
@@ -153,16 +176,13 @@ def test_dedup_audit_chain_runs_as_two_consecutive_blocks():
     pin BUILDER (dedup_tier_agreement's thread pool in the window;
     the constant-order head of the remainder outside)."""
     names = list(registry.queries())
-    family = registry._DEDUP_AUDIT_CHAIN + registry._DEDUP_PAIRS_CHAIN
-    window = set(registry._WINDOW_R12)
-    frag = sorted(names.index(n) for n in family if n in window)
-    rem = sorted(names.index(n) for n in family if n not in window)
-    assert frag == list(range(frag[0], frag[0] + len(frag))), (
-        "in-window dedup fragment not consecutive"
-    )
-    assert rem == list(range(rem[0], rem[0] + len(rem))), (
-        "post-window dedup remainder not consecutive"
-    )
+    n_window = len(registry._WINDOW_R12)
+    pos = _family_slots("dedup")
+    frag = [p for p in pos if p < n_window]
+    rem = [p for p in pos if p >= n_window]
+    assert (len(frag), len(rem)) == (8, 14)
+    assert _is_consecutive(frag), "in-window dedup fragment not consecutive"
+    assert _is_consecutive(rem), "post-window dedup remainder not consecutive"
     assert names[frag[0]] == "dedup_tier_agreement"
 
 
@@ -174,30 +194,26 @@ def test_graph_chain_is_one_consecutive_window_block():
     block. dedup_clusters runs first (it builds edges/both/CC for
     the family)."""
     names = list(registry.queries())
-    members = ["dedup_clusters", "dup_pagerank", *registry._GRAPH_CHAIN]
-    pos = [names.index(n) for n in members]
-    assert pos == list(range(pos[0], pos[0] + len(pos))), (
-        "graph family not consecutive in registry order"
-    )
-    assert members[0] == "dedup_clusters"
-    assert set(members) <= set(registry._WINDOW_R12)
+    pos = _family_slots("graph")
+    assert len(pos) == 9
+    assert _is_consecutive(pos), "graph family not consecutive in registry order"
+    assert names[pos[0]] == "dedup_clusters"
+    assert {names[p] for p in pos} <= set(registry._WINDOW_R12)
 
 
 def test_emb_chain_is_consecutive_across_the_window_boundary():
     """Round-12: the embedding/ANN family straddles the window
     boundary — a 10-member certified fragment ends the window and
-    _apply_window appends the rest of _EMB_CHAIN immediately after,
-    so the family still runs back-to-back and the sim.* pins build
-    once. The window's last slot and the first post-window slot must
-    both be family members."""
+    _apply_window appends the rest of the sim family immediately
+    after, so the family still runs back-to-back and the sim.* pins
+    build once. The window's last slot and the first post-window slot
+    must both be family members."""
     names = list(registry.queries())
-    pos = sorted(names.index(n) for n in registry._EMB_CHAIN)
-    assert pos == list(range(pos[0], pos[0] + len(pos))), (
-        "embedding family not consecutive in registry order"
-    )
-    w = registry._WINDOW_R12
-    assert w[-1] in registry._EMB_CHAIN
-    assert names[len(w)] in registry._EMB_CHAIN
+    pos = _family_slots("sim")
+    assert _is_consecutive(pos), "embedding family not consecutive in registry order"
+    n_window = len(registry._WINDOW_R12)
+    assert registry.family(names[n_window - 1]) == "sim"
+    assert registry.family(names[n_window]) == "sim"
 
 
 def test_cur_family_window_block_builds_keep_before_keep_full():

@@ -433,10 +433,7 @@ def test_unpersist_all_keep_scope(spark):
         i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
     }
     assert len(cached_ids) >= 2
-    n = pinning.unpersist_all(
-        keep=lambda k: isinstance(k, tuple)
-        and str(k[0]).startswith("dedup.")
-    )
+    n = pinning.unpersist_all(keep=("dedup.",))
     assert n == 1
     # the kept pin is still memoized under its key AND still readable
     again = pinning.shared_pin(("dedup.fake_root", 1), lambda: 1 / 0)

@@ -33,3 +33,34 @@ def test_df_token_matches_semantic_hash(spark, sf_dir):
     syn = spark.range(5).selectExpr("id as doc_id", "'x' as text")
     assert tables.df_token(syn) == syn.semanticHash()
     assert tables.df_token(syn) != tables.df_token(df)
+
+
+def _racing_dead_ref(memo: dict, key):
+    """A dead weakref whose call evicts ``key`` first — exactly what a
+    concurrent thread's eviction does between the lookup and the
+    eviction of the caller that found the entry dead."""
+
+    def ref():
+        memo.pop(key, None)
+        return None
+
+    return ref
+
+
+def test_dead_entry_eviction_tolerates_a_concurrent_evict(spark, sf_dir):
+    key = (id(spark), sf_dir, "documents")
+    saved = tables._TABLE_MEMO.get(key)
+    tables._TABLE_MEMO[key] = (_racing_dead_ref(tables._TABLE_MEMO, key), None)
+    try:
+        df = tables.table(spark, sf_dir, "documents")
+        assert df is not None and tables.table(spark, sf_dir, "documents") is df
+    finally:
+        if saved is not None:
+            tables._TABLE_MEMO[key] = saved
+
+    syn = spark.range(3).selectExpr("id as doc_id")
+    tables._TOKEN_MEMO[id(syn)] = (
+        _racing_dead_ref(tables._TOKEN_MEMO, id(syn)),
+        -1,
+    )
+    assert tables.df_token(syn) == syn.semanticHash()

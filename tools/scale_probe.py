@@ -1342,7 +1342,7 @@ def main() -> None:
         "additionally ran `tools/check_oracle.py /root/testdata/sf0.1 "
         "...`:",
         "",
-        "- the 50 `_WINDOW_R08` names: **50/50 bit-exact at sf0.1** "
+        "- the 50 r08-window names: **50/50 bit-exact at sf0.1** "
         "(10x the gate's data size).",
         "- all 37 post-freeze `R09_MATERIAL` names (the round-9 "
         "window candidates): **37/37 bit-exact at sf0.1**.",
