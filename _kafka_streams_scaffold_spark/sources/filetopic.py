@@ -108,7 +108,9 @@ def read_topic_batch(spark: SparkSession, path: str) -> DataFrame:
 
 def read_topic_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming-consume — the shim analog of ``kafka.read_stream``;
-    availableNow triggers drain it like a bounded replay."""
+    availableNow triggers drain it like a bounded replay. Each
+    micro-batch's new files are stat-ed on the driver, with no listing
+    job (``session.build_session``)."""
     return spark.readStream.schema(TOPIC_SCHEMA).parquet(path)
 
 
