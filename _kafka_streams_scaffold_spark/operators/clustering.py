@@ -38,10 +38,13 @@ scalable formulation.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..pinning import parallel, pin
 from ..pinning import shared_pin as _shared_pin
 from .dedup import simhash_pairs_query
 
@@ -236,10 +239,14 @@ def connected_components(
     )
     # Eager: ``pairs`` feeds both the initial labels and the contracted
     # edge table below; a lazy checkpoint would re-run the union-find
-    # once per consumer subtree inside round 1's job.
-    pairs = eligible.mapInPandas(
-        _contract_partition, schema=f"doc_id {idt}, label {idt}"
-    ).localCheckpoint(eager=True)
+    # once per consumer subtree inside round 1's job. A pin, so the
+    # open pin scope releases it (the lazy per-round checkpoints below
+    # are left to Spark's ContextCleaner).
+    pairs = pin(
+        eligible.mapInPandas(
+            _contract_partition, schema=f"doc_id {idt}, label {idt}"
+        )
+    )
     # ACTIVE-SET restriction (unchanged contract): isolated nodes never
     # change labels, so only edge endpoints participate; they rejoin as
     # singleton clusters in the final left join. Every eligible
@@ -576,13 +583,12 @@ def cluster_keep_list_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared executors (the dedup_tier_agreement scheduling pattern),
     # so wall time is max(CC, PR), not the sum — shared_pin's per-key
     # locks make the concurrent builds race-free.
-    from concurrent.futures import ThreadPoolExecutor
-
     _doc_both(spark, sf_dir)  # build the shared prefix once, not per thread
-    with ThreadPoolExecutor(2) as ex:
-        f_cc = ex.submit(_doc_cc, spark, sf_dir)
-        f_pr = ex.submit(_doc_pagerank, spark, sf_dir)
-        cc, pr = f_cc.result(), f_pr.result()
+    cc, pr = parallel(
+        spark,
+        partial(_doc_cc, spark, sf_dir),
+        partial(_doc_pagerank, spark, sf_dir),
+    )
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("pagerank").desc(), F.col("doc_id")
     )

@@ -51,9 +51,7 @@ def corpus_keep_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back-to-back inside one action. Values unchanged; measured
     # ~2.3s -> ~1.5s warm solo.
     def build() -> DataFrame:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from ..pinning import pin as _pin
+        from ..pinning import parallel, pin as _pin
 
         def _canonical() -> DataFrame:
             fps = fingerprint_query(spark, sf_dir)
@@ -81,10 +79,7 @@ def corpus_keep_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             _canonical,
             lambda: _pin(contamination_query(spark, sf_dir)),
         )
-        with ThreadPoolExecutor(len(tasks)) as ex:
-            quality, lang, canonical, contam = (
-                f.result() for f in [ex.submit(t) for t in tasks]
-            )
+        quality, lang, canonical, contam = parallel(spark, *tasks)
 
         keep = (
             (F.col("quality_score") >= MIN_QUALITY)
@@ -188,9 +183,7 @@ def corpus_keep_full_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # id-width pinned frames. Values unchanged (pins only move where
     # subtrees materialize); measured 4.8s -> ~2.9s warm-keep solo.
     def build() -> DataFrame:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from ..pinning import pin as _pin
+        from ..pinning import parallel, pin as _pin
         from .dedup import doc_ngram_novelty_query
         from .lm import unigram_lm_score_query
         from .substring_dedup import substring_dup_docs_query
@@ -213,10 +206,7 @@ def corpus_keep_full_query(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
         )
-        with ThreadPoolExecutor(len(tasks)) as ex:
-            base, spans, nov, lm_score = (
-                f.result() for f in [ex.submit(t) for t in tasks]
-            )
+        base, spans, nov, lm_score = parallel(spark, *tasks)
         keep_full = (
             F.col("keep")
             & (F.col("n_shared_windows") <= MAX_SHARED_WINDOWS)

@@ -25,10 +25,13 @@ oracle-checked, not just sampled.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..pinning import parallel as _parallel
 from ..pinning import pin as _pin
 from ..pinning import shared_pin as _shared_pin
 from .textops import fingerprint_expr
@@ -180,9 +183,9 @@ SHINGLE_DF_CAP = 50
 # the minhash signature/candidate stages. Before round 4 each tier
 # re-derived (re-scanned, re-tokenized, re-shingled) its own copy —
 # dedup_tier_agreement paid the shingle scan 4x. These memoized pins
-# make the derivation once per input per scope; tools/check_oracle.py,
-# bench.py and the driver clear the scope between queries
-# (pinning.unpersist_all), so solo-query measurements stay honest.
+# make the derivation once per input per pin scope; the harnesses
+# release the scope after each query (bench.py: after each family
+# block), so solo-query measurements stay honest.
 
 
 def _shingle_table(docs: DataFrame) -> DataFrame:
@@ -1170,7 +1173,7 @@ def _tier_pairs(spark: SparkSession, sf_dir: str, tier: str) -> DataFrame:
     the per-detector pair stage-table every audit would read.
 
     CONCURRENCY CONTRACT: dedup_tier_agreement and
-    blocking_recall_audit call this from a ThreadPoolExecutor so the
+    blocking_recall_audit call this from ``pinning.parallel`` so the
     detectors' eager shared-pin materializations overlap as parallel
     Spark jobs (measured 22.4s -> 9.9s for the recall audit). That
     overlap is safe ONLY because every shared intermediate goes
@@ -1182,7 +1185,7 @@ def _tier_pairs(spark: SparkSession, sf_dir: str, tier: str) -> DataFrame:
     "already cached" warning and reads the winner's cache — but it
     DOUBLE-COMPUTES the materialization job. A refactor that swaps a
     shared_pin for a plain pin here must either keep the builds
-    disjoint per thread or drop the executor."""
+    disjoint per thread or build them serially."""
     docs = tables.table(spark, sf_dir, "documents")
 
     def build() -> DataFrame:
@@ -1253,7 +1256,6 @@ def dedup_tier_agreement_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction costs more than the shingle-free chains' overlap
     # buys. See _tier_pairs' concurrency contract.)
     _shingle_table(docs)
-    from concurrent.futures import ThreadPoolExecutor
 
     def _tagged(i_t: tuple[int, str]) -> DataFrame:
         i, t = i_t
@@ -1261,8 +1263,9 @@ def dedup_tier_agreement_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a", "doc_b", F.lit(1 << i).alias("bit")
         )
 
-    with ThreadPoolExecutor(len(_TIERS)) as ex:
-        parts = list(ex.map(_tagged, enumerate(_TIERS)))
+    parts = _parallel(
+        spark, *(partial(_tagged, it) for it in enumerate(_TIERS))
+    )
     tagged = parts[0]
     for part in parts[1:]:
         tagged = tagged.unionAll(part)
@@ -2026,8 +2029,6 @@ def blocking_recall_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (signatures -> candidates, capped index, simhash sigs) run as
     # overlapping Spark jobs instead of a serial chain — measured
     # 22.4s -> 9.9s solo at sf0.1 for this audit.
-    from concurrent.futures import ThreadPoolExecutor
-
     bits = dict(_BLOCKING_STRATEGIES, truth=1)
     # three of the six strategies ARE detector tiers — read the shared
     # tier-pair pins so the audit chain builds each pair set once
@@ -2044,8 +2045,7 @@ def blocking_recall_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a", "doc_b", F.lit(bits[name]).alias("bit")
         )
 
-    with ThreadPoolExecutor(len(gens)) as ex:
-        parts = list(ex.map(_tagged, gens))
+    parts = _parallel(spark, *(partial(_tagged, name) for name in gens))
     tagged = parts[0]
     for part in parts[1:]:
         tagged = tagged.unionAll(part)
@@ -2410,7 +2410,6 @@ def dedup_token_savings_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = tables.table(spark, sf_dir, "documents")
     _shingle_table(docs)  # warm the shared root pin once
-    from concurrent.futures import ThreadPoolExecutor
 
     def _dropped(i_t: tuple[int, str]) -> DataFrame:
         i, t = i_t
@@ -2421,8 +2420,9 @@ def dedup_token_savings_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.lit(1 << i).alias("bit"))
         )
 
-    with ThreadPoolExecutor(len(_TIERS)) as ex:
-        parts = list(ex.map(_dropped, enumerate(_TIERS)))
+    parts = _parallel(
+        spark, *(partial(_dropped, it) for it in enumerate(_TIERS))
+    )
     tagged = parts[0]
     for part in parts[1:]:
         tagged = tagged.unionAll(part)
@@ -2947,6 +2947,34 @@ NOVELTY_DECAY_CURVE_ORACLE = _novelty_decay_oracle()
 # --------------------------------------------------------------------------
 
 
+def _tier_union(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, tier): the four detectors' pair sets, each row
+    labelled with its tier. The pair sets build concurrently under
+    _tier_pairs' contract."""
+
+    def _tagged(t: str) -> DataFrame:
+        return _tier_pairs(spark, sf_dir, t).select(
+            "doc_a", "doc_b", F.lit(t).alias("tier")
+        )
+
+    parts = _parallel(spark, *(partial(_tagged, t) for t in _TIERS))
+    union = parts[0]
+    for p in parts[1:]:
+        union = union.unionByName(p)
+    return union
+
+
+def _tier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, x_<tier>...): the 0/1 flag matrix over the union
+    pair universe — one row per pair, one column per detector."""
+    return _tier_union(spark, sf_dir).groupBy("doc_a", "doc_b").agg(
+        *[
+            F.max((F.col("tier") == t).cast("int")).alias(f"x_{t}")
+            for t in _TIERS
+        ]
+    )
+
+
 def detector_cochran_q_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_univ, t_simhash, t_minhash, t_ngram, t_edit, sum_r, sum_r2,
     q): Cochran's Q test across ALL FOUR near-dup detectors at once —
@@ -2969,25 +2997,7 @@ def detector_cochran_q_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins as dedup_tier_agreement (built concurrently under
     _tier_pairs' contract); the flag matrix and moments are
     id-pair-width rollups."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _tagged(it):
-        i, t = it
-        return _tier_pairs(spark, sf_dir, t).select(
-            "doc_a", "doc_b", F.lit(t).alias("tier")
-        )
-
-    with ThreadPoolExecutor(len(_TIERS)) as ex:
-        parts = list(ex.map(_tagged, enumerate(_TIERS)))
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    flags = union.groupBy("doc_a", "doc_b").agg(
-        *[
-            F.max((F.col("tier") == t).cast("int")).alias(f"x_{t}")
-            for t in _TIERS
-        ]
-    )
+    flags = _tier_flags(spark, sf_dir)
     r = sum(F.col(f"x_{t}") for t in _TIERS)
     k = len(_TIERS)
     agg = flags.agg(
@@ -3104,25 +3114,7 @@ def fleiss_kappa_detectors_query(
     Scale: rides the SAME shared per-tier pair pins as the rest of
     the dedup-audit chain (_tier_pairs contract); everything after
     the flag matrix is a single-row reduction."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _tagged(it):
-        i, t = it
-        return _tier_pairs(spark, sf_dir, t).select(
-            "doc_a", "doc_b", F.lit(t).alias("tier")
-        )
-
-    with ThreadPoolExecutor(len(_TIERS)) as ex:
-        parts = list(ex.map(_tagged, enumerate(_TIERS)))
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    flags = union.groupBy("doc_a", "doc_b").agg(
-        *[
-            F.max((F.col("tier") == t).cast("int")).alias(f"x_{t}")
-            for t in _TIERS
-        ]
-    )
+    flags = _tier_flags(spark, sf_dir)
     r = sum(F.col(f"x_{t}") for t in _TIERS)
     k = len(_TIERS)
     agg = flags.agg(
@@ -3259,23 +3251,11 @@ def kendall_w_detectors_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract); degrees are id-width rollups; midranks live on
     per-tier (distinct degree)-sized spines — bounded by the max dup
     degree, not the corpus."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import Window as W
 
     docs_t = tables.table(spark, sf_dir, "documents")
     docs = docs_t.select("doc_id")
-
-    def _tagged(t):
-        return _tier_pairs(spark, sf_dir, t).select(
-            "doc_a", "doc_b", F.lit(t).alias("tier")
-        )
-
-    with ThreadPoolExecutor(len(_TIERS)) as ex:
-        parts = list(ex.map(_tagged, _TIERS))
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
+    union = _tier_union(spark, sf_dir)
     deg = (
         union.select("tier", F.col("doc_a").alias("doc_id"))
         .unionByName(union.select("tier", F.col("doc_b").alias("doc_id")))

@@ -53,7 +53,7 @@ def reads_pinned(tree_text: str) -> bool:
     that assert on pins now run under ``pinning.full_lineage()`` so
     pins render distinguishably; called outside it, this raises
     instead of answering False for every plan."""
-    if pinning._TRUNCATE:
+    if pinning.truncating():
         raise RuntimeError(
             "reads_pinned needs persist-backed pins: build and check the "
             "plan inside pinning.full_lineage()"

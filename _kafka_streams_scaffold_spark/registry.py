@@ -20,11 +20,12 @@ slots 0-49 and every other query follows in registration order, so the
 
 SHARED-PIN FAMILIES are declared in the same place. A family is a run
 of consecutive slots whose queries read the same ``pinning.shared_pin``
-roots; each member says so with ``register(..., family=...)`` and
-``PIN_PREFIXES`` maps the family to its pin-key prefixes. bench.py
-keeps exactly those prefixes warm between consecutive members of one
-family, so a member that leaves its block silently goes back to a
-cold pin build (tests/test_registry_window.py checks the blocks).
+roots; each member says so with ``register(..., family=...)``. bench.py
+opens one outer ``pinning.scope()`` around each consecutive run of one
+family's members, so every shared pin a member builds stays warm for
+the rest of the block, and a member that leaves its block silently
+goes back to a cold pin build (tests/test_registry_window.py checks
+the blocks).
 
 - r12 window (``_WINDOW_R12`` below): CORRECTNESS_r11 went 50/50
   green, so the window is the 13 R12_MATERIAL round-11 post-freeze
@@ -70,18 +71,6 @@ _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
 _FAMILY: dict[str, str] = {}
 
-# Shared-pin family -> the pin-key prefixes its members share. ``codec``
-# reads the same mm.payload encode pin as ``mm`` but runs in a
-# different block, so it is a family of its own.
-PIN_PREFIXES: dict[str, tuple[str, ...]] = {
-    "mm": ("mm.",),
-    "cur": ("cur.", "bpe."),
-    "graph": ("graph.",),
-    "dedup": ("dedup.",),
-    "sim": ("sim.",),
-    "codec": ("mm.",),
-}
-
 
 def register(
     name: str,
@@ -93,9 +82,10 @@ def register(
 ) -> None:
     """Register a query (and optionally its DuckDB oracle) under ``name``.
 
-    ``family`` names the shared-pin family (a ``PIN_PREFIXES`` key) the
-    query belongs to; its consecutive neighbours in the same family
-    read its shared pins warm.
+    ``family`` names the shared-pin family the query belongs to; its
+    consecutive neighbours in the same family read its shared pins
+    warm. (``codec`` reads the same mm.payload encode pin as ``mm`` but
+    runs in a different block, so it is a family of its own.)
 
     Duplicate names RAISE: last-write-wins silently shadowed the
     long-certified ``small_qty_revenue`` in round 8 (two different Q17
@@ -108,8 +98,6 @@ def register(
             f"duplicate query registration {name!r}; pass replace=True "
             "for a deliberate re-registration"
         )
-    if family is not None and family not in PIN_PREFIXES:
-        raise ValueError(f"unknown shared-pin family {family!r} for {name!r}")
     _QUERIES[name] = fn
     if oracle is not None:
         _ORACLES[name] = oracle

@@ -219,10 +219,15 @@ class RegistryQueryService:
         return sorted(self._queries)
 
     def run(self, name: str) -> dict:
+        from .. import pinning
+
         if name not in self._queries:
             raise KeyError(name)
-        df = self._queries[name](self._spark, self._sf_dir)
-        rows = df.limit(self._max_rows + 1).collect()
+        # One pin scope per request: the query's pins are released when
+        # its rows are collected, and never another request's.
+        with pinning.scope():
+            df = self._queries[name](self._spark, self._sf_dir)
+            rows = df.limit(self._max_rows + 1).collect()
         truncated = len(rows) > self._max_rows
 
         def jsonable(v):

@@ -10,6 +10,7 @@ measurement).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
@@ -111,17 +112,19 @@ def main() -> None:
     _calibration(spark)
     cal_first = _calibration(spark)
 
-    # Shared-pin families (registry.family / registry.PIN_PREFIXES):
-    # within a consecutive run of one family, release everything
-    # EXCEPT that family's shared_pin roots so later members read the
-    # first member's materializations instead of re-deriving them; the
-    # keys are cleared the moment the next query is an outsider, so
-    # solo measurements and every other query keep the honest
-    # per-query-release contract.
+    # Shared-pin families (registry.family): each consecutive run of
+    # one family's members runs under one outer pin scope, so later
+    # members read the shared pins earlier members built instead of
+    # re-deriving them; every other query is a block of its own. Each
+    # query also runs in its own inner scope, which frees its plain
+    # pins as soon as it finishes. Round 2 kept pins across queries for
+    # cache-manager plan sharing; at 112 queries with pinned stage
+    # tables in most heavy operators the accumulated storage pressure
+    # inverted that: measured 83s -> 68s over the first 21 registry
+    # slots with per-query release (ivf_assign alone: 9.1s
+    # pinned-accumulating vs 1.1s clean).
     from _kafka_streams_scaffold_spark import registry
 
-    names = list(qs)
-    fams = [registry.family(n) for n in names]
     timings: dict[str, float] = {}
     # Queries whose timing was taken with their family's shared pins
     # still WARM from the preceding family member — their numbers
@@ -131,26 +134,16 @@ def main() -> None:
     # comparisons don't misread the cheaper warm numbers as speedups.
     warm_family: list[str] = []
     t_all = time.time()
-    for i, name in enumerate(names):
-        fn = qs[name]
-        fam = fams[i]
-        if fam is not None and i > 0 and fams[i - 1] == fam:
-            warm_family.append(name)
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.time() - t0, 3)
-        # Release pinned intermediates BETWEEN queries. Round 2 kept
-        # them for cache-manager plan sharing within the dedup family
-        # (~15s swing at 72 queries / few pins); at 112 queries with
-        # pinned stage tables in most heavy operators the accumulated
-        # storage pressure inverts that: measured 83s -> 68s over the
-        # first 21 registry slots with per-query release (ivf_assign
-        # alone: 9.1s pinned-accumulating vs 1.1s clean).
-        if fam is not None and i + 1 < len(names) and fams[i + 1] == fam:
-            pinning.unpersist_all(keep=registry.PIN_PREFIXES[fam])
-        else:
-            pinning.unpersist_all()
+    for _, block in itertools.groupby(qs, lambda n: registry.family(n) or n):
+        with pinning.scope():
+            for j, name in enumerate(block):
+                if j:
+                    warm_family.append(name)
+                with pinning.scope():
+                    t0 = time.time()
+                    df = qs[name](spark, sf_dir)
+                    df.write.format("noop").mode("overwrite").save()
+                    timings[name] = round(time.time() - t0, 3)
     total = round(time.time() - t_all, 3)
 
     cal_last = _calibration(spark)

@@ -329,3 +329,59 @@ def test_server_500_json_and_nonfinite_floats(spark):
         assert body["rows"][0] == {"a": None, "b": None, "c": 1.5}
     finally:
         server.stop()
+
+
+def test_concurrent_registry_queries_release_their_pins(spark, sf_dir):
+    """Two concurrent ``/query/{name}`` requests on the threaded server
+    each return the rows of a serial run, and neither leaves a pin
+    behind: each request's pins live in its own scope, so one
+    request's release cannot free a pin the other is still reading."""
+    import threading
+
+    from _kafka_streams_scaffold_spark import pinning
+    from _kafka_streams_scaffold_spark.streaming.http_serving import (
+        InteractiveQueryServer,
+        RegistryQueryService,
+    )
+
+    def stored() -> set[int]:
+        jsc = spark.sparkContext._jsc.sc()
+        return {i.id() for i in jsc.getRDDStorageInfo()}
+
+    def canon(body: dict) -> list[str]:
+        assert body["truncated"] is False
+        return sorted(json.dumps(r, sort_keys=True) for r in body["rows"])
+
+    names = ("corpus_keep", "blocking_recall_audit")
+    pinning.unpersist_all()
+    before = stored()
+    svc = RegistryQueryService(spark, sf_dir, max_rows=10**6)
+    serial = {n: canon(svc.run(n)) for n in names}
+
+    server = InteractiveQueryServer()
+    svc.bind(server)
+    port = server.start()
+    got: dict[str, object] = {}
+
+    def request(name: str) -> None:
+        try:
+            status, body = _get(port, f"/query/{name}")
+            got[name] = (status, json.loads(body) if body else None)
+        except Exception as e:  # surfaced by the assertion below
+            got[name] = e
+
+    try:
+        threads = [threading.Thread(target=request, args=(n,)) for n in names]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(600)
+    finally:
+        server.stop()
+    for n in names:
+        status, body = got[n]
+        assert status == 200, (n, got[n])
+        assert canon(body) == serial[n], n
+    leaked = stored() - before
+    assert not leaked, f"{len(leaked)} RDDs still stored after the requests"
+    assert pinning.unpersist_all() == 0  # the root scope holds no pins

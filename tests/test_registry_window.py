@@ -151,21 +151,22 @@ def _is_consecutive(pos: list[int]) -> bool:
 
 
 def test_each_pin_family_runs_as_one_consecutive_block():
-    """Keep-scope pin sharing (bench.py) holds a family's pins warm only
+    """bench.py's outer pin scope holds a family's pins warm only
     between CONSECUTIVE members, so every family declared with
     ``register(..., family=...)`` must occupy one consecutive run of
     slots — a member that drifts out pays a cold pin build per bench
     run. The dedup family's deliberate split is checked on its own
     below."""
     declared = {registry.family(n) for n in registry.queries()} - {None}
-    assert declared == set(registry.PIN_PREFIXES)
+    for fam in declared:  # a misspelt family name declares a family of 1
+        assert len(_family_slots(fam)) >= 2, f"{fam} has one member"
     for fam in declared - {"dedup"}:
         pos = _family_slots(fam)
         assert _is_consecutive(pos), f"{fam} family not consecutive: {pos}"
 
 
 def test_dedup_audit_chain_runs_as_two_consecutive_blocks():
-    """Keep-scope pin sharing (bench.py dedup family) wants the dedup
+    """Outer-scope pin sharing (bench.py dedup family) wants the dedup
     audit+pairs family back-to-back. Round 12 deliberately SPLITS it:
     an 8-member certified fragment inside the window (both audits,
     the two R12_MATERIAL chain members, linkage and the three newly

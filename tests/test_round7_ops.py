@@ -418,30 +418,48 @@ def test_session_concurrency_bounds(spark):
 
 
 def test_unpersist_all_keep_scope(spark):
+    """A bare unpersist_all() releases only the root scope: the pins an
+    open scope owns (a family block's, a concurrent request's) survive
+    it, stay memoized and readable, and go when that scope exits."""
+    import time
+
     from _kafka_streams_scaffold_spark import pinning
 
+    def stored() -> set[int]:
+        return {
+            i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        }
+
     pinning.unpersist_all()
-    kept = pinning.shared_pin(
-        ("dedup.fake_root", 1), lambda: spark.range(5).toDF("id")
-    )
     dropped = pinning.shared_pin(
         ("other.thing", 2), lambda: spark.range(3).toDF("id")
     )
-    # both pins are materialized (round-11: checkpoint-backed, so the
-    # marker is cached RDD blocks, not CacheManager storageLevel)
-    cached_ids = {
-        i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    }
-    assert len(cached_ids) >= 2
-    n = pinning.unpersist_all(keep=("dedup.",))
-    assert n == 1
-    # the kept pin is still memoized under its key AND still readable
-    again = pinning.shared_pin(("dedup.fake_root", 1), lambda: 1 / 0)
-    assert again is kept
-    assert kept.count() == 5
-    # a full release then clears everything, including the kept one
-    assert pinning.unpersist_all() == 1
-    assert not pinning._SHARED and not pinning._PINNED
+    with pinning.scope():
+        kept = pinning.shared_pin(
+            ("dedup.fake_root", 1), lambda: spark.range(5).toDF("id")
+        )
+        # both pins are materialized (checkpoint-backed, so the marker
+        # is cached RDD blocks, not CacheManager storageLevel)
+        assert len(stored()) >= 2
+        assert pinning.unpersist_all() == 1
+        # the scope's pin is still memoized under its key AND readable
+        again = pinning.shared_pin(("dedup.fake_root", 1), lambda: 1 / 0)
+        assert again is kept
+        assert kept.count() == 5
+        # the root's pin was released and forgotten
+        rebuilt = pinning.shared_pin(
+            ("other.thing", 2), lambda: spark.range(3).toDF("id")
+        )
+        assert rebuilt is not dropped
+    # the scope's exit freed its pins; nothing leaked into the root
+    kept_id = kept._jdf.queryExecution().analyzed().rdd().id()
+    for _ in range(50):  # unpersist is asynchronous
+        if kept_id not in stored():
+            break
+        time.sleep(0.1)
+    assert kept_id not in stored()
+    assert pinning.unpersist_all() == 0
+    assert not pinning._ROOT.pinned and not pinning._ROOT.shared
 
 
 # ---- round-7 late additions (r08 window material) --------------------------
