@@ -18,13 +18,14 @@ the dependency.
 
 The driver loop materializes one count() per round (the convergence
 check). That is a deliberate, bounded driver crossing: one scalar per
-round, never data. Each round's labels are ``localCheckpoint``-ed:
-iterative plans otherwise grow their lineage every round and
-re-analysis dominates (measured 187s -> 14s at sf0.01 for the same
-seven rounds). localCheckpoint truncates the plan but stores blocks
-without replication — on a real cluster swap in a reliable
-``checkpoint(dir)`` for fault tolerance at the cost of one HDFS/S3
-write per round.
+round, never data. Each round's labels are cut with
+``pinning.checkpoint``: iterative plans otherwise grow their lineage
+every round and re-analysis dominates (measured 187s -> 14s at sf0.01
+for the same seven rounds). The cut is a lazy localCheckpoint owned by
+the caller's pin scope, so the scope frees every round's blocks on
+exit. localCheckpoint truncates the plan but stores blocks without
+replication — on a real cluster swap in a reliable ``checkpoint(dir)``
+for fault tolerance at the cost of one HDFS/S3 write per round.
 
 The DuckDB oracle expresses the same fixpoint as a recursive CTE
 (reachability + min over the reach set), so even this iterative
@@ -44,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
-from ..pinning import parallel, pin
+from ..pinning import checkpoint, parallel, pin
 from ..pinning import shared_pin as _shared_pin
 from .dedup import simhash_pairs_query
 
@@ -53,15 +54,9 @@ MAX_ROUNDS = 50  # safety bound; real convergence is diameter-bounded
 
 def undirected(edges: DataFrame) -> DataFrame:
     """Both directions of a once-per-pair edge list, hash-partitioned
-    + sorted on ``src`` and (lazily) checkpointed: the shared input
-    shape of both iterative engines. Build it ONCE when composing
-    connected_components + pagerank over the same graph
-    (cluster_keep_list) — the 2|E|-row union/repartition then
-    materializes a single time instead of per engine."""
-    return _undirected_plan(edges).localCheckpoint(eager=False)
-
-
-def _undirected_plan(edges: DataFrame) -> DataFrame:
+    + sorted on ``src``: the shared input shape of both iterative
+    engines. A plan; callers that read it more than once store it
+    (``checkpoint``, or the ``graph.both`` shared pin)."""
     return (
         edges.union(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -104,12 +99,9 @@ def _doc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both directions, partitioned on src — the iterative engines'
     input shape, materialized once per scope."""
-    # _undirected_plan, not undirected(): the pin itself checkpoints,
-    # so the lazy checkpoint inside undirected() would double-store
-    # the 2|E| blocks.
     return _shared_pin(
         ("graph.both", _dtok(spark, sf_dir)),
-        lambda: _undirected_plan(_doc_edges(spark, sf_dir)),
+        lambda: undirected(_doc_edges(spark, sf_dir)),
     )
 
 
@@ -195,7 +187,7 @@ def connected_components(
     """``nodes(doc_id)``, ``edges(src, dst)`` undirected (pass each
     pair once; both directions are derived here). Returns
     ``(doc_id, cluster_id)`` with cluster_id = min doc_id reachable."""
-    # eager=False everywhere in this loop: the convergence count (or
+    # Every ``checkpoint`` in this loop is lazy: the convergence count (or
     # first consumer) materializes each checkpoint, so every round
     # runs ONE job instead of checkpoint-job + count-job (measured
     # 6.2s -> 5.5s for 7 rounds at sf0.1).
@@ -209,7 +201,7 @@ def connected_components(
     # 2M-row graph on local[32]); the win is proportional to
     # |E|/|V| x rounds on a real graph.
     if both is None:
-        both = undirected(edges)
+        both = checkpoint(undirected(edges))
     idt = both.schema["src"].dataType.simpleString()
     # Round-12: LOCAL STAR CONTRACTION before the distributed loop.
     # Measured (sf0.1, per-round phase timings; plans/r12/
@@ -239,9 +231,7 @@ def connected_components(
     )
     # Eager: ``pairs`` feeds both the initial labels and the contracted
     # edge table below; a lazy checkpoint would re-run the union-find
-    # once per consumer subtree inside round 1's job. A pin, so the
-    # open pin scope releases it (the lazy per-round checkpoints below
-    # are left to Spark's ContextCleaner).
+    # once per consumer subtree inside round 1's job.
     pairs = pin(
         eligible.mapInPandas(
             _contract_partition, schema=f"doc_id {idt}, label {idt}"
@@ -254,19 +244,19 @@ def connected_components(
     # min — already a valid partial propagation state, so the loop
     # starts from the contracted labels instead of the identity
     # labeling.
-    labels = (
-        pairs.groupBy("doc_id")
-        .agg(F.min("label").alias("label"))
-        .localCheckpoint(eager=False)
+    labels = checkpoint(
+        pairs.groupBy("doc_id").agg(F.min("label").alias("label"))
     )
     # The cross-partition stitch graph: node -> partition-local root.
     # Self-loops (roots) carry no connectivity; drop them before the
     # undirected expansion.
-    cboth = _undirected_plan(
-        pairs.filter(F.col("doc_id") != F.col("label")).select(
-            F.col("doc_id").alias("src"), F.col("label").alias("dst")
+    cboth = checkpoint(
+        undirected(
+            pairs.filter(F.col("doc_id") != F.col("label")).select(
+                F.col("doc_id").alias("src"), F.col("label").alias("dst")
+            )
         )
-    ).localCheckpoint(eager=False)
+    )
     for _ in range(MAX_ROUNDS):
         neighbor_min = (
             cboth.join(labels, cboth.src == labels.doc_id)
@@ -293,9 +283,8 @@ def connected_components(
         parent = labels.select(
             F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
         )
-        step = (
-            hooked.join(parent, hooked.label == parent.p_id, "left")
-            .select(
+        step = checkpoint(
+            hooked.join(parent, hooked.label == parent.p_id, "left").select(
                 "doc_id",
                 F.least(
                     F.col("label"), F.coalesce("p_label", "label")
@@ -305,7 +294,6 @@ def connected_components(
                     | (F.coalesce("p_label", "label") < F.col("label"))
                 ).alias("moved"),
             )
-            .localCheckpoint(eager=False)
         )
         labels = step.select("doc_id", "label")
         if step.filter("moved").count() == 0:
@@ -442,7 +430,7 @@ def pagerank(
     as label_centroids. Scale: each iteration is one equi-join on the
     edge list plus a partial-aggregatable sum, O(|E|) per round with
     a FIXED round count (no convergence scalar to the driver);
-    localCheckpoint truncates lineage exactly as in
+    ``checkpoint`` truncates lineage exactly as in
     connected_components.
     """
     # The edge list feeds every iteration and the iterations chain
@@ -459,7 +447,7 @@ def pagerank(
     # loop cannot occur here). Measured 4.1s -> 2.8s first-touch /
     # 2.5 -> 2.4s warm at sf0.1, bit-identical output.
     if both is None:
-        both = undirected(edges)
+        both = checkpoint(undirected(edges))
     deg = both.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # Degree is static across iterations, so it joins onto the edge
     # table ONCE, outside the loop — one join per round instead of
@@ -471,7 +459,7 @@ def pagerank(
     # frame, never the O(|E|) edge rows. sf0.1 is wall-clock parity
     # (noise-dominated); the shuffle-volume drop is |E|/|V| per round
     # on a real graph.
-    wedges = both.join(deg, "src").localCheckpoint(eager=False)
+    wedges = checkpoint(both.join(deg, "src"))
     ranks = nodes.select("doc_id", F.lit(1.0).alias("rank"))
     for _ in range(PR_ITERS):
         contrib = (
@@ -484,9 +472,8 @@ def pagerank(
             )
         )
         sums = contrib.groupBy("doc_id").agg(F.sum("fp").alias("sfp"))
-        ranks = (
-            nodes.join(sums, "doc_id", "left")
-            .select(
+        ranks = checkpoint(
+            nodes.join(sums, "doc_id", "left").select(
                 "doc_id",
                 (
                     F.lit(PR_BASE)
@@ -497,7 +484,6 @@ def pagerank(
                     )
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=False)
         )
     return ranks.select("doc_id", F.col("rank").alias("pagerank"))
 
@@ -760,7 +746,7 @@ def kcore_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|E_surviving|) scan + |V|-width broadcast and rounds are
     bounded by the peel depth (typically 2-4 on near-dup graphs).
     The loop runs to FIXPOINT (true k-core) with the same
-    one-scalar-per-round convergence check and ``localCheckpoint``
+    one-scalar-per-round convergence check and ``checkpoint``
     regime as connected_components — and at fixpoint the last degree
     frame IS the answer (nothing fell below K), so the result
     re-derives nothing. On a graph whose core outgrows a broadcast
@@ -778,10 +764,10 @@ def kcore_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = both.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     prev_n = None
     for _ in range(MAX_ROUNDS):
-        surv = (
-            deg.filter(F.col("degree") >= KCORE_K)
-            .select(F.col("src").alias("doc_id"))
-            .localCheckpoint(eager=False)
+        surv = checkpoint(
+            deg.filter(F.col("degree") >= KCORE_K).select(
+                F.col("src").alias("doc_id")
+            )
         )
         n = surv.count()  # one scalar/round, as connected_components
         if n == prev_n:

@@ -147,11 +147,6 @@ def pca_top_component_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of squares) with the norm recomputed per element exactly as the
     # old transform did), so the output is bit-identical
     # (oracle-checked).
-    # _pin, not a bare localCheckpoint (r11 ADVICE): the checkpointed
-    # one-row matrix must be TRACKED so its pin scope releases its
-    # blocks between queries instead of leaving them to ContextCleaner
-    # GC. Same materialization semantics (pin() IS an eager
-    # localCheckpoint in the default mode).
     one = _pin(
         rows.agg(
             F.expr(

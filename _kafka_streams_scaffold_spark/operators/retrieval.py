@@ -662,12 +662,14 @@ def facility_location_coreset_query(
         upd = sims.filter(F.col("c_id") == c).select(
             "p_id", F.col("s").alias("s_new")
         )
-        cov = cov.join(upd, "p_id", "left").select(
-            "p_id",
-            F.greatest(
-                F.col("cov"), F.coalesce(F.col("s_new"), F.lit(-_FL_FP))
-            ).alias("cov"),
-        ).localCheckpoint(eager=True)
+        cov = _pin(
+            cov.join(upd, "p_id", "left").select(
+                "p_id",
+                F.greatest(
+                    F.col("cov"), F.coalesce(F.col("s_new"), F.lit(-_FL_FP))
+                ).alias("cov"),
+            )
+        )
     return spark.createDataFrame(
         picked, "sel_round int, vec_id bigint, coverage_fp bigint"
     )

@@ -90,8 +90,6 @@ def power_iteration_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONCE per round, then the normalize lambda references s as a
     # value.
     one = gram.agg(F.expr("collect_list(struct(p, q, g))").alias("gm"))
-    # _pin, not a bare localCheckpoint (r11 ADVICE): tracked so its
-    # pin scope releases the one-row matrix between queries.
     one = _pin(
         one.select(
             F.expr(

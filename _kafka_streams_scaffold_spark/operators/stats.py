@@ -817,7 +817,7 @@ def ewma_user_value_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-user window sort (partition-parallel on user_id),
     frame capped at EWMA_WINDOW rows — state per row is constant, the
     shuffle carries (user, ts, id, value) only. The streaming twin is
-    a transformWithState keyed store holding the same EWMA_WINDOW
+    an applyInPandasWithState keyed store holding the same EWMA_WINDOW
     values."""
     ev = tables.table(spark, sf_dir, "events")
     from pyspark.sql import Window

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pinning import pin
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -64,9 +66,10 @@ def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(clean rows without the corrupt column, quarantined raw rows).
     Spark refuses a query whose scan references ONLY the corrupt
     column (QUERY_ONLY_CORRUPT_RECORD_COLUMN), so the parsed frame is
-    cached first — which a two-consumer split wants anyway: one parse
-    feeds both outputs instead of re-reading the files per side."""
-    df = df.cache()
+    pinned first — which a two-consumer split wants anyway: one parse
+    feeds both outputs instead of re-reading the files per side. The
+    pin belongs to the caller's open pin scope, which frees it."""
+    df = pin(df)
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw_record")

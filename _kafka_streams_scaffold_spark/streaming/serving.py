@@ -67,16 +67,6 @@ class MemoryStore:
         with self._lock:
             return self._data.get(tuple(key))
 
-    def range_prefix(self, prefix: str, key_col: str | None = None) -> list[dict]:
-        """Prefix range scan — Q2 (``PurchasesService.java:100-123``)."""
-        kc = key_col or self.key_cols[0]
-        with self._lock:
-            rows = list(self._data.values())
-        return sorted(
-            (r for r in rows if str(r[kc]).startswith(prefix)),
-            key=lambda r: str(r[kc]),
-        )
-
     def range_scan(
         self, lo: str, hi: str, key_col: str | None = None
     ) -> list[dict]:
@@ -199,20 +189,15 @@ class ParquetChangelogStore:
         import shutil
         import tempfile
 
-        df = spark.read.option("mergeSchema", "true").parquet(self.path)
-        df = self._with_deleted(df)
-        max_batch = df.agg(F.max("_batch_id")).collect()[0][0]
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            F.col("_batch_id").desc(), F.col("_deleted").desc()
-        )
-        # Tombstones are physically dropped here (their deferred cost)
-        # — valid because compaction rewrites the WHOLE store, so no
-        # older live row can resurface afterwards.
+        raw = spark.read.parquet(self.path)
+        max_batch = raw.agg(F.max("_batch_id")).collect()[0][0]
+        # The latest-wins read IS the snapshot: tombstones are physically
+        # dropped here (their deferred cost) — valid because compaction
+        # rewrites the WHOLE store, so no older live row can resurface.
         snapshot = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (~F.col("_deleted")))
-            .drop("_rn")
+            self.read(spark)
             .withColumn("_batch_id", F.lit(max_batch))
+            .withColumn("_deleted", F.lit(False))
         )
         staged = tempfile.mkdtemp(prefix="changelog-compact-")
         snapshot.write.mode("overwrite").parquet(staged)

@@ -59,55 +59,6 @@ def stateful_count_and_total(keyed: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# transformWithState (Spark 4 arbitrary-state API)
-# --------------------------------------------------------------------------
-
-try:  # Spark >= 4.0; the runner additionally needs google.protobuf
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class CountTotalProcessor(StatefulProcessor):
-        """The same CountAndTotal accumulator on the newer
-        ``transformWithState`` API: typed ValueState, explicit
-        lifecycle, timer support if eviction were needed. Requires the
-        RocksDB state store provider (enforced by Spark)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("count_total", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                cnt, total = self._state.get()
-            else:
-                cnt, total = 0, 0.0
-            for pdf in rows:
-                cnt += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((cnt, total))
-            yield pd.DataFrame({"key": [key[0]], "cnt": [cnt], "total": [total]})
-
-        def close(self) -> None:
-            pass
-
-    def stateful_count_and_total_tws(keyed: DataFrame) -> DataFrame:
-        """transformWithState variant of ``stateful_count_and_total``
-        (same contract). Prefer this on Spark 4+: finer-grained state
-        types (value/list/map), timers, and TTL come with the API."""
-        return keyed.groupBy("key").transformWithStateInPandas(
-            statefulProcessor=CountTotalProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-
-except ImportError:  # pragma: no cover - older Spark or missing protobuf
-    # transformWithState's Python runner imports protobuf at startup;
-    # environments without it (like this container) fall back to the
-    # applyInPandasWithState path above — same semantics, older API.
-    stateful_count_and_total_tws = None
-
-
-# --------------------------------------------------------------------------
 # Streaming EWMA (bounded value window per key)
 # --------------------------------------------------------------------------
 

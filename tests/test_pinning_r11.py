@@ -212,3 +212,56 @@ def test_parallel_jobs_inherit_the_callers_job_group(spark, sf_dir):
     ungrouped = set(tracker.getJobIdsForGroup(None)) - before
     assert in_group
     assert not ungrouped, f"{len(ungrouped)} jobs escaped the job group"
+
+
+_LOOP_QUERIES = (
+    "kcore",
+    "dedup_clusters",
+    "dup_pagerank",
+    "embedding_dup_clusters",
+    "cluster_keep_list",
+    "facility_location_coreset",
+    "linkage_entities",
+)
+
+
+@pytest.mark.parametrize("name", _LOOP_QUERIES)
+def test_scope_frees_the_iterative_loops_rounds(spark, sf_dir, name):
+    """The CC, PageRank, k-core and facility-location loops cut their
+    rounds through ``pinning``, so a query's scope frees every RDD the
+    query stored — rounds included — with rows equal to a root-scope
+    run."""
+    from _kafka_streams_scaffold_spark import registry
+
+    fn = registry.queries()[name]
+    pinning.unpersist_all()
+    expect = sorted(map(tuple, fn(spark, sf_dir).collect()), key=repr)
+    pinning.unpersist_all()
+    before = _stored(spark)
+    with pinning.scope():
+        got = sorted(map(tuple, fn(spark, sf_dir).collect()), key=repr)
+    assert got == expect
+    for _ in range(50):
+        left = _stored(spark) - before
+        if not left:
+            break
+        time.sleep(0.1)
+    assert not left, f"{len(left)} RDDs still stored after the scope"
+
+
+def test_operators_and_sources_store_nothing_outside_pinning():
+    """Only ``pinning`` decides what the operators and sources store:
+    no bare checkpoint, cache or persist call in their text."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(pinning.__file__).parent
+    bare = re.compile(r"localCheckpoint\(|\.cache\(\)|\.persist\(")
+    hits = [
+        f"{path.relative_to(pkg)}:{i}"
+        for sub in ("operators", "sources")
+        for path in sorted((pkg / sub).rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if bare.search(line)
+    ]
+    assert not hits, hits

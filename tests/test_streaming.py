@@ -561,42 +561,6 @@ def test_rocksdb_state_store_provider(spark, tmp_path):
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
-def test_transform_with_state_matches_builtin(spark, tmp_path):
-    if stateful.stateful_count_and_total_tws is None:
-        return  # Spark < 4 or protobuf unavailable (this container)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        evs = [
-            {"key": "k1", "value": 2.0},
-            {"key": "k1", "value": 3.0},
-            {"key": "k2", "value": 7.0},
-        ]
-        schema = T.StructType(
-            [T.StructField("key", T.StringType()),
-             T.StructField("value", T.DoubleType())]
-        )
-        src = str(tmp_path / "src")
-        _write_json(src, "a.json", evs[:1])
-        _write_json(src, "b.json", evs[1:])
-        agg = stateful.stateful_count_and_total_tws(
-            _file_stream(spark, src, schema)
-        )
-        store = serving.MemoryStore(["key"])
-        q = pipeline.run_update_into_store(agg, store, str(tmp_path / "ckpt"))
-        q.awaitTermination(120)
-        got = {k[0]: (v["cnt"], v["total"]) for k, v in store.snapshot().items()}
-        assert got == {"k1": (2, 5.0), "k2": (1, 7.0)}
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_batch_replay_maps_latest_to_earliest():
     """A bounded replay with the streaming default ("latest") would
     read latest..latest = nothing; read_batch must widen it."""

@@ -12,10 +12,13 @@ from __future__ import annotations
 
 import decimal
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# The package of the checkout this file sits in: perfbench loads it by
+# path from each exported checkout, which must not import another one.
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _canon(v):
