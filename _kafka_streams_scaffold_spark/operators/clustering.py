@@ -74,7 +74,7 @@ def undirected(edges: DataFrame) -> DataFrame:
 # derive from the same near-dup pair list — and four of them from the
 # same CC labels / PageRank vector. Each root is a ``graph.*`` shared
 # pin (the dedup ``_tier_pairs`` hoist pattern): within one scope —
-# a composite query, or the bench's consecutive graph-family block —
+# a composite query, or the bench's graph-family block —
 # the banded self-join, the 2|E| undirected table, the CC fixpoint
 # and the PR iteration each run ONCE instead of once per consumer.
 # Keys embed the documents scan's semantic hash, so distinct sf_dirs
@@ -562,7 +562,7 @@ def cluster_keep_list_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     # Round-11: both engines' outputs are graph.* shared pins — in a
-    # family-warm scope (the bench's consecutive graph block) they are
+    # family-warm scope (the bench's graph block) they are
     # already materialized and this query is one join + one window.
     # Cold, the two builds are independent given the shared edge pin;
     # submitting them from two threads overlaps their jobs on the

@@ -1368,7 +1368,7 @@ def prefix_filter_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the ``_tier_pairs`` pattern extended to the non-tier blocking
     strategies): blocking_recall_audit derives this exact pair set as
     one of its six strategies, so within one scope — the audit's own
-    composition, or the bench's consecutive dedup block — the prefix
+    composition, or the bench's dedup family block — the prefix
     join + verify run ONCE instead of once per consumer. Pair sets are
     id-pair-width, so the pin is cheap; values are identical (the pin
     only moves WHERE the subtree materializes). Dial constants join

@@ -94,7 +94,7 @@ def ann_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-11: the exact reference list is a ``sim.ann_topk`` shared
     pin — ten registered queries consume it (every recall/fusion/MRR
     audit measures against this table), and within the bench's
-    consecutive embedding family it materializes once instead of
+    embedding family block it materializes once instead of
     once per auditor (the ``_tier_pairs`` hoist pattern from r10)."""
 
     def build() -> DataFrame:

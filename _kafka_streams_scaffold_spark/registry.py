@@ -18,14 +18,13 @@ Run order is stated once: ``_apply_window`` puts the window's names in
 slots 0-49 and every other query follows in registration order, so the
 ``register()`` calls in ``_ensure_loaded`` appear in slot order.
 
-SHARED-PIN FAMILIES are declared in the same place. A family is a run
-of consecutive slots whose queries read the same ``pinning.shared_pin``
-roots; each member says so with ``register(..., family=...)``. bench.py
-opens one outer ``pinning.scope()`` around each consecutive run of one
-family's members, so every shared pin a member builds stays warm for
-the rest of the block, and a member that leaves its block silently
-goes back to a cold pin build (tests/test_registry_window.py checks
-the blocks).
+SHARED-PIN FAMILIES are declared in the same place: each query that
+reads a family's ``pinning.shared_pin`` roots says so with
+``register(..., family=...)``. ``blocks()`` turns the declaration into
+run order: all of a family's members run together at its first
+member's slot, so bench.py opens one outer ``pinning.scope()`` per
+family and every shared pin a member builds is warm for the rest of
+the family. Slot order plays no part in pin reuse.
 
 - r12 window (``_WINDOW_R12`` below): CORRECTNESS_r11 went 50/50
   green, so the window is the 13 R12_MATERIAL round-11 post-freeze
@@ -34,14 +33,7 @@ the blocks).
   driver-certified: the three iteration folds, the kNN/PQ ladders,
   the curation/BPE and multimodal pins) and this round's own touches
   (CC contraction -> the whole doc-graph family + linkage; the
-  shared-pinned strategy pair sets + both audits). Families sit in
-  the window as consecutive blocks; the embedding fragment is LAST
-  and the rest of the ``sim`` family is registered first after the
-  window, so the family runs across the boundary. The ``dedup``
-  family is deliberately SPLIT: an 8-slot certified fragment
-  in-window, the other 14 members as their own consecutive block
-  after the window — one extra cold pin build per bench run instead
-  of 22 window slots.
+  shared-pinned strategy pair sets + both audits).
 
 NEXT ROTATION (round 13): no post-freeze additions exist this round
 (optimization rounds add no queries — R13_MATERIAL is empty), so the
@@ -82,10 +74,9 @@ def register(
 ) -> None:
     """Register a query (and optionally its DuckDB oracle) under ``name``.
 
-    ``family`` names the shared-pin family the query belongs to; its
-    consecutive neighbours in the same family read its shared pins
-    warm. (``codec`` reads the same mm.payload encode pin as ``mm`` but
-    runs in a different block, so it is a family of its own.)
+    ``family`` names the shared-pin family the query belongs to: the
+    family's members run as one block (``blocks()``) and read each
+    other's shared pins warm.
 
     Duplicate names RAISE: last-write-wins silently shadowed the
     long-certified ``small_qty_revenue`` in round 8 (two different Q17
@@ -115,16 +106,24 @@ def oracle_sql() -> dict[str, str]:
     return dict(_ORACLES)
 
 
-def family(name: str) -> str | None:
-    """The shared-pin family ``name`` was registered with, or None."""
+def blocks() -> list[list[str]]:
+    """Run order as blocks of query names: each family's members sit
+    together at its first member's slot, in registration order; every
+    other query is a block of its own. ``queries()`` order is
+    unchanged."""
     _ensure_loaded()
-    return _FAMILY.get(name)
+    out: dict[tuple[str, str], list[str]] = {}
+    for name in _QUERIES:
+        fam = _FAMILY.get(name)
+        key = ("family", fam) if fam else ("query", name)
+        out.setdefault(key, []).append(name)
+    return list(out.values())
 
 
 _LOADED = False
 
 # Correctness window for round 12 (slots 0..49) — see the module
-# docstring. Families sit in it as consecutive blocks.
+# docstring.
 _WINDOW_R12 = [
     # --- never-certified backlog: the 13 R12_MATERIAL round-11
     # post-freeze additions (nonparametric/association ladder + the
@@ -146,16 +145,12 @@ _WINDOW_R12 = [
     "markov_stationary",
     "power_iteration",
     "pca_top_component",
-    # --- multimodal family, whole (r11 mm.phash shared pins; the
-    # family is 3 slots so it certifies as one consecutive block)
+    # --- multimodal family, whole (r11 mm.phash shared pins)
     "payload_phash",
     "phash_dup_pairs",
     "phash_threshold_sweep",
     # --- curation/BPE family, whole + corpus_keep (r11 cur./bpe.
-    # pins + the round-12 thread-pooled gate builds; corpus_keep
-    # directly before corpus_keep_full also fixes the r11 layout
-    # where corpus_keep built cur.keep in a far-away slot and the
-    # chain rebuilt it)
+    # pins + the round-12 thread-pooled gate builds)
     "corpus_keep",
     "corpus_keep_full",
     "bpe_train",
@@ -176,11 +171,7 @@ _WINDOW_R12 = [
     "degree_assortativity",
     # --- dedup audit/pairs fragment: the two R12_MATERIAL chain
     # members, the two round-12-touched audits, linkage (CC engine
-    # change) and the three newly shared-pinned strategy pair sets.
-    # The fragment runs consecutively here; the remaining 14 family
-    # members run as their own consecutive block after the window
-    # (one extra cold pin build per bench run — the price of
-    # certifying these eight without spending 22 slots)
+    # change) and the three newly shared-pinned strategy pair sets
     "dedup_tier_agreement",
     "blocking_recall_audit",
     "fleiss_kappa_detectors",
@@ -189,13 +180,9 @@ _WINDOW_R12 = [
     "prefix_filter_pairs",
     "sorted_neighborhood_pairs",
     "winnowing_pairs",
-    # --- embedding/ANN fragment, LAST on purpose: the rest of the
-    # sim family is registered first after the window, so the family
-    # runs back-to-back across the boundary and the sim.* pins build
-    # once (the r11 dedup_clusters/dup_pagerank straddle pattern,
-    # moved to the costlier family). Members chosen per the
-    # r11 verdict: the kNN ladder, the PQ ladder, and the near-dup/CC
-    # tier — r11 plan changes without driver rows
+    # --- embedding/ANN fragment, members chosen per the r11 verdict:
+    # the kNN ladder, the PQ ladder, and the near-dup/CC tier — r11
+    # plan changes without driver rows
     "knn_graph",
     "knn_triangles",
     "knn_lof_outliers",
@@ -788,7 +775,12 @@ def _ensure_loaded() -> None:
         dedup.boilerplate_ngrams_query,
         dedup.BOILERPLATE_NGRAMS_ORACLE,
     )
-    register("ann_topk", similarity.ann_topk_query, similarity.ANN_TOPK_ORACLE)
+    register(
+        "ann_topk",
+        similarity.ann_topk_query,
+        similarity.ANN_TOPK_ORACLE,
+        family="sim",
+    )
     register(
         "label_centroids",
         similarity.label_centroids_query,
@@ -1464,7 +1456,9 @@ def _ensure_loaded() -> None:
     register(
         "join_key_skew", skew.join_key_skew_query, skew.JOIN_KEY_SKEW_ORACLE
     )
-    register("int8_ann", quantize.int8_ann_query, quantize.INT8_ANN_ORACLE)
+    register(
+        "int8_ann", quantize.int8_ann_query, quantize.INT8_ANN_ORACLE, family="sim"
+    )
     register(
         "cluster_cohesion",
         similarity.cluster_cohesion_query,
@@ -1479,6 +1473,7 @@ def _ensure_loaded() -> None:
         "winnowing_fingerprints",
         dedup.winnowing_fingerprints_query,
         dedup.WINNOWING_FINGERPRINTS_ORACLE,
+        family="dedup",
     )
     register(
         "epoch_interleave",
@@ -1544,7 +1539,10 @@ def _ensure_loaded() -> None:
         quantize.BINARY_SIGNATURES_ORACLE,
     )
     register(
-        "binary_ann", quantize.binary_ann_query, quantize.BINARY_ANN_ORACLE
+        "binary_ann",
+        quantize.binary_ann_query,
+        quantize.BINARY_ANN_ORACLE,
+        family="sim",
     )
     register(
         "kneser_ney_bigram",

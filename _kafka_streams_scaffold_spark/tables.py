@@ -54,31 +54,36 @@ EMBED_DIM = 64
 # tens of seconds of redundant driver work per run. The memo caches
 # the LAZY DataFrame (an unresolved plan, no data): every query still
 # computes from the parquet inputs; only the plan construction is
-# shared, keyed per live session + sf_dir + table so distinct
-# sessions or data dirs never collide. Tests that monkeypatch
-# ``tables.table`` replace the whole function and never hit the memo.
+# shared, keyed per live session + sf_dir + table + the parquet
+# path's ``os.stat`` (mtime_ns, size), so distinct sessions or data
+# dirs never collide and a table rewritten in place gets a fresh plan
+# on its next load. Tests that monkeypatch ``tables.table`` replace
+# the whole function and never hit the memo.
 #
-# IMMUTABLE-DATA-DIR ASSUMPTION (r11 ADVICE): the memoized relation
-# freezes the parquet file listing and schema for the session's
-# lifetime, so data REWRITTEN under the same sf_dir mid-session would
-# be served from the stale plan. Every harness here treats sf_dirs as
-# immutable (the driver's testdata is generated once); a harness that
-# regenerates data in place must call ``invalidate_table_memo()``
-# (or use a fresh sf_dir / session).
+# Shared-pin tokens do NOT follow a rewrite: the new scan's
+# ``semanticHash()`` equals the old one, so a shared pin built before
+# the rewrite, in a scope that is still open, keeps serving the old
+# rows until that scope exits.
 _TABLE_MEMO: dict[tuple, tuple] = {}
 
 
-def invalidate_table_memo() -> None:
-    """Drop every memoized table plan and token (for harnesses that
-    rewrite data under an existing sf_dir mid-session)."""
-    _TABLE_MEMO.clear()
-    _TOKEN_MEMO.clear()
+def _stat_key(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None  # not a local file: Spark reads (or rejects) it
+    return st.st_mtime_ns, st.st_size
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    key = (id(spark), sf_dir, name)
+    key = (
+        id(spark),
+        sf_dir,
+        name,
+        _stat_key(os.path.join(sf_dir, f"{name}.parquet")),
+    )
     hit = _TABLE_MEMO.get(key)
     if hit is not None:
         ref, df = hit

@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
-``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``.
+``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``,
+with the per-query median and p90 next to ``value``.
 
 Each query is executed with a count()-style action so the full plan runs
 but rows stay on the executors (no driver collect bottleneck in the
@@ -10,16 +11,16 @@ measurement).
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from _kafka_streams_scaffold_spark import pinning, session  # noqa: E402
+from _kafka_streams_scaffold_spark import pinning, registry, session  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 
 
@@ -68,42 +69,6 @@ def main() -> None:
     spark.range(cores).repartition(cores).mapInPandas(
         lambda it: it, schema="id long"
     ).write.format("noop").mode("overwrite").save()
-    # Warm the embedding fold-expression codegen (the 64-term
-    # zip_with/aggregate lambdas janino-compile once per plan shape):
-    # the clustering/similarity families now run FIRST in registry
-    # order, and without this they'd absorb the compile cost that the
-    # classic families used to hide.
-    from _kafka_streams_scaffold_spark.operators import similarity as _sim
-
-    _sim.ann_topk_query(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # ...and the quantizer-assign shape (dist2 + argmin packing):
-    # ivf_near_dup / ivf_ann / dyn_ivf_assign all compile it, and the
-    # first of them otherwise pays ~1.5s of janino, not plan time.
-    _sim.ivf_assign_query(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # ...and the SimHash band-join shape: the r04 window opens with the
-    # graph family (kcore at slot 4), whose first simhash derivation
-    # otherwise pays ~3s of janino that slot-5+ queries used to absorb
-    # (measured: kcore 6.1s in-bench vs 2.5s warm solo).
-    from _kafka_streams_scaffold_spark.operators import dedup as _dd
-
-    _dd.simhash_pairs_query(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # ...and the LM-model shapes (tokenize -> bigram explode ->
-    # continuation/marginal rollups): the r06 window OPENS with the
-    # KN/bigram family, and without this the slot-0 query absorbs
-    # ~6s of janino first-touch that is compile cost, not plan cost
-    # (kneser_ney_bigram measured 7.9s in the r5 driver bench vs
-    # 1.35s warm solo).
-    from _kafka_streams_scaffold_spark.operators import lm as _lm
-
-    _lm.kneser_ney_bigram_query(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
     pinning.unpersist_all()
 
     # Warm the calibration plan shape once (its janino first-touch is
@@ -112,29 +77,22 @@ def main() -> None:
     _calibration(spark)
     cal_first = _calibration(spark)
 
-    # Shared-pin families (registry.family): each consecutive run of
-    # one family's members runs under one outer pin scope, so later
-    # members read the shared pins earlier members built instead of
-    # re-deriving them; every other query is a block of its own. Each
-    # query also runs in its own inner scope, which frees its plain
-    # pins as soon as it finishes. Round 2 kept pins across queries for
-    # cache-manager plan sharing; at 112 queries with pinned stage
-    # tables in most heavy operators the accumulated storage pressure
-    # inverted that: measured 83s -> 68s over the first 21 registry
-    # slots with per-query release (ivf_assign alone: 9.1s
-    # pinned-accumulating vs 1.1s clean).
-    from _kafka_streams_scaffold_spark import registry
-
+    # Shared-pin families (registry.blocks): all of a family's members
+    # run under one outer pin scope, at the first member's slot, so
+    # later members read the shared pins earlier members built instead
+    # of re-deriving them; every other query is a block of its own.
+    # Each query also runs in its own inner scope, which frees its
+    # plain pins as soon as it finishes.
     timings: dict[str, float] = {}
     # Queries whose timing was taken with their family's shared pins
-    # still WARM from the preceding family member — their numbers
+    # still WARM from an earlier family member — their numbers
     # measure warm shared-pin reads, not cold builds, so they are NOT
     # comparable to solo/check_oracle timings or to cold rounds'
     # measurements. Tagged in the payload so round-over-round
     # comparisons don't misread the cheaper warm numbers as speedups.
     warm_family: list[str] = []
     t_all = time.time()
-    for _, block in itertools.groupby(qs, lambda n: registry.family(n) or n):
+    for block in registry.blocks():
         with pinning.scope():
             for j, name in enumerate(block):
                 if j:
@@ -151,6 +109,10 @@ def main() -> None:
     payload = {
         "metric": "total_query_wall_seconds",
         "value": total,
+        "query_median_sec": round(statistics.median(timings.values()), 3),
+        "query_p90_sec": round(
+            statistics.quantiles(timings.values(), n=10, method="inclusive")[-1], 3
+        ),
         "unit": "sec",
         "queries": timings,
         "warm_family": warm_family,

@@ -1,10 +1,11 @@
 from __future__ import annotations
 
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from _kafka_streams_scaffold_spark import session  # noqa: E402
 

@@ -10,6 +10,8 @@ embeddings-backed oracle check diverge (round-5 ADVICE low finding).
 
 from __future__ import annotations
 
+import pathlib
+
 import pyspark.sql.types as T
 
 from _kafka_streams_scaffold_spark import tables
@@ -76,6 +78,7 @@ def test_duckdb_view_mirror_matches_quarantine(spark, tmp_path):
 def test_check_oracle_embeds_the_mirror_predicate():
     """Guard the tool itself: if someone reverts the view to raw
     parquet, this fails before the divergence can bite."""
-    src = open("/root/repo/tools/check_oracle.py").read()
+    tool = pathlib.Path(__file__).resolve().parents[1] / "tools" / "check_oracle.py"
+    src = tool.read_text()
     assert "len(embedding)" in src
     assert "embedding IS NOT NULL" in src

@@ -13,6 +13,8 @@ import pathlib
 
 from _kafka_streams_scaffold_spark import registry
 
+_REPO = pathlib.Path(__file__).resolve().parents[1]
+
 # Green rounds available when the r11 window was frozen.
 _PRIOR_ROUNDS = (
     "r01", "r02", "r03", "r04", "r05", "r06", "r07", "r08", "r09", "r10",
@@ -119,7 +121,7 @@ R12_MATERIAL: set[str] = {
 def _covered() -> set[str]:
     covered: set[str] = set()
     for rnd in _PRIOR_ROUNDS:
-        p = pathlib.Path(f"/root/repo/CORRECTNESS_{rnd}.json")
+        p = _REPO / f"CORRECTNESS_{rnd}.json"
         if p.exists():
             for name, row in json.loads(p.read_text()).items():
                 if row.get("hash_match"):
@@ -140,91 +142,27 @@ def test_material_is_entirely_in_the_window():
     assert R12_MATERIAL <= set(registry._WINDOW_R12)
 
 
-def _family_slots(fam: str) -> list[int]:
-    """Registry slots of every query registered with ``family=fam``."""
-    return [i for i, n in enumerate(registry.queries())
-            if registry.family(n) == fam]
-
-
-def _is_consecutive(pos: list[int]) -> bool:
-    return pos == list(range(pos[0], pos[0] + len(pos)))
-
-
-def test_each_pin_family_runs_as_one_consecutive_block():
-    """bench.py's outer pin scope holds a family's pins warm only
-    between CONSECUTIVE members, so every family declared with
-    ``register(..., family=...)`` must occupy one consecutive run of
-    slots — a member that drifts out pays a cold pin build per bench
-    run. The dedup family's deliberate split is checked on its own
-    below."""
-    declared = {registry.family(n) for n in registry.queries()} - {None}
-    for fam in declared:  # a misspelt family name declares a family of 1
-        assert len(_family_slots(fam)) >= 2, f"{fam} has one member"
-    for fam in declared - {"dedup"}:
-        pos = _family_slots(fam)
-        assert _is_consecutive(pos), f"{fam} family not consecutive: {pos}"
-
-
-def test_dedup_audit_chain_runs_as_two_consecutive_blocks():
-    """Outer-scope pin sharing (bench.py dedup family) wants the dedup
-    audit+pairs family back-to-back. Round 12 deliberately SPLITS it:
-    an 8-member certified fragment inside the window (both audits,
-    the two R12_MATERIAL chain members, linkage and the three newly
-    shared-pinned strategy pair sets) and the remaining 14 members as
-    their own consecutive block after the window. Each block must be
-    internally consecutive — a third fragment would mean a third cold
-    pin build per bench run — and each block's first member must be a
-    pin BUILDER (dedup_tier_agreement's thread pool in the window;
-    the constant-order head of the remainder outside)."""
+def test_blocks_run_each_family_together_at_its_first_slot():
+    """bench.py runs ``registry.blocks()`` in order, one outer pin scope
+    per block, so a family shares its pins wherever its members sit in
+    the slot order."""
     names = list(registry.queries())
-    n_window = len(registry._WINDOW_R12)
-    pos = _family_slots("dedup")
-    frag = [p for p in pos if p < n_window]
-    rem = [p for p in pos if p >= n_window]
-    assert (len(frag), len(rem)) == (8, 14)
-    assert _is_consecutive(frag), "in-window dedup fragment not consecutive"
-    assert _is_consecutive(rem), "post-window dedup remainder not consecutive"
-    assert names[frag[0]] == "dedup_tier_agreement"
-
-
-def test_graph_chain_is_one_consecutive_window_block():
-    """Round-12: the whole SimHash doc-graph family (9 members) sits
-    inside the window as one consecutive block — every member's
-    shared roots changed with the CC contraction, so all nine need a
-    driver row, and adjacency keeps the graph.* pins warm across the
-    block. dedup_clusters runs first (it builds edges/both/CC for
-    the family)."""
-    names = list(registry.queries())
-    pos = _family_slots("graph")
-    assert len(pos) == 9
-    assert _is_consecutive(pos), "graph family not consecutive in registry order"
-    assert names[pos[0]] == "dedup_clusters"
-    assert {names[p] for p in pos} <= set(registry._WINDOW_R12)
-
-
-def test_emb_chain_is_consecutive_across_the_window_boundary():
-    """Round-12: the embedding/ANN family straddles the window
-    boundary — a 10-member certified fragment ends the window and
-    _apply_window appends the rest of the sim family immediately
-    after, so the family still runs back-to-back and the sim.* pins
-    build once. The window's last slot and the first post-window slot
-    must both be family members."""
-    names = list(registry.queries())
-    pos = _family_slots("sim")
-    assert _is_consecutive(pos), "embedding family not consecutive in registry order"
-    n_window = len(registry._WINDOW_R12)
-    assert registry.family(names[n_window - 1]) == "sim"
-    assert registry.family(names[n_window]) == "sim"
-
-
-def test_cur_family_window_block_builds_keep_before_keep_full():
-    """corpus_keep directly before corpus_keep_full in the window:
-    the r11 layout had corpus_keep build cur.keep in a distant slot
-    and the chain rebuilt it; adjacency makes the family read one
-    materialization."""
-    w = registry._WINDOW_R12
-    i = w.index("corpus_keep")
-    assert w[i + 1] == "corpus_keep_full"
+    blocks = registry.blocks()
+    flat = [n for b in blocks for n in b]
+    assert sorted(flat) == sorted(names)
+    for b in blocks:
+        fam = registry._FAMILY.get(b[0])
+        if fam is None:
+            assert len(b) == 1, b
+            continue
+        members = [n for n in names if registry._FAMILY.get(n) == fam]
+        assert b == members, fam
+        # a misspelt family name would declare a family of one
+        assert len(members) >= 2, f"{fam} has one member"
+    # each block sits at its first member's slot: block heads keep
+    # queries() order
+    heads = [b[0] for b in blocks]
+    assert heads == [n for n in names if n in set(heads)]
 
 
 def test_window_queries_need_a_driver_row():

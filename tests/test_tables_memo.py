@@ -1,10 +1,12 @@
 """Round-11 table-plan memoization: `tables.table` returns one lazy
-plan object per (session, sf_dir, name) — repeated loads were ~180 ms
-of driver-side listing/footer/analysis each, paid thousands of times
-per bench session — and the memo must never change values or leak
-across inputs."""
+plan object per (session, sf_dir, name, file stat) — repeated loads
+were ~180 ms of driver-side listing/footer/analysis each, paid
+thousands of times per bench session — and the memo must never change
+values, leak across inputs or outlive a rewrite of the file."""
 
 from __future__ import annotations
+
+import os
 
 from _kafka_streams_scaffold_spark import tables
 
@@ -48,7 +50,8 @@ def _racing_dead_ref(memo: dict, key):
 
 
 def test_dead_entry_eviction_tolerates_a_concurrent_evict(spark, sf_dir):
-    key = (id(spark), sf_dir, "documents")
+    stat = tables._stat_key(os.path.join(sf_dir, "documents.parquet"))
+    key = (id(spark), sf_dir, "documents", stat)
     saved = tables._TABLE_MEMO.get(key)
     tables._TABLE_MEMO[key] = (_racing_dead_ref(tables._TABLE_MEMO, key), None)
     try:
@@ -64,3 +67,22 @@ def test_dead_entry_eviction_tolerates_a_concurrent_evict(spark, sf_dir):
         -1,
     )
     assert tables.df_token(syn) == syn.semanticHash()
+
+
+def test_table_rewritten_in_place_serves_the_new_rows(spark, tmp_path):
+    path = str(tmp_path / "region.parquet")
+
+    def write(names):
+        rows = list(enumerate(names))
+        spark.createDataFrame(rows, "r_regionkey int, r_name string").coalesce(
+            1
+        ).write.mode("overwrite").parquet(path)
+
+    def names():
+        df = tables.table(spark, str(tmp_path), "region")
+        return sorted(r.r_name for r in df.collect())
+
+    write(["A"])
+    assert names() == ["A"]
+    write(["X", "Y"])
+    assert names() == ["X", "Y"]
