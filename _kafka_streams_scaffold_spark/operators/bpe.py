@@ -162,8 +162,9 @@ def _trained_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..pinning import shared_pin as _shared_pin
 
-    tok = tables.token(spark, sf_dir, "documents")
-    return _shared_pin(("bpe.trained_vocab", tok), build)
+    return _shared_pin(
+        ("bpe.trained_vocab", tables.table(spark, sf_dir, "documents")), build
+    )
 
 
 def bpe_encode_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -77,19 +77,16 @@ def undirected(edges: DataFrame) -> DataFrame:
 # a composite query, or the bench's graph-family block —
 # the banded self-join, the 2|E| undirected table, the CC fixpoint
 # and the PR iteration each run ONCE instead of once per consumer.
-# Keys embed the documents scan's semantic hash, so distinct sf_dirs
-# or monkeypatched test frames never collide.
+# Keys embed the memoized documents frame (``tables.table``), so
+# distinct sf_dirs, a rewritten file or monkeypatched test frames
+# never collide.
 # --------------------------------------------------------------------------
-
-
-def _dtok(spark: SparkSession, sf_dir: str) -> int:
-    return tables.token(spark, sf_dir, "documents")
 
 
 def _doc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst) SimHash near-dup pairs, one row per pair."""
     return _shared_pin(
-        ("graph.edges", _dtok(spark, sf_dir)),
+        ("graph.edges", tables.table(spark, sf_dir, "documents")),
         lambda: simhash_pairs_query(spark, sf_dir).select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
         ),
@@ -100,37 +97,37 @@ def _doc_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both directions, partitioned on src — the iterative engines'
     input shape, materialized once per scope."""
     return _shared_pin(
-        ("graph.both", _dtok(spark, sf_dir)),
+        ("graph.both", tables.table(spark, sf_dir, "documents")),
         lambda: undirected(_doc_edges(spark, sf_dir)),
     )
 
 
 def _doc_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) — the SimHash CC labels."""
+    docs = tables.table(spark, sf_dir, "documents")
 
     def build() -> DataFrame:
-        docs = tables.table(spark, sf_dir, "documents").select("doc_id")
         return connected_components(
-            docs,
+            docs.select("doc_id"),
             _doc_edges(spark, sf_dir),
             both=_doc_both(spark, sf_dir),
         )
 
-    return _shared_pin(("graph.cc_labels", _dtok(spark, sf_dir)), build)
+    return _shared_pin(("graph.cc_labels", docs), build)
 
 
 def _doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, pagerank) — the fixed-iteration PR vector."""
+    docs = tables.table(spark, sf_dir, "documents")
 
     def build() -> DataFrame:
-        docs = tables.table(spark, sf_dir, "documents").select("doc_id")
         return pagerank(
-            docs,
+            docs.select("doc_id"),
             _doc_edges(spark, sf_dir),
             both=_doc_both(spark, sf_dir),
         )
 
-    return _shared_pin(("graph.pagerank", _dtok(spark, sf_dir)), build)
+    return _shared_pin(("graph.pagerank", docs), build)
 
 
 def _contract_partition(batches):
@@ -347,7 +344,7 @@ def embedding_dup_clusters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer cells). Same min-label propagation engine; only the edge
     generator differs — which is the point of factoring
     connected_components over (nodes, edges)."""
-    from .similarity import _etok, ivf_near_dup_query
+    from .similarity import ivf_near_dup_query
 
     def build() -> DataFrame:
         vecs = tables.table(spark, sf_dir, "embeddings").select(
@@ -370,7 +367,7 @@ def embedding_dup_clusters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shared_pin(
         (
             "sim.emb_cc",
-            _etok(spark, sf_dir),
+            tables.table(spark, sf_dir, "embeddings"),
             IVF_TARGET_CELL,
             NEAR_DUP_COSINE,
         ),

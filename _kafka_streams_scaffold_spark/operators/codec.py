@@ -192,10 +192,10 @@ def _coded_payload_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     scope instead of one per query."""
     from ..pinning import shared_pin as _shared_pin
 
-    docs = tables.spread(tables.table(spark, sf_dir, "documents"), "doc_id")
-    tok = tables.token(spark, sf_dir, "documents")
+    docs = tables.table(spark, sf_dir, "documents")
     return _shared_pin(
-        ("mm.payload", tok), lambda: with_coded_payload(docs)
+        ("mm.payload", docs),
+        lambda: with_coded_payload(tables.spread(docs, "doc_id")),
     )
 
 

@@ -105,8 +105,7 @@ def corpus_keep_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..pinning import shared_pin as _shared_pin
 
-    tok = tables.token(spark, sf_dir, "documents")
-    return _shared_pin(("cur.keep", tok), build)
+    return _shared_pin(("cur.keep", tables.table(spark, sf_dir, "documents")), build)
 
 
 def _cte(sql: str) -> str:
@@ -231,8 +230,9 @@ def corpus_keep_full_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..pinning import shared_pin as _shared_pin
 
-    tok = tables.token(spark, sf_dir, "documents")
-    return _shared_pin(("cur.keep_full", tok), build)
+    return _shared_pin(
+        ("cur.keep_full", tables.table(spark, sf_dir, "documents")), build
+    )
 
 
 def _build_full_oracle() -> str:

@@ -189,28 +189,26 @@ SHINGLE_DF_CAP = 50
 
 
 def _shingle_table(docs: DataFrame) -> DataFrame:
-    return _shared_pin(
-        ("dedup.shingles", tables.df_token(docs)), lambda: shingles(docs)
-    )
+    return _shared_pin(("dedup.shingles", docs), lambda: shingles(docs))
 
 
 def _capped_shingle_table(docs: DataFrame) -> DataFrame:
     return _shared_pin(
-        ("dedup.capped_shingles", tables.df_token(docs)),
+        ("dedup.capped_shingles", docs),
         lambda: df_capped_shingles(_shingle_table(docs)),
     )
 
 
 def _signature_table(docs: DataFrame) -> DataFrame:
     return _shared_pin(
-        ("dedup.minhash_sigs", tables.df_token(docs)),
+        ("dedup.minhash_sigs", docs),
         lambda: minhash_signatures(_shingle_table(docs)),
     )
 
 
 def _candidate_table(docs: DataFrame) -> DataFrame:
     return _shared_pin(
-        ("dedup.lsh_candidates", tables.df_token(docs)),
+        ("dedup.lsh_candidates", docs),
         lambda: lsh_candidates(_signature_table(docs)),
     )
 
@@ -220,7 +218,7 @@ def _capped_sizes_table(docs: DataFrame) -> DataFrame:
     twice per scoring query (na and nb join sides) and by both the
     Jaccard and containment detectors."""
     return _shared_pin(
-        ("dedup.capped_sizes", tables.df_token(docs)),
+        ("dedup.capped_sizes", docs),
         lambda: _capped_shingle_table(docs)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n")),
@@ -236,7 +234,7 @@ def _capped_inter_table(docs: DataFrame) -> DataFrame:
     sh = _capped_shingle_table(docs)
     a, b = sh.alias("a"), sh.alias("b")
     return _shared_pin(
-        ("dedup.capped_inter", tables.df_token(docs)),
+        ("dedup.capped_inter", docs),
         lambda: a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
@@ -1205,9 +1203,7 @@ def _tier_pairs(spark: SparkSession, sf_dir: str, tier: str) -> DataFrame:
             "doc_a", "doc_b"
         )
 
-    return _shared_pin(
-        (f"dedup.tier_pairs.{tier}", tables.df_token(docs)), build
-    )
+    return _shared_pin((f"dedup.tier_pairs.{tier}", docs), build)
 
 
 def dedup_tier_agreement_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1377,7 +1373,7 @@ def prefix_filter_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shared_pin(
         (
             "dedup.pairs.prefix_filter",
-            tables.df_token(docs),
+            docs,
             PF_TAU_NUM,
             PF_TAU_DEN,
         ),
@@ -1586,7 +1582,7 @@ def _winnow_fps(docs: DataFrame) -> DataFrame:
             .distinct()
         )
 
-    return _shared_pin(("dedup.winnow_fps", tables.df_token(docs)), build)
+    return _shared_pin(("dedup.winnow_fps", docs), build)
 
 
 def winnowing_fingerprints_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1688,7 +1684,7 @@ def winnowing_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shared_pin(
         (
             "dedup.pairs.winnowing",
-            tables.df_token(docs),
+            docs,
             WINNOW_W,
             WINNOW_MIN_SHARED,
         ),
@@ -1831,7 +1827,7 @@ def sorted_neighborhood_pairs_query(
     return _shared_pin(
         (
             "dedup.pairs.sorted_neighborhood",
-            tables.df_token(docs),
+            docs,
             SNM_W,
             SNM_KEY_LEN,
             SNM_BLOCK_LEN,

@@ -333,9 +333,9 @@ def _shared_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive the same table; one materialization per family scope."""
     from ..pinning import shared_pin as _shared_pin
 
-    tok = tables.token(spark, sf_dir, "documents")
     return _shared_pin(
-        ("mm.phash", tok), lambda: payload_phash_query(spark, sf_dir)
+        ("mm.phash", tables.table(spark, sf_dir, "documents")),
+        lambda: payload_phash_query(spark, sf_dir),
     )
 
 

@@ -202,7 +202,8 @@ def pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy (constants within the group), so the per-cell recenter
     is a second partial-aggregatable groupBy over id-width+8 rows
     and raw vectors are read exactly once, never shuffled."""
-    emb = tables.spread(tables.table(spark, sf_dir, "embeddings"), "vec_id")
+    raw = tables.table(spark, sf_dir, "embeddings")
+    emb = tables.spread(raw, "vec_id")
     sub0 = _sub_slices(pq_seeds(spark, sf_dir))
     fp_cols = [
         F.expr(
@@ -261,9 +262,8 @@ def pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so within the bench's embedding family it trains once.
     from ..pinning import shared_pin as _shared_pin
 
-    tok = tables.token(spark, sf_dir, "embeddings")
     return _shared_pin(
-        ("sim.pq_codebook", tok, PQ_M, PQ_K, PQ_SEED),
+        ("sim.pq_codebook", raw, PQ_M, PQ_K, PQ_SEED),
         lambda: sub0.join(means, ["m", "cid"], "left").select(
             "m",
             "cid",
@@ -335,8 +335,9 @@ def _adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..pinning import shared_pin as _shared_pin
 
-    tok = tables.token(spark, sf_dir, "embeddings")
-    return _shared_pin(("sim.pq_adc", tok, N_QUERIES), build)
+    return _shared_pin(
+        ("sim.pq_adc", tables.table(spark, sf_dir, "embeddings"), N_QUERIES), build
+    )
 
 
 def pq_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -215,8 +215,10 @@ def int8_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..pinning import shared_pin as _shared_pin
 
-    tok = tables.token(spark, sf_dir, "embeddings")
-    return _shared_pin(("sim.int8_ann", tok, N_QUERIES, TOP_K), build)
+    return _shared_pin(
+        ("sim.int8_ann", tables.table(spark, sf_dir, "embeddings"), N_QUERIES, TOP_K),
+        build,
+    )
 
 
 _DUCK_QF = f"""
@@ -476,8 +478,10 @@ def binary_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..pinning import shared_pin as _shared_pin
 
-    tok = tables.token(spark, sf_dir, "embeddings")
-    return _shared_pin(("sim.binary_ann", tok, N_QUERIES, TOP_K), build)
+    return _shared_pin(
+        ("sim.binary_ann", tables.table(spark, sf_dir, "embeddings"), N_QUERIES, TOP_K),
+        build,
+    )
 
 
 BINARY_ANN_ORACLE = f"""

@@ -65,14 +65,6 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("norm", F.expr(_norm_sql(vec_col, "spark")))
 
 
-def _etok(spark: SparkSession, sf_dir: str) -> int:
-    """Input-identity token for the embedding-family shared pins
-    (``sim.*`` keys): the semantic hash of the raw embeddings scan,
-    so distinct sf_dirs (or monkeypatched test frames) never collide —
-    the same contract dedup.py's ``docs.semanticHash()`` keys carry."""
-    return tables.token(spark, sf_dir, "embeddings")
-
-
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings spread across cores BEFORE the norm computation.
 
@@ -126,7 +118,8 @@ def ann_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return _shared_pin(
-        ("sim.ann_topk", _etok(spark, sf_dir), N_QUERIES, TOP_K), build
+        ("sim.ann_topk", tables.table(spark, sf_dir, "embeddings"), N_QUERIES, TOP_K),
+        build,
     )
 
 
@@ -232,7 +225,7 @@ def ivf_near_dup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shared_pin(
         (
             "sim.near_dup_edges",
-            _etok(spark, sf_dir),
+            tables.table(spark, sf_dir, "embeddings"),
             IVF_TARGET_CELL,
             NEAR_DUP_COSINE,
         ),
@@ -321,7 +314,8 @@ def dyn_ivf_assign_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return _shared_pin(
-        ("sim.dyn_assign", _etok(spark, sf_dir), IVF_TARGET_CELL), build
+        ("sim.dyn_assign", tables.table(spark, sf_dir, "embeddings"), IVF_TARGET_CELL),
+        build,
     )
 
 
@@ -654,7 +648,9 @@ def ivf_assign_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _shared_pin(("sim.assign", _etok(spark, sf_dir)), build)
+    return _shared_pin(
+        ("sim.assign", tables.table(spark, sf_dir, "embeddings")), build
+    )
 
 
 def _duck_centroid_dots() -> tuple[str, str]:
@@ -815,7 +811,13 @@ def ivf_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identity: tests (and future callers) monkeypatch them and must
     # get a fresh build, never the memoized other-dial table
     return _shared_pin(
-        ("sim.ivf_ann", _etok(spark, sf_dir), N_PROBE, N_QUERIES, TOP_K),
+        (
+            "sim.ivf_ann",
+            tables.table(spark, sf_dir, "embeddings"),
+            N_PROBE,
+            N_QUERIES,
+            TOP_K,
+        ),
         build,
     )
 
@@ -984,7 +986,12 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return _shared_pin(
-        ("sim.knn_edges", _etok(spark, sf_dir), KNN_K, IVF_TARGET_CELL),
+        (
+            "sim.knn_edges",
+            tables.table(spark, sf_dir, "embeddings"),
+            KNN_K,
+            IVF_TARGET_CELL,
+        ),
         build,
     )
 

@@ -169,11 +169,15 @@ def shared_pin(key, build) -> DataFrame:
     """Memoized ``pin``: queries that derive the SAME intermediate
     (e.g. the dedup tiers' shingle table — four detectors, one
     artifact) share one materialization instead of re-deriving it
-    per query. Keyed by the caller's (name, input-semantic-hash)
-    tuple so distinct inputs — different sf_dirs, monkeypatched test
-    frames — never collide. The pin lives in the outermost open
-    scope: sharing spans one composite query, or every query a
-    harness runs under one outer scope.
+    per query. Keyed by the caller's tuple of a name, the input frame
+    ``tables.table`` returned, and any dials. Frames hash by identity,
+    and the loader returns a new frame when its file changes, so
+    distinct inputs — different sf_dirs, a rewritten file,
+    monkeypatched test frames — never collide. Key on the loader's
+    frame, never on one derived from it: a derived frame is a new
+    object on every build and would never share. The pin lives in the
+    outermost open scope: sharing spans one composite query, or every
+    query a harness runs under one outer scope.
 
     Thread-safe via double-checked per-key locking, so composite
     queries may build plans that share pinned intermediates from

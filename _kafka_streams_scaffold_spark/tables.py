@@ -11,7 +11,6 @@ pruning all apply (verify with ``plans.assert_pushed_filters``).
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,11 +59,13 @@ EMBED_DIM = 64
 # on its next load. Tests that monkeypatch ``tables.table`` replace
 # the whole function and never hit the memo.
 #
-# Shared-pin tokens do NOT follow a rewrite: the new scan's
-# ``semanticHash()`` equals the old one, so a shared pin built before
-# the rewrite, in a scope that is still open, keeps serving the old
-# rows until that scope exits.
-_TABLE_MEMO: dict[tuple, tuple] = {}
+# The memoized frame is also the input identity of every
+# ``pinning.shared_pin`` key: it changes exactly when the file does,
+# so a pin built before a rewrite is never served after it. Sessions
+# and frames hash by identity, and nothing here is ever collected
+# under a live key: each memoized frame holds its session, and a
+# scope's shared pins hold the frames they are keyed on.
+_TABLE_MEMO: dict[tuple, DataFrame] = {}
 
 
 def _stat_key(path: str) -> tuple[int, int] | None:
@@ -78,59 +79,14 @@ def _stat_key(path: str) -> tuple[int, int] | None:
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    key = (
-        id(spark),
-        sf_dir,
-        name,
-        _stat_key(os.path.join(sf_dir, f"{name}.parquet")),
-    )
-    hit = _TABLE_MEMO.get(key)
-    if hit is not None:
-        ref, df = hit
-        # identity check guards against CPython id() reuse after a
-        # session is stopped and garbage-collected; the weakref keeps
-        # no dead session (or its plans) alive
-        if ref() is spark:
-            return df
-        # dead weakref: evict, don't accumulate. pop, not del: curation
-        # builds plans from a thread pool, and a concurrent caller may
-        # already have evicted (or replaced) this key.
-        _TABLE_MEMO.pop(key, None)
-    df = _load_table(spark, sf_dir, name)
-    _TABLE_MEMO[key] = (weakref.ref(spark), df)
+    key = (spark, sf_dir, name, _stat_key(os.path.join(sf_dir, f"{name}.parquet")))
+    df = _TABLE_MEMO.get(key)
+    if df is None:
+        # setdefault: threads that miss together (curation builds plans
+        # from a thread pool) all get the one frame stored first, so
+        # their shared-pin keys agree
+        df = _TABLE_MEMO.setdefault(key, _load_table(spark, sf_dir, name))
     return df
-
-
-# Input-identity tokens for shared_pin keys: the semantic hash of the
-# table's scan plan (so distinct sf_dirs / synthetic test frames never
-# collide). semanticHash() is a py4j round-trip over the analyzed plan
-# (~50 ms); the shared-pin helpers call it on every query build, so it
-# is memoized alongside the table plan it hashes.
-_TOKEN_MEMO: dict[int, tuple] = {}
-
-
-def token(spark: SparkSession, sf_dir: str, name: str) -> int:
-    return df_token(table(spark, sf_dir, name))
-
-
-def df_token(df: DataFrame) -> int:
-    """Memoized ``df.semanticHash()`` keyed on the DataFrame OBJECT
-    (weakref-guarded against id reuse): helpers that receive a frame
-    argument (dedup.py's shared-pin keys) hash the same memoized
-    loader object on every query build."""
-    key = id(df)
-    hit = _TOKEN_MEMO.get(key)
-    if hit is not None:
-        ref, tok = hit
-        if ref() is df:
-            return tok
-        _TOKEN_MEMO.pop(key, None)  # dead weakref; racy like table()
-    tok = df.semanticHash()
-    try:
-        _TOKEN_MEMO[key] = (weakref.ref(df), tok)
-    except TypeError:
-        pass  # non-weakref-able stand-in: just return the hash
-    return tok
 
 
 def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

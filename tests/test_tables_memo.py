@@ -2,13 +2,19 @@
 plan object per (session, sf_dir, name, file stat) — repeated loads
 were ~180 ms of driver-side listing/footer/analysis each, paid
 thousands of times per bench session — and the memo must never change
-values, leak across inputs or outlive a rewrite of the file."""
+values, leak across inputs or outlive a rewrite of the file. The
+memoized frame is also every shared pin's input identity, so a pin
+must follow a rewrite too."""
 
 from __future__ import annotations
 
-import os
+import shutil
+import threading
 
-from _kafka_streams_scaffold_spark import tables
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from _kafka_streams_scaffold_spark import pinning, tables
 
 
 def test_table_memoized_per_session_and_input(spark, sf_dir):
@@ -19,54 +25,6 @@ def test_table_memoized_per_session_and_input(spark, sf_dir):
     assert c is not a
     # values flow from the parquet input (no materialization in memo)
     assert a.count() == a.count() > 0
-
-
-def test_token_is_stable_and_input_specific(spark, sf_dir):
-    t1 = tables.token(spark, sf_dir, "documents")
-    t2 = tables.token(spark, sf_dir, "documents")
-    assert t1 == t2
-    assert tables.token(spark, sf_dir, "embeddings") != t1
-
-
-def test_df_token_matches_semantic_hash(spark, sf_dir):
-    df = tables.table(spark, sf_dir, "documents")
-    assert tables.df_token(df) == df.semanticHash()
-    # a synthetic frame gets its own hash (no cross-input collision)
-    syn = spark.range(5).selectExpr("id as doc_id", "'x' as text")
-    assert tables.df_token(syn) == syn.semanticHash()
-    assert tables.df_token(syn) != tables.df_token(df)
-
-
-def _racing_dead_ref(memo: dict, key):
-    """A dead weakref whose call evicts ``key`` first — exactly what a
-    concurrent thread's eviction does between the lookup and the
-    eviction of the caller that found the entry dead."""
-
-    def ref():
-        memo.pop(key, None)
-        return None
-
-    return ref
-
-
-def test_dead_entry_eviction_tolerates_a_concurrent_evict(spark, sf_dir):
-    stat = tables._stat_key(os.path.join(sf_dir, "documents.parquet"))
-    key = (id(spark), sf_dir, "documents", stat)
-    saved = tables._TABLE_MEMO.get(key)
-    tables._TABLE_MEMO[key] = (_racing_dead_ref(tables._TABLE_MEMO, key), None)
-    try:
-        df = tables.table(spark, sf_dir, "documents")
-        assert df is not None and tables.table(spark, sf_dir, "documents") is df
-    finally:
-        if saved is not None:
-            tables._TABLE_MEMO[key] = saved
-
-    syn = spark.range(3).selectExpr("id as doc_id")
-    tables._TOKEN_MEMO[id(syn)] = (
-        _racing_dead_ref(tables._TOKEN_MEMO, id(syn)),
-        -1,
-    )
-    assert tables.df_token(syn) == syn.semanticHash()
 
 
 def test_table_rewritten_in_place_serves_the_new_rows(spark, tmp_path):
@@ -86,3 +44,79 @@ def test_table_rewritten_in_place_serves_the_new_rows(spark, tmp_path):
     assert names() == ["A"]
     write(["X", "Y"])
     assert names() == ["X", "Y"]
+
+
+def test_shared_pins_follow_a_rewrite(spark, sf_dir, tmp_path, monkeypatch):
+    """A shared pin keyed on the loader's frame, inside one scope that
+    stays open across a rewrite of the file (a bench family block):
+    reused while the file is unchanged, rebuilt from the new rows
+    after the rewrite."""
+    from _kafka_streams_scaffold_spark.operators import dedup
+
+    builds = []
+    shingles = dedup.shingles
+
+    def counted(docs):
+        builds.append(docs)
+        return shingles(docs)
+
+    monkeypatch.setattr(dedup, "shingles", counted)
+    corpus = pq.read_table(f"{sf_dir}/documents.parquet")
+    path = tmp_path / "documents.parquet"
+
+    def pinned():
+        return dedup._shingle_table(tables.table(spark, str(tmp_path), "documents"))
+
+    def serves(pin, rows):
+        got = {r.doc_id for r in pin.select("doc_id").distinct().collect()}
+        return got and got <= set(rows.column("doc_id").to_pylist())
+
+    with pinning.scope():
+        pq.write_table(corpus.slice(0, 40), path)
+        first = pinned()
+        assert pinned() is first
+        assert len(builds) == 1
+        assert serves(first, corpus.slice(0, 40))
+
+        pq.write_table(corpus.slice(100, 25), path)
+        after = pinned()
+        assert after is not first
+        assert len(builds) == 2
+        assert serves(after, corpus.slice(100, 25))
+
+
+def test_threads_that_miss_together_get_one_frame(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    n = 4
+    shutil.copyfile(f"{sf_dir}/region.parquet", tmp_path / "region.parquet")
+    barrier = threading.Barrier(n)
+    load = tables._load_table
+
+    def load_after_every_thread_missed(*args):
+        barrier.wait(timeout=60)
+        return load(*args)
+
+    monkeypatch.setattr(tables, "_load_table", load_after_every_thread_missed)
+    frames = pinning.parallel(
+        spark, *[lambda: tables.table(spark, str(tmp_path), "region")] * n
+    )
+    assert all(df is frames[0] for df in frames)
+
+
+def test_nanos_timestamps_read_as_the_micros_rows(spark, sf_dir, tmp_path):
+    micros = pq.read_table(f"{sf_dir}/events.parquet")
+    ts = micros.schema.get_field_index("ts")
+    nanos = micros.set_column(
+        ts, "ts", micros.column("ts").cast(pa.timestamp("ns"))
+    )
+    pq.write_table(nanos, tmp_path / "events.parquet")
+    assert tables._ts_is_nanos(str(tmp_path / "events.parquet"))
+
+    flag = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(flag)
+    got = tables.table(spark, str(tmp_path), "events")
+    assert spark.conf.get(flag) == before
+    want = tables.table(spark, sf_dir, "events")
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect()) == sorted(want.collect())

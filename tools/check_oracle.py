@@ -14,6 +14,7 @@ import decimal
 import math
 import os
 import sys
+import tempfile
 import time
 
 # The package of the checkout this file sits in: perfbench loads it by
@@ -73,34 +74,22 @@ def main() -> int:
             c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
     def _fresh_connection(sf):
+        # Give DuckDB a high (but bounded) memory ceiling and a spill
+        # path. The heavy graph/list oracles (knn_triangles' multi-way
+        # join, bpe_encode's list folds) include operators that cannot
+        # fully spill, so a LOW limit trades transient-OOM-under-Spark-
+        # pressure for deterministic-OOM-at-the-cap — 80GB leaves the
+        # 8GB driver JVM + Python comfortable headroom on a 125GB box
+        # while still preventing a runaway allocation from taking the
+        # machine down.
         c = duckdb.connect()
-        import tempfile as _tf
-
         c.execute("SET memory_limit='80GB'")
-        c.execute(
-            f"SET temp_directory='{_tf.mkdtemp(prefix='duck-spill-')}'"
-        )
+        c.execute(f"SET temp_directory='{tempfile.mkdtemp(prefix='duck-spill-')}'")
         for t in tables.TABLE_NAMES:
             _make_view(c, sf, t)
         return c
 
-    con = duckdb.connect()
-    # Give DuckDB a high (but bounded) memory ceiling and a spill
-    # path. The heavy graph/list oracles (knn_triangles' multi-way
-    # join, bpe_encode's list folds) include operators that cannot
-    # fully spill, so a LOW limit trades transient-OOM-under-Spark-
-    # pressure for deterministic-OOM-at-the-cap — 80GB leaves the
-    # 8GB driver JVM + Python comfortable headroom on a 125GB box
-    # while still preventing a runaway allocation from taking the
-    # machine down.
-    import tempfile
-
-    con.execute("SET memory_limit='80GB'")
-    con.execute(
-        f"SET temp_directory='{tempfile.mkdtemp(prefix='duck-spill-')}'"
-    )
-    for name in tables.TABLE_NAMES:
-        _make_view(con, sf_dir, name)
+    con = _fresh_connection(sf_dir)
 
     qs, oracles = e.queries(), e.oracle_sql()
     failures = 0
