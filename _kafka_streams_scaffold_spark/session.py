@@ -23,6 +23,17 @@ Every knob here is chosen for a 1000-executor cluster and merely
   large partitioned directory on an object store lists serially too; a
   cluster deployment over one lowers the threshold back so such
   listings fan out to executors.
+- Spark's cache of generated classes holds 8,192 entries
+  (``codegen.cache.maxEntries``; Spark's default is 100). The cache is
+  least-recently-used, and one pass of perfbench's 9-query ``batch``
+  generates about 144 distinct classes, so at 100 each class was evicted
+  before its next use and every warm pass ran janino again on all of
+  them. One ``bench.py`` pass over the whole registry (sf0.01) compiles
+  about 5,530 distinct classes, and 8,192 holds that with room to spare;
+  at 100 the same pass compiled about 8,160. The trade is metaspace: after
+  that pass it held about 230 MB against 186 MB at the default. The value
+  is JVM-wide and fixed when the first class is generated; a session the
+  driver supplies (``__spark_entry__.entry``) keeps Spark's default.
 """
 
 from __future__ import annotations
@@ -74,6 +85,12 @@ def build_session(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
             str(2**31 - 1),
         )
+        # Keep every generated class of a registry pass (about 5,530 at
+        # sf0.01) so a repeated plan shape never runs janino again; 100
+        # thrashed, recompiling all ~144 classes of each warm batch pass.
+        # Costs about 44 MB of metaspace when the registry fills it.
+        # Static: read once per JVM, at the first generated class.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -91,6 +91,8 @@ def main() -> None:
     # measurements. Tagged in the payload so round-over-round
     # comparisons don't misread the cheaper warm numbers as speedups.
     warm_family: list[str] = []
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
     t_all = time.time()
     for block in registry.blocks():
         with pinning.scope():
@@ -103,6 +105,9 @@ def main() -> None:
                     df.write.format("noop").mode("overwrite").save()
                     timings[name] = round(time.time() - t0, 3)
     total = round(time.time() - t_all, 3)
+    # janino compiles during the loop: classes Spark's generated-code
+    # cache did not already hold (exact, unlike the timings)
+    codegen_compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles0
 
     cal_last = _calibration(spark)
 
@@ -113,6 +118,7 @@ def main() -> None:
         "query_p90_sec": round(
             statistics.quantiles(timings.values(), n=10, method="inclusive")[-1], 3
         ),
+        "codegen_compiles": codegen_compiles,
         "unit": "sec",
         "queries": timings,
         "warm_family": warm_family,

@@ -58,7 +58,11 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = session.build_session("check-oracle")
+    # no console progress bar: it has no trailing newline, so with
+    # stdout and stderr in one file it would share a line with a verdict
+    spark = session.build_session(
+        "check-oracle", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
 
     def _make_view(c, sf, t):
         # Mirror the Spark-side load-time quarantine (tables.quarantine)
