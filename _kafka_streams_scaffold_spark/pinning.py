@@ -17,15 +17,16 @@ preserved), so composite plans stop carrying every upstream chain
 once per reference (knn_triangles rendered 4,091 Exchange nodes as a
 persist pin; build 7.5s -> 4.7s, exec 2.8s -> 0.3s at sf0.1). The
 blocks are unreplicated; production would use reliable checkpoints.
-``full_lineage()`` opens a scope of persist-backed pins for plan
-audits that must see THROUGH the pin boundary.
+A consumer's plan therefore ends at the pin: a plan audit that must
+see through it reads each pin's build plan where ``_materialize``
+receives it (the test suite's ``pin_builds`` fixture does).
 
 ``checkpoint`` is the LAZY cut for the iterative loops' rounds
 (connected components, PageRank, k-core): the first action that reads
-a round materializes it, and it truncates in every pin mode. Pins and
-checkpoints are the only frames the operators and sources store, and
-both belong to a scope, so a query's scope frees everything it
-materialized instead of leaving rounds to Spark's ContextCleaner.
+a round materializes it. Pins and checkpoints are the only frames the
+operators and sources store, and both belong to a scope, so a query's
+scope frees everything it materialized instead of leaving rounds to
+Spark's ContextCleaner.
 
 Lifetimes are SCOPES, held in a ``ContextVar``; ``with scope():``
 releases exactly the pins it owns on exit. ``pin`` registers in the
@@ -47,16 +48,14 @@ from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
 
 class _Scope:
     """One pin lifetime: the pins it owns and, when it is the outermost
     open scope, the shared pins keyed in it with their build locks."""
 
-    def __init__(self, parent: _Scope | None, truncate: bool):
+    def __init__(self, parent: _Scope | None):
         self.parent = parent
-        self.truncate = truncate
         self.pinned: list[DataFrame] = []
         self.shared: dict[object, DataFrame] = {}
         self.locks: dict[object, threading.Lock] = {}
@@ -82,15 +81,17 @@ class _Scope:
         return len(pinned)
 
 
-_ROOT = _Scope(None, truncate=True)
+_ROOT = _Scope(None)
 _SCOPE: contextvars.ContextVar[_Scope] = contextvars.ContextVar(
     "pin_scope", default=_ROOT
 )
 
 
 @contextmanager
-def _open(truncate: bool):
-    s = _Scope(_SCOPE.get(), truncate)
+def scope():
+    """Open a pin lifetime: pins made inside (and shared pins, when
+    this is the outermost open scope) are released on exit."""
+    s = _Scope(_SCOPE.get())
     token = _SCOPE.set(s)
     try:
         yield
@@ -99,70 +100,36 @@ def _open(truncate: bool):
         s.release()
 
 
-def scope():
-    """Open a pin lifetime: pins made inside (and shared pins, when
-    this is the outermost open scope) are released on exit. The pin
-    mode is inherited from the enclosing scope."""
-    return _open(_SCOPE.get().truncate)
-
-
-def full_lineage():
-    """A scope with persist-backed (full-lineage) pins: plan-shape
-    audits that must see THROUGH the pin boundary (scan counts,
-    anti-pattern sweeps over complete trees) run inside this, so the
-    checkpoint default never hides an upstream plan from them."""
-    return _open(False)
-
-
-def truncating() -> bool:
-    """Whether pins made here are checkpoint-backed (lineage-truncating)."""
-    return _SCOPE.get().truncate
-
-
-def _materialize(df: DataFrame, truncate: bool) -> DataFrame:
-    if truncate:
-        return df.localCheckpoint(eager=True)
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    return df
+def _materialize(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=True)
 
 
 def pin(df: DataFrame) -> DataFrame:
-    s = _SCOPE.get()
-    df = _materialize(df, s.truncate)
-    s.add(df)
+    df = _materialize(df)
+    _SCOPE.get().add(df)
     return df
 
 
 def checkpoint(df: DataFrame) -> DataFrame:
-    """A LAZY lineage-truncating checkpoint owned by the innermost open
-    scope: the per-round frames of the iterative loops (connected
+    """A LAZY lineage cut (a local checkpoint) owned by the innermost
+    open scope: the per-round frames of the iterative loops (connected
     components, PageRank, k-core). The first action that reads it
-    materializes it inside that action's own job. Unlike ``pin`` it
-    ignores the pin mode and truncates even under ``full_lineage()``:
-    persist-backed rounds would regrow the plan every round (187 s ->
-    14 s for seven CC rounds at sf0.01)."""
+    materializes it inside that action's own job. Rounds must cut
+    lineage: persist-backed rounds regrew the plan every round (187 s
+    -> 14 s for seven CC rounds at sf0.01)."""
     df = df.localCheckpoint(eager=False)
     _SCOPE.get().add(df)
     return df
 
 
 def _release(df: DataFrame) -> None:
-    """Free a pinned table's storage. persist-pins release through
-    ``unpersist()``; checkpoint-pins hold their blocks on the
-    underlying RDD (DataFrame.unpersist is a CacheManager no-op for
-    them), so the RDD is reached through the LogicalRDD node and
-    unpersisted directly — without this, a long multi-query session
-    (bench.py over the whole registry) would leak every pin until
-    the ContextCleaner's eventual GC."""
-    try:
-        analyzed = df._jdf.queryExecution().analyzed()
-        if analyzed.getClass().getSimpleName() == "LogicalRDD":
-            analyzed.rdd().unpersist(False)
-            return
-    except Exception:
-        pass
-    df.unpersist()
+    """Free a pin's or checkpoint's storage. Its blocks live on the
+    RDD under the frame's LogicalRDD node (DataFrame.unpersist is a
+    CacheManager no-op for it), so that RDD is unpersisted directly —
+    without this, a long multi-query session (bench.py over the whole
+    registry) would leak every pin until the ContextCleaner's
+    eventual GC."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def shared_pin(key, build) -> DataFrame:
@@ -184,8 +151,7 @@ def shared_pin(key, build) -> DataFrame:
     concurrent threads (``parallel``): the first caller builds,
     latecomers block on that key only — never a duplicate
     materialization, never a global serialization."""
-    s = _SCOPE.get()
-    home = s.outermost()
+    home = _SCOPE.get().outermost()
     df = home.shared.get(key)
     if df is not None:
         return df
@@ -194,7 +160,7 @@ def shared_pin(key, build) -> DataFrame:
     with lock:
         df = home.shared.get(key)
         if df is None:
-            df = _materialize(build(), s.truncate)
+            df = _materialize(build())
             home.add(df)
             home.shared[key] = df
         return df
@@ -204,7 +170,7 @@ def parallel(spark, *thunks) -> list:
     """Run each thunk on its own thread and return their results in
     order. Each runs in a copy of the caller's context wrapped by
     ``inheritable_thread_target``, so workers pin into the caller's
-    scope and mode, and their jobs carry the caller's job group and
+    scope, and their jobs carry the caller's job group and
     tags. The first exception propagates."""
     from pyspark.util import inheritable_thread_target
 
@@ -222,18 +188,16 @@ def unpersist_all() -> int:
     are untouched. Consumers that already materialized their results
     are unaffected.
 
-    RELEASE-ORDER CONTRACT: a released ``checkpoint`` (any mode) or
-    pin (default mode) is UNRECOVERABLE — ``_release`` unpersists the
-    localCheckpointed RDD whose lineage was truncated, so a consumer
-    that re-executes one fails with a missing-checkpoint error instead
-    of recomputing (unreplicated local-checkpoint blocks likewise die
-    with their executor on a real cluster). Every consumer must
-    therefore fully execute BEFORE the scope that owns them is
-    released: inside the ``with scope():`` block, or before the
-    ``unpersist_all()`` that ends a root-scope query (bench.py,
-    check_oracle.py and the test suites all do). A checkpoint-backed
-    pin holds its own rows, so a shared pin outlives the checkpoints
-    of the inner scope that built it. Only persist-backed pins
-    (``full_lineage()``) that read no ``checkpoint`` recompute after
-    release."""
+    RELEASE-ORDER CONTRACT: a released pin or ``checkpoint`` is
+    UNRECOVERABLE — ``_release`` unpersists the localCheckpointed RDD
+    whose lineage was truncated, so a consumer that re-executes one
+    fails with a missing-checkpoint error instead of recomputing
+    (unreplicated local-checkpoint blocks likewise die with their
+    executor on a real cluster). Every consumer must therefore fully
+    execute BEFORE the scope that owns them is released: inside the
+    ``with scope():`` block, or before the ``unpersist_all()`` that
+    ends a root-scope query (bench.py, check_oracle.py and the test
+    suites all do). A checkpoint-backed pin holds its own rows, so a
+    shared pin outlives the checkpoints of the inner scope that built
+    it."""
     return _ROOT.release()

@@ -212,10 +212,3 @@ def spread(df: DataFrame, key: str | None = None) -> DataFrame:
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() mirrors the
-    DuckDB oracle environment (same view names)."""
-    for name in TABLE_NAMES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -23,21 +23,16 @@ def _n(tree: str, node: str) -> int:
     return len(set(re.findall(rf"(?<![A-Za-z]){node}[^\n(]*\((\d+)\)", tree)))
 
 
-def test_unigram_lm_broadcasts_surprisal_table(spark, sf_dir):
-    # elide_cached=False + full_lineage pins: the single parquet scan
-    # being asserted lives INSIDE the pinned token frame's build plan
-    from _kafka_streams_scaffold_spark import pinning
-
-    with pinning.full_lineage():
-        t = pi.tree(
-            lm.unigram_lm_score_query(spark, sf_dir), elide_cached=False
-        )
+def test_unigram_lm_broadcasts_surprisal_table(spark, sf_dir, pin_builds):
+    # the consumer's tree plus every pin build's: the single parquet
+    # scan being asserted lives INSIDE the pinned token frame's build
+    ts = pin_builds.trees(lm.unigram_lm_score_query(spark, sf_dir))
     # vocabulary-sized surprisal table broadcasts onto the token
     # stream: occurrences must NOT sort-merge for the scoring join
-    assert _n(t, "BroadcastHashJoin") >= 1
-    assert _n(t, "SortMergeJoin") == 0
+    assert sum(_n(t, "BroadcastHashJoin") for t in ts) >= 1
+    assert sum(_n(t, "SortMergeJoin") for t in ts) == 0
     # the pinned token frame means documents parquet is scanned once
-    assert _n(t, "Scan parquet") == 1
+    assert sum(_n(t, "Scan parquet") for t in ts) == 1
 
 
 def test_quality_tiers_has_no_global_sort(spark, sf_dir):

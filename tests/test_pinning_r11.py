@@ -54,27 +54,24 @@ def test_unpersist_all_frees_checkpoint_blocks(spark):
     assert _cached_rdd_count(spark) <= base
 
 
-def test_persist_mode_still_available(spark):
-    with pinning.full_lineage():
-        pinned = pinning.pin(spark.range(0, 10).select("id"))
-        plan = pinned._jdf.queryExecution().withCachedData().toString()
-        assert "InMemoryRelation" in plan
-
-
-def test_reads_pinned_raises_outside_full_lineage(spark):
-    """Checkpoint pins render as the same leaf as any localCheckpoint,
-    so outside ``full_lineage()`` the check could only ever answer
-    False; it must say so loudly instead."""
+def test_reads_tells_a_pin_from_other_rdd_leaves(spark, pin_builds):
+    """A consumer of a pin, of a ``checkpoint`` and of a
+    ``createDataFrame`` frame all render the same ``Scan ExistingRDD``
+    leaf; ``reads`` is true for the pin's consumer only."""
     from _kafka_streams_scaffold_spark.plans import inspect as pi
 
-    tree = pi.tree(pinning.pin(spark.range(0, 10).select("id")))
-    pinning.unpersist_all()
-    with pytest.raises(RuntimeError, match="full_lineage"):
-        pi.reads_pinned(tree)
-    with pinning.full_lineage():
-        assert pi.reads_pinned(
-            pi.tree(pinning.pin(spark.range(0, 10).select("id")))
-        )
+    def ten():
+        return spark.range(0, 10).select("id")
+
+    pinned = pinning.pin(ten())
+    others = (
+        pinning.checkpoint(ten()),
+        spark.createDataFrame([(3,)], "id long"),
+    )
+    for df in (pinned, *others):
+        assert "Scan ExistingRDD" in pi.tree(df.where("id > 2"))
+    assert pin_builds.reads(pinned.where("id > 2"))
+    assert not any(pin_builds.reads(df.where("id > 2")) for df in others)
 
 
 def _rdd_id(df) -> int:
@@ -161,7 +158,7 @@ def test_scope_bookkeeping_under_thread_stress(spark, monkeypatch):
     import sys
 
     released: list[object] = []
-    monkeypatch.setattr(pinning, "_materialize", lambda df, truncate: df)
+    monkeypatch.setattr(pinning, "_materialize", lambda df: df)
     monkeypatch.setattr(pinning, "_release", released.append)
     builds: list[int] = []
     n_threads, n_pins = 32, 200

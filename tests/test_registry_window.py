@@ -281,39 +281,36 @@ def test_register_raises_on_duplicate_name():
     registry.register(first, registry.queries()[first], replace=True)
 
 
-def test_no_registered_query_plans_cartesian_or_row_python(spark, sf_dir):
-    """Registry-wide anti-pattern guard over COMPLETE plan trees
-    (elide_cached=False — the round-9 tree() fix showed elision bugs
-    can hide whole branches): no unbounded CartesianProduct and no
-    row-at-a-time / arrow-eval Python in any registered query's plan.
-    Every crossJoin in the tree must broadcast (BroadcastNestedLoop),
-    and all Python execution goes through mapInPandas/applyInPandas
-    nodes, never per-expression eval.
-
-    Round-11: runs under ``pinning.full_lineage()`` — the checkpoint
-    pin default hands consumers LogicalRDD leaves, which would hide
-    every pinned build from this sweep; persist-mode pins keep the
-    complete logical derivation visible, and the logical query
-    surface audited here is identical in both modes."""
+def test_no_registered_query_plans_cartesian_or_row_python(
+    spark, sf_dir, pin_builds
+):
+    """Registry-wide anti-pattern guard over COMPLETE plans — each
+    query's tree plus the build tree of every pin it made, since a
+    consumer's tree ends at its pins' leaves: no unbounded
+    CartesianProduct and no row-at-a-time / arrow-eval Python in any
+    registered query's plan. Every crossJoin in the tree must
+    broadcast (BroadcastNestedLoop), and all Python execution goes
+    through mapInPandas/applyInPandas nodes, never per-expression
+    eval. Each query runs in its own scope, so it builds (and frees)
+    its own shared pins instead of reading another query's."""
     from _kafka_streams_scaffold_spark import pinning
-    from _kafka_streams_scaffold_spark.plans import inspect as pi
 
     bad: dict[str, list[str]] = {}
-    with pinning.full_lineage():
-        for name, fn in registry.queries().items():
-            t = pi.tree(fn(spark, sf_dir), elide_cached=False)
-            hits = [
-                node
-                for node in (
-                    "CartesianProduct",
-                    "BatchEvalPython",
-                    "ArrowEvalPython",
-                )
-                if node in t
-            ]
-            if hits:
-                bad[name] = hits
-            pinning.unpersist_all()
+    for name, fn in registry.queries().items():
+        pin_builds.explains.clear()
+        with pinning.scope():
+            t = "\n".join(pin_builds.trees(fn(spark, sf_dir)))
+        hits = [
+            node
+            for node in (
+                "CartesianProduct",
+                "BatchEvalPython",
+                "ArrowEvalPython",
+            )
+            if node in t
+        ]
+        if hits:
+            bad[name] = hits
     assert not bad, f"anti-pattern nodes in registered plans: {bad}"
 
 

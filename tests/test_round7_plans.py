@@ -19,23 +19,6 @@ from _kafka_streams_scaffold_spark.operators import (
 from _kafka_streams_scaffold_spark.plans import inspect as pi
 
 
-import pytest
-
-
-@pytest.fixture(autouse=True)
-def _full_lineage_pins():
-    """Round-12 (r11 ADVICE): these plan assertions audit PIN reads;
-    checkpoint-mode pins render the same 'Scan ExistingRDD' leaf as
-    any localCheckpoint, which made reads_pinned vacuous. Persist-mode
-    pins render InMemoryTableScan distinguishably, so every test in
-    this module runs under full-lineage pins (the audited logical
-    query surface is identical in both modes)."""
-    from _kafka_streams_scaffold_spark import pinning
-
-    with pinning.full_lineage():
-        yield
-
-
 def _n(tree: str, node: str) -> int:
     return len(set(re.findall(rf"(?<![A-Za-z]){node}[^\n(]*\((\d+)\)", tree)))
 
@@ -101,17 +84,15 @@ def test_theil_sen_pairs_only_after_day_rollup(spark, sf_dir):
     assert "BatchEvalPython" not in t
 
 
-def test_session_concurrency_sessionizes_once(spark, sf_dir):
+def test_session_concurrency_sessionizes_once(spark, sf_dir, pin_builds):
     df = analytics.session_concurrency_query(spark, sf_dir)
     t = pi.tree(df)
     assert "BatchEvalPython" not in t
     # the pinned segment table feeds all three consumers: no parquet
     # scan survives in the final plan (the sessionization ran once at
-    # pin time; every consumer is an InMemoryTableScan — the tree
-    # renderer elides the cached branches, so the Window itself is
-    # asserted on the un-pinned upstream below)
+    # pin time; every consumer reads the pin's leaf)
     assert t.count("Scan parquet") == 0
-    assert pi.reads_pinned(t)  # pinned artifact read, not re-derived
+    assert pin_builds.reads(df)  # pinned artifact read, not re-derived
     assert _n(t, "BroadcastHashJoin") == 1  # days x peaks, both tiny
 
 

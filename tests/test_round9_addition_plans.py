@@ -1,10 +1,10 @@
 """Physical-plan assertions for the round-9 post-freeze additions
 (R10_MATERIAL): the properties each plan must keep at 100 TB.
 
-These use ``elide_cached=False`` trees: the pinned rollups sit in a
-LEFT branch here, and the property that matters is that every
-InMemoryRelation reference shares ONE cached build — visible as a
-single distinct `Scan parquet` node id across the whole tree."""
+The pinned-rollup tests assert over the consumer's tree plus every
+pin build's tree (the ``pin_builds`` fixture): the property that
+matters is that every reference reads ONE pin build — visible as a
+single `Scan parquet` node across all those trees."""
 
 from __future__ import annotations
 
@@ -16,50 +16,32 @@ from _kafka_streams_scaffold_spark.operators import (
     stats,
     textops,
 )
-from _kafka_streams_scaffold_spark import pinning
 from _kafka_streams_scaffold_spark.plans import inspect as pi
-
-
-import pytest
-
-
-@pytest.fixture(autouse=True)
-def _full_lineage_pins():
-    """Round-12 (r11 ADVICE): these plan assertions audit PIN reads;
-    checkpoint-mode pins render the same 'Scan ExistingRDD' leaf as
-    any localCheckpoint, which made reads_pinned vacuous. Persist-mode
-    pins render InMemoryTableScan distinguishably, so every test in
-    this module runs under full-lineage pins (the audited logical
-    query surface is identical in both modes)."""
-    from _kafka_streams_scaffold_spark import pinning
-
-    with pinning.full_lineage():
-        yield
 
 
 def _n(tree: str, node: str) -> int:
     return len(set(re.findall(rf"(?<![A-Za-z]){node}[^\n(]*\((\d+)\)", tree)))
 
 
+def _n_all(trees: list[str], node: str) -> int:
+    return sum(_n(t, node) for t in trees)
+
+
 def _no_python(t: str) -> None:
     assert "BatchEvalPython" not in t and "ArrowEvalPython" not in t
 
 
-def test_tail_share_one_scan_broadcast_anti_head(spark, sf_dir):
-    with pinning.full_lineage():
-        t = pi.tree(
-            lexstats.tail_token_share_query(spark, sf_dir),
-            elide_cached=False,
-        )
+def test_tail_share_one_scan_broadcast_anti_head(spark, sf_dir, pin_builds):
+    df = lexstats.tail_token_share_query(spark, sf_dir)
+    ts = pin_builds.trees(df)
+    t = "\n".join(ts)
     _no_python(t)
     # the (source, term) rollup is pinned: totals, the head and the
-    # anti-probe all read ONE cached build — exactly one parquet scan
-    # node id in the whole tree, and the explode lives inside it
-    # (<= 2 distinct Generate ids: the cached build's final+initial
-    # AQE variants)
-    assert pi.reads_pinned(t)  # pinned artifact read, not re-derived
-    assert _n(t, "Scan parquet") == 1
-    assert _n(t, "Generate") <= 2
+    # anti-probe all read ONE pin build — exactly one parquet scan
+    # node across the trees, and the explode lives inside it
+    assert pin_builds.reads(df)  # pinned artifact read, not re-derived
+    assert _n_all(ts, "Scan parquet") == 1
+    assert _n_all(ts, "Generate") <= 2
     # the constant-size head enters the tail filter as a broadcast
     # LEFT ANTI — never a shuffle keyed on the vocabulary
     assert "LeftAnti" in t and "BroadcastExchange" in t
@@ -67,15 +49,14 @@ def test_tail_share_one_scan_broadcast_anti_head(spark, sf_dir):
     assert "SortMergeJoin" not in t
 
 
-def test_log_odds_grid_one_scan_broadcast_built(spark, sf_dir):
-    with pinning.full_lineage():
-        t = pi.tree(
-            lexstats.log_odds_terms_query(spark, sf_dir), elide_cached=False
-        )
+def test_log_odds_grid_one_scan_broadcast_built(spark, sf_dir, pin_builds):
+    df = lexstats.log_odds_terms_query(spark, sf_dir)
+    ts = pin_builds.trees(df)
+    t = "\n".join(ts)
     _no_python(t)
-    assert pi.reads_pinned(t)  # pinned artifact read, not re-derived
-    assert _n(t, "Scan parquet") == 1
-    assert _n(t, "Generate") <= 2
+    assert pin_builds.reads(df)  # pinned artifact read, not re-derived
+    assert _n_all(ts, "Scan parquet") == 1
+    assert _n_all(ts, "Generate") <= 2
     # the sources x vocabulary grid comes from broadcasting the
     # |sources| totals onto the vocab frame; the grand total is a
     # broadcast scalar — no shuffle grows with the grid
@@ -93,16 +74,15 @@ def test_lexicon_gate_is_one_scan_no_explode_shuffle(spark, sf_dir):
     assert _n(t, "HashAggregate") >= 1
 
 
-def test_v_measure_single_assignment_dimension_rollups(spark, sf_dir):
-    with pinning.full_lineage():
-        t = pi.tree(
-            similarity.v_measure_cells_query(spark, sf_dir),
-            elide_cached=False,
-        )
+def test_v_measure_single_assignment_dimension_rollups(
+    spark, sf_dir, pin_builds
+):
+    df = similarity.v_measure_cells_query(spark, sf_dir)
+    t = "\n".join(pin_builds.trees(df))
     _no_python(t)
     # the (cell, label) joint rollup is pinned; cells/labels/grand
     # totals broadcast back onto it
-    assert pi.reads_pinned(t)  # pinned artifact read, not re-derived
+    assert pin_builds.reads(df)  # pinned artifact read, not re-derived
     assert "SortMergeJoin" not in t
     assert "BroadcastNestedLoopJoin" in t or "BroadcastHashJoin" in t
 
@@ -152,19 +132,18 @@ def test_weighted_median_window_runs_on_compressed_points(spark, sf_dir):
     assert "SortMergeJoin" not in t
 
 
-def test_participation_ratio_one_pass_no_smj(spark, sf_dir):
+def test_participation_ratio_one_pass_no_smj(spark, sf_dir, pin_builds):
     from _kafka_streams_scaffold_spark.operators import pca
 
-    with pinning.full_lineage():
-        t = pi.tree(
-            pca.participation_ratio_query(spark, sf_dir), elide_cached=False
-        )
+    df = pca.participation_ratio_query(spark, sf_dir)
+    ts = pin_builds.trees(df)
+    t = "\n".join(ts)
     _no_python(t)
     # one corpus scan into the pinned d^2 moment rollup; trace and
-    # Frobenius folds read the cache; marginals broadcast
-    assert _n(t, "Scan parquet") == 1
+    # Frobenius folds read the pin; marginals broadcast
+    assert _n_all(ts, "Scan parquet") == 1
     assert "SortMergeJoin" not in t
-    assert pi.reads_pinned(t)  # pinned artifact read, not re-derived
+    assert pin_builds.reads(df)  # pinned artifact read, not re-derived
 
 
 def test_kendall_w_no_cartesian_no_python(spark, sf_dir):

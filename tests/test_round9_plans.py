@@ -16,23 +16,6 @@ from _kafka_streams_scaffold_spark.operators import (
 from _kafka_streams_scaffold_spark.plans import inspect as pi
 
 
-import pytest
-
-
-@pytest.fixture(autouse=True)
-def _full_lineage_pins():
-    """Round-12 (r11 ADVICE): these plan assertions audit PIN reads;
-    checkpoint-mode pins render the same 'Scan ExistingRDD' leaf as
-    any localCheckpoint, which made reads_pinned vacuous. Persist-mode
-    pins render InMemoryTableScan distinguishably, so every test in
-    this module runs under full-lineage pins (the audited logical
-    query surface is identical in both modes)."""
-    from _kafka_streams_scaffold_spark import pinning
-
-    with pinning.full_lineage():
-        yield
-
-
 def _n(tree: str, node: str) -> int:
     return len(set(re.findall(rf"(?<![A-Za-z]){node}[^\n(]*\((\d+)\)", tree)))
 
@@ -41,14 +24,15 @@ def _no_python(t: str) -> None:
     assert "BatchEvalPython" not in t and "ArrowEvalPython" not in t
 
 
-def test_js_drift_single_explode_no_pairs(spark, sf_dir):
-    t = pi.tree(drift.js_source_drift_query(spark, sf_dir))
+def test_js_drift_single_explode_no_pairs(spark, sf_dir, pin_builds):
+    df = drift.js_source_drift_query(spark, sf_dir)
+    t = pi.tree(df)
     _no_python(t)
     assert "CartesianProduct" not in t
     # the (source, token) rollup is pinned, so every consumer branch
-    # reads the cache (InMemoryTableScan) — the corpus is exploded
-    # exactly once, inside the single elided cache build
-    assert pi.reads_pinned(t)  # pinned artifact read, not re-derived
+    # reads the pin — the corpus is exploded exactly once, inside the
+    # pin's build
+    assert pin_builds.reads(df)  # pinned artifact read, not re-derived
     assert _n(t, "Generate") <= 1
     # totals and the grand total enter as broadcasts, never shuffling
     # the (source, token) grid on a small side
@@ -115,14 +99,15 @@ def test_psi_same_single_scan_shape_as_chi2(spark, sf_dir):
     assert _n(t, "HashAggregate") >= 2
 
 
-def test_burrows_top_head_and_broadcast_pairs(spark, sf_dir):
-    t = pi.tree(lexstats.burrows_delta_query(spark, sf_dir))
+def test_burrows_top_head_and_broadcast_pairs(spark, sf_dir, pin_builds):
+    df = lexstats.burrows_delta_query(spark, sf_dir)
+    t = pi.tree(df)
     _no_python(t)
     assert "CartesianProduct" not in t
-    # both pair-join sides read the PINNED z-panel cache (the corpus
-    # is tokenized exactly once, inside the elided cache build), and
-    # the join itself broadcasts one side
-    assert pi.reads_pinned(t)  # pinned artifact read, not re-derived
+    # both pair-join sides read the PINNED z-panel (the corpus is
+    # tokenized exactly once, inside the pin's build), and the join
+    # itself broadcasts one side
+    assert pin_builds.reads(df)  # pinned artifact read, not re-derived
     assert _n(t, "Generate") == 0
     assert "BroadcastHashJoin" in t
 
@@ -147,14 +132,15 @@ def test_ncc_confusion_broadcast_rollup(spark, sf_dir):
     assert "BroadcastHashJoin" in t
 
 
-def test_adamic_adar_rides_pinned_edges(spark, sf_dir):
+def test_adamic_adar_rides_pinned_edges(spark, sf_dir, pin_builds):
     from _kafka_streams_scaffold_spark.operators import similarity
 
-    t = pi.tree(similarity.adamic_adar_links_query(spark, sf_dir))
+    df = similarity.adamic_adar_links_query(spark, sf_dir)
+    t = pi.tree(df)
     _no_python(t)
     assert "CartesianProduct" not in t
-    # both join sides read the pinned kNN edge list cache
-    assert pi.reads_pinned(t)  # pinned artifact read, not re-derived
+    # both join sides read the pinned kNN edge list
+    assert pin_builds.reads(df)  # pinned artifact read, not re-derived
 
 
 def test_contrastive_collision_dimension_rollup(spark, sf_dir):
@@ -210,14 +196,15 @@ def test_smd_one_rollup_unpivot_no_big_join(spark, sf_dir):
     assert _n(t, "HashAggregate") >= 2
 
 
-def test_littles_rides_pinned_segments(spark, sf_dir):
+def test_littles_rides_pinned_segments(spark, sf_dir, pin_builds):
     from _kafka_streams_scaffold_spark.operators import analytics
 
-    t = pi.tree(analytics.littles_law_audit_query(spark, sf_dir))
+    df = analytics.littles_law_audit_query(spark, sf_dir)
+    t = pi.tree(df)
     _no_python(t)
     assert "CartesianProduct" not in t
-    # both derivations read the pinned day-segment cache
-    assert pi.reads_pinned(t)  # pinned artifact read, not re-derived
+    # both derivations read the pinned day segments
+    assert pin_builds.reads(df)  # pinned artifact read, not re-derived
 
 
 def test_binseg_two_spine_passes_no_big_join(spark, sf_dir):

@@ -5,6 +5,7 @@ join, broadcast only of tiny sides, top-k without a global sort)."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -337,19 +338,20 @@ def test_shipping_speed_priority_buckets(spark, monkeypatch):
     assert got == {"FAST": (1, 0), "SLOW": (1, 1)}
 
 
-def test_min_cost_supplier_plan(spark, sf_dir):
-    # full_lineage pins: the part scan lives inside the pinned offers
-    # table's build plan (checkpoint pins hand consumers a leaf), and
-    # the pushdown being asserted happens in that build
-    from _kafka_streams_scaffold_spark import pinning
-
-    with pinning.full_lineage():
-        df = trade.min_cost_supplier_query(spark, sf_dir)
-        explained = plans.explain_str(df)
-        # top-100, never a full sort
-        assert "TakeOrderedAndProject" in explained
-        # type+size filters reach the part scan
-        assert any("p_type" in f for f in plans.pushed_filters(df))
+def test_min_cost_supplier_plan(spark, sf_dir, pin_builds):
+    # the part scan lives inside the pinned offers table's build plan
+    # (the consumer reads the pin's leaf), and the pushdown being
+    # asserted happens in that build
+    df = trade.min_cost_supplier_query(spark, sf_dir)
+    explained = plans.explain_str(df)
+    # top-100, never a full sort
+    assert "TakeOrderedAndProject" in explained
+    # type+size filters reach the part scan
+    pushed = re.findall(
+        r"PushedFilters: \[([^\]]*)\]",
+        "\n".join([explained, *pin_builds.explains]),
+    )
+    assert any("p_type" in f for f in pushed)
 
 
 def test_shipping_speed_priority_plan_pushes_year(spark, sf_dir):

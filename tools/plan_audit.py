@@ -16,7 +16,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from _kafka_streams_scaffold_spark import plans, registry, session  # noqa: E402
+from _kafka_streams_scaffold_spark import pinning, plans, registry, session  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -1905,14 +1905,16 @@ def main() -> None:
         "",
     ]
     for name, why in AUDIT:
-        df = qs[name](spark, SF_DIR)
+        # each entry's pins are freed before the next entry builds
+        with pinning.scope():
+            t = plans.tree(qs[name](spark, SF_DIR))
         parts += [
             f"## {name}",
             "",
             why,
             "",
             "```",
-            plans.tree(df),
+            t,
             "```",
             "",
         ]
