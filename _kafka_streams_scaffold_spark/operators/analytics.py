@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..pinning import pin as _pin
+from ..registry import query
 
 # Decimal-money helpers shared across relational modules (money.py);
 # aliased to the historical local names used throughout this file.
@@ -45,6 +46,7 @@ from .money import one_plus as _one_plus  # noqa: E402
 # Q1-style pricing summary (filter -> groupBy aggregate, no join)
 # --------------------------------------------------------------------------
 
+@query()
 def pricing_summary_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = tables.table(spark, sf_dir, "lineitem")
     disc_price = _dec("l_extendedprice") * _one_minus("l_discount")
@@ -87,6 +89,7 @@ GROUP BY l_returnflag, l_linestatus
 # Q3-style shipping priority (3-way join + top-k)
 # --------------------------------------------------------------------------
 
+@query()
 def shipping_priority_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = tables.table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
@@ -129,6 +132,7 @@ LIMIT 10
 # Q5-style local-supplier revenue (6-way star join)
 # --------------------------------------------------------------------------
 
+@query()
 def local_supplier_revenue_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = {n: tables.table(spark, sf_dir, n) for n in tables.TABLE_NAMES}
     revenue = _dec("l_extendedprice") * _one_minus("l_discount")
@@ -168,6 +172,7 @@ GROUP BY r_name, n_name
 # Window functions: top-3 orders per customer
 # --------------------------------------------------------------------------
 
+@query()
 def top_orders_per_customer_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = tables.table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
@@ -195,6 +200,7 @@ WHERE rn <= 3
 # Rollup: revenue by region/nation with subtotals
 # --------------------------------------------------------------------------
 
+@query()
 def revenue_rollup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = {n: tables.table(spark, sf_dir, n) for n in ("customer", "orders", "nation")}
     return (
@@ -223,6 +229,7 @@ GROUP BY ROLLUP(n_name)
 # Set operations + semi/anti joins
 # --------------------------------------------------------------------------
 
+@query()
 def active_rich_customers_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT: customers that have orders AND acctbal > 5000."""
     cust = tables.table(spark, sf_dir, "customer")
@@ -239,6 +246,7 @@ SELECT c_custkey FROM customer WHERE c_acctbal > 5000
 """
 
 
+@query()
 def customers_without_orders_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti join (NOT EXISTS): customers with no pending ('P') order.
     left_anti keeps the build side small — only matching order keys
@@ -259,6 +267,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o
 """
 
 
+@query()
 def customers_with_open_orders_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi join (EXISTS)."""
     cust = tables.table(spark, sf_dir, "customer")
@@ -281,6 +290,7 @@ WHERE EXISTS (SELECT 1 FROM orders o
 # Events: time-bucketed aggregation, sessionization, as-of join
 # --------------------------------------------------------------------------
 
+@query()
 def events_hourly_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window aggregate (batch form). The streaming form is
     ``window(ts, '1 hour')`` + watermark in streaming/pipeline.py;
@@ -308,6 +318,7 @@ GROUP BY 1, 2
 SESSION_GAP_MINUTES = 30
 
 
+@query()
 def user_sessions_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (gaps-and-islands): a new session starts after a
     >30 min silence per user. This is the batch-SQL equivalent of
@@ -366,6 +377,7 @@ FROM per_session GROUP BY user_id
 """
 
 
+@query()
 def asof_prev_purchase_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for every click event, the most recent strictly
     earlier 'purchase' by the same user. Implemented as a running
@@ -412,6 +424,7 @@ HOP_WINDOW_MIN = 60
 HOP_SLIDE_MIN = 30
 
 
+@query()
 def events_hopping_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping-window aggregate: 1-hour windows sliding every 30 min,
     so every event lands in exactly two windows. Batch form of the
@@ -462,6 +475,7 @@ GROUP BY 1, 2, 3
 # CUBE (multi-dimensional aggregate)
 # --------------------------------------------------------------------------
 
+@query()
 def revenue_cube_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (returnflag, linestatus): all 4 grouping combinations
     in ONE pass — Spark expands the grouping sets before the shuffle,
@@ -513,6 +527,7 @@ def _user_days(ev: DataFrame, event_type: str) -> DataFrame:
     )
 
 
+@query()
 def click_no_purchase_days_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT: (user, day) pairs with clicks but no purchases. Spark
     plans set ops as aggregates/joins on the full row — both sides
@@ -530,6 +545,7 @@ FROM events WHERE event_type = 'purchase'
 """
 
 
+@query()
 def error_and_signup_days_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT: (user, day) pairs that saw both an error and a signup."""
     ev = tables.table(spark, sf_dir, "events")
@@ -549,6 +565,7 @@ FROM events WHERE event_type = 'signup'
 # GROUPING SETS (via the SQL surface)
 # --------------------------------------------------------------------------
 
+@query()
 def revenue_grouping_sets_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS — the two single-dimension subtotals
     only (no detail rows, no grand total), which neither rollup nor
@@ -592,6 +609,7 @@ GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
 _PIVOT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 
+@query()
 def events_pivot_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user event counts pivoted to one column per event type.
     The pivot values are declared explicitly — at scale, letting Spark
@@ -617,6 +635,7 @@ GROUP BY user_id
 # ntile / percent_rank (distribution window functions)
 # --------------------------------------------------------------------------
 
+@query()
 def customer_balance_quartiles_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quartile + percent_rank of customers by account balance within
     their nation. Global-ish windows are partitioned by nation so no
@@ -651,6 +670,7 @@ WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey)
 ROLLING_N = 7
 
 
+@query()
 def rolling_user_value_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user rolling sum/avg of the last 7 events (ROWS frame).
     DECIMAL accumulation keeps the running sums bit-stable regardless
@@ -688,6 +708,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
 # Sorted string aggregation (deterministic collect)
 # --------------------------------------------------------------------------
 
+@query()
 def user_event_type_sets_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct event types per user as one sorted CSV string —
     collect_set is partition-order-dependent, so the deterministic
@@ -715,6 +736,7 @@ GROUP BY user_id
 # Q6-style revenue forecast (pure scan -> filter -> global aggregate)
 # --------------------------------------------------------------------------
 
+@query()
 def revenue_forecast_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: tight multi-predicate filter + single global
     sum. The whole query is one codegen'd scan stage + a one-row
@@ -750,6 +772,7 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01'
 """
 
 
+@query()
 def events_unpivot_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt): typed columns back to (user_id, event_type,
     cnt) rows — the inverse of events_pivot, zero-filled cells
@@ -785,6 +808,7 @@ WHERE cnt > 0
 _FUNNEL_STEPS = ("signup", "click", "purchase")
 
 
+@query()
 def funnel_conversion_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-funnel counts: users who signed up, who then clicked
     strictly after their first signup, who then purchased strictly
@@ -858,6 +882,7 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM sign) AS n_signup,
 # --------------------------------------------------------------------------
 
 
+@query()
 def retention_cohorts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly retention matrix: users cohorted by first-seen ISO week;
     cell (cohort, k) counts distinct cohort members active k weeks
@@ -939,6 +964,7 @@ GROUP BY g.cohort_week, g.week_k, s.cohort_size
 PARETO_BUCKETS = 64  # price-range partitions for the parallel skyline
 
 
+@query()
 def pareto_orders_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(o_orderkey, price_cents, o_orderdate): the Pareto-optimal
     orders in the (low price, recent date) plane — rows no other
@@ -1055,6 +1081,7 @@ WHERE (best_cheaper_date IS NULL OR best_cheaper_date < o_orderdate)
 # Cohort LTV curve
 # --------------------------------------------------------------------------
 
+@query()
 def ltv_cohorts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cohort_week, week_offset, cohort_users, buyers, revenue_cents,
     cum_revenue_cents): the lifetime-value curve per signup cohort —
@@ -1158,6 +1185,7 @@ FROM curve cv JOIN sizes s ON s.cohort_week = cv.cohort_week
 FUNNEL_WINDOW_HOURS = 72
 
 
+@query()
 def funnel_within_window_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row: (n_signup, n_click_72h, n_purchase_72h,
     click_rate, purchase_rate) — the ordered funnel with each step
@@ -1262,6 +1290,7 @@ SELECT CAST((SELECT count(*) FROM sign) AS BIGINT) AS n_signup,
 # Weekday x hour activity heatmap
 # --------------------------------------------------------------------------
 
+@query()
 def activity_heatmap_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(dow, hour, n_events, purchase_cents): the weekday-by-hour
     activity grid (the product-analytics heatmap) — event counts and
@@ -1313,6 +1342,7 @@ GROUP BY 1, 2
 # Weekly stickiness (DAU/WAU)
 # --------------------------------------------------------------------------
 
+@query()
 def stickiness_weekly_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(week, wau, avg_dau, stickiness): weekly active users, the
     week's average daily actives, and the DAU/WAU stickiness ratio —
@@ -1385,6 +1415,7 @@ FROM wau w JOIN weekly_dau d ON d.week = w.week
 # Event transition matrix (first-order Markov)
 # --------------------------------------------------------------------------
 
+@query()
 def event_transitions_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(from_type, to_type, n, p_transition): the first-order Markov
     transition matrix over each user's time-ordered event stream —
@@ -1447,6 +1478,7 @@ FROM counts c JOIN marg m ON m.from_type = c.from_type
 # Last-touch revenue attribution
 # --------------------------------------------------------------------------
 
+@query()
 def last_touch_attribution_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(touch_type, n_purchases, revenue_cents): every purchase
     attributed to the user's most recent PRIOR non-purchase event —
@@ -1510,6 +1542,7 @@ GROUP BY 1
 # Native session_window sessionization
 # --------------------------------------------------------------------------
 
+@query()
 def session_window_stats_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, session_start, session_end, n_events, value_cents):
     per-session rollup using Spark's NATIVE ``session_window``
@@ -1581,6 +1614,7 @@ GROUP BY user_id, sid
 # Event debouncing (rate limiting per key per window)
 # --------------------------------------------------------------------------
 
+@query()
 def debounce_events_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, n_kept, n_suppressed, suppression_rate): keep each
     user's FIRST event per (type, clock hour), suppress the rest —
@@ -1638,6 +1672,7 @@ GROUP BY 1
 # --------------------------------------------------------------------------
 
 
+@query()
 def transition_entropy_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(from_type, n_transitions, n_distinct_next, entropy_bits): the
     Shannon entropy of each event type's NEXT-event distribution over
@@ -1724,6 +1759,7 @@ PATH_LEN = 5  # leading events kept per session
 TOP_PATHS = 20
 
 
+@query()
 def top_session_paths_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(path, n_sessions, n_users): the TOP_PATHS most common session
     OPENINGS — each session's first PATH_LEN event types joined in
@@ -1830,6 +1866,7 @@ LIMIT {TOP_PATHS}
 IDLE_CUTOFF = "1998-01-01"  # "no order since" recency boundary
 
 
+@query()
 def idle_customer_balance_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(c_nationkey, n_custs, total_bal): TPC-H Q22's
     global-avg-scalar-subquery + anti-join shape on this schema —
@@ -1940,6 +1977,7 @@ def session_day_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query()
 def session_concurrency_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(day, n_sessions, max_concurrent): the peak number of
     simultaneously-open user sessions per day — the classic
@@ -2054,6 +2092,7 @@ FROM days JOIN peaks ON peaks.d = days.d
 # --------------------------------------------------------------------------
 
 
+@query()
 def new_vs_returning_daily_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2131,6 +2170,7 @@ _MARKOV_SCALE = 1_000_000_000
 _MARKOV_ITERS = 12
 
 
+@query()
 def markov_stationary_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, v_fp, pi): the stationary distribution of the
     first-order event-type Markov chain (the long-run fraction of
@@ -2298,6 +2338,7 @@ MARKOV_STATIONARY_ORACLE = _markov_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def revenue_attribution_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(model, channel, n_purchases, cents): purchase revenue
     attributed to the non-purchase event type ('channel') that
@@ -2380,6 +2421,7 @@ GROUP BY 2
 # --------------------------------------------------------------------------
 
 
+@query()
 def audience_overlap_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(type_a, type_b, n_a, n_b, n_both, jaccard): the user-audience
     overlap between every pair of event types — |users doing both| /
@@ -2472,6 +2514,7 @@ JOIN aud xb ON xb.event_type = t.type_b
 # --------------------------------------------------------------------------
 
 
+@query()
 def littles_law_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(day, n_sessions, busy_us_sweep, busy_us_durations,
     littles_gap, mean_concurrency, lambda_per_hour, mean_duration_s):
@@ -2595,6 +2638,7 @@ LITTLES_LAW_AUDIT_ORACLE = _littles_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def activity_streaks_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(max_streak, n_users, frac_users): how many users' LONGEST run
     of consecutive active days is exactly k — the engagement-depth

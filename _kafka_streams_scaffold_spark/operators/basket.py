@@ -21,10 +21,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 MIN_PAIR_SUPPORT = 3  # co-occurrence threshold for emitted pairs
 
 
+@query()
 def basket_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(part_a, part_b, n_both, n_a, n_b, n_orders, lift): part pairs
     co-occurring in at least MIN_PAIR_SUPPORT orders, with their
@@ -111,6 +113,7 @@ CROSS JOIN total t
 MIN_TRIPLE_SUPPORT = 2
 
 
+@query()
 def basket_triples_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(part_a, part_b, part_c, n_all, n_a, n_b, n_c, n_orders,
     lift3): part triples co-occurring in >= MIN_TRIPLE_SUPPORT orders,

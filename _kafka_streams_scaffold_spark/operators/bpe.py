@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..pinning import pin as _pin
+from ..registry import query
 from .textops import tokens_expr
 
 BPE_ROUNDS = 3
@@ -87,6 +88,7 @@ def _top1(pairs: DataFrame) -> DataFrame:
     )
 
 
+@query(family="cur")
 def bpe_train_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(round, pair, merged, weight): the first BPE_ROUNDS merges the
     corpus vocabulary learns, with each merge's frequency-weighted
@@ -167,6 +169,7 @@ def _trained_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(family="cur")
 def bpe_encode_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(token, occurrences, n_words): the subword vocabulary AFTER the
     BPE_ROUNDS learned merges are applied — the encode half of the
@@ -270,6 +273,7 @@ ORDER BY occurrences DESC, token LIMIT 100
 BPE_ENCODE_ORACLE = _build_encode_oracle()
 
 
+@query(family="cur")
 def bpe_doc_tokens_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_words, n_tokens): each document's length under the
     TRAINED tokenizer — the number a packing/budgeting pipeline

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 
 def latest_per_key(df: DataFrame, key: str, order: list[str]) -> DataFrame:
@@ -31,6 +32,7 @@ def latest_per_key(df: DataFrame, key: str, order: list[str]) -> DataFrame:
     )
 
 
+@query()
 def ktable_latest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables.table(spark, sf_dir, "events")
     return latest_per_key(ev, "user_id", ["ts", "event_id"]).select(

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 from .multimodal import with_payload
 
 CHUNK_BYTES = 64  # fixed-size chunker slice
@@ -63,6 +64,7 @@ _GEAR = [
 # Fixed-size chunking (oracle-checked)
 # --------------------------------------------------------------------------
 
+@query()
 def payload_chunks_fixed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_chunks, n_dup_chunks, dup_fraction): every payload
     cut into CHUNK_BYTES slices; a chunk is a duplicate if its digest
@@ -214,6 +216,11 @@ def payload_chunks_cdc(p: DataFrame) -> DataFrame:
     return p.select("doc_id", "payload").mapInPandas(_batches, CDC_SCHEMA)
 
 
+# Content-defined chunking: the Gear rolling hash is not
+# SQL-expressible — rows-only; its contract (determinism,
+# coverage, bounds, boundary re-synchronization under edits)
+# is pinned in tests/test_chunking.py.
+@query(oracle=None)
 def payload_chunks_cdc_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_chunks, n_dup_chunks, mean_chunk_bytes): per-doc
     rollup of the content-defined chunk stream with the same

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from .. import tables
 from ..pinning import checkpoint, parallel, pin
 from ..pinning import shared_pin as _shared_pin
+from ..registry import query
 from .dedup import simhash_pairs_query
 
 MAX_ROUNDS = 50  # safety bound; real convergence is diameter-bounded
@@ -300,6 +301,7 @@ def connected_components(
     )
 
 
+@query(family="graph")
 def dedup_clusters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical duplicate clusters from the SimHash near-dup pairs:
     every document labeled with the min doc_id of its component
@@ -338,6 +340,7 @@ GROUP BY doc_id
 """
 
 
+@query(family="sim")
 def embedding_dup_clusters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embedding-space twin of dedup_clusters: canonical clusters
     over the IVF near-dup pair graph (cosine >= tau within bounded
@@ -485,6 +488,7 @@ def pagerank(
     return ranks.select("doc_id", F.col("rank").alias("pagerank"))
 
 
+@query(family="graph")
 def dup_pagerank_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the SimHash near-dup pair graph: isolated docs
     settle at the 0.15 base; hub documents of dense dup clusters rank
@@ -541,6 +545,7 @@ DUP_PAGERANK_ORACLE = _pagerank_oracle()
 # --------------------------------------------------------------------------
 
 
+@query(family="graph")
 def cluster_keep_list_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup pipeline's END PRODUCT: one keep/drop decision per
     document — keep the highest-PageRank member of each near-dup
@@ -647,6 +652,7 @@ CLUSTER_KEEP_LIST_ORACLE = _keep_list_oracle()
 # --------------------------------------------------------------------------
 
 
+@query(oracle="_degrees_oracle", family="graph")
 def dup_graph_degrees_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(degree_bucket, n_docs, max_degree): log2-bucketed degree
     distribution of the SimHash near-dup graph, including the
@@ -719,6 +725,7 @@ KCORE_K = 2  # minimum induced degree to stay in the core
 KCORE_ORACLE_ROUNDS = 12
 
 
+@query(family="graph")
 def kcore_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, core_degree): the K-core of the SimHash near-dup graph
     — iteratively peel every node whose degree in the surviving
@@ -836,6 +843,7 @@ KCORE_ORACLE = _kcore_oracle()
 # --------------------------------------------------------------------------
 
 
+@query(oracle="_source_modularity_oracle", family="graph")
 def source_modularity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_docs_in_graph, e_intra, d_sum, q_num, q_contrib):
     Newman modularity of the SimHash near-dup graph with respect to
@@ -961,6 +969,7 @@ def _source_modularity_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="_degree_assortativity_oracle", family="graph")
 def degree_assortativity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_edges, sxy, sx, sx2, assortativity): Newman's degree
     assortativity coefficient of the SimHash near-dup graph — the
@@ -1061,6 +1070,7 @@ def _degree_assortativity_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(family="graph")
 def dedup_representative_stats_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1157,6 +1167,7 @@ WHERE n_docs > 0
 # --------------------------------------------------------------------------
 
 
+@query(family="sim")
 def semantic_dedup_keep_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id, cluster_size, quality_score, keep): the
     SEMANTIC dedup end product — embedding near-dup clusters
@@ -1268,6 +1279,7 @@ SEMANTIC_DEDUP_KEEP_ORACLE = _semantic_keep_oracle()
 _COLLISION_BATCH = 1024
 
 
+@query(family="graph")
 def contrastive_collision_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

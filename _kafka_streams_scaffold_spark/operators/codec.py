@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 IMG_MAGIC = b"TIMG"
 AUD_MAGIC = b"TAUD"
@@ -199,6 +200,7 @@ def _coded_payload_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(family="codec")
 def codec_moments_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_moments(_coded_payload_table(spark, sf_dir))
 
@@ -298,6 +300,7 @@ def decode_audit(df: DataFrame) -> DataFrame:
     return df.mapInPandas(_batches, schema=AUDIT_SCHEMA)
 
 
+@query(family="codec")
 def codec_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audit over a corpus where every 7th container is deliberately
     truncated (one byte dropped) — the corruption and its detection

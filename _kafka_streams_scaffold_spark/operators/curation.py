@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 from .dedup import BENCHMARK_DOC_MAX, contamination_query, exact_dedup_query
 from .textops import (
     _GOPHER_MAX_DUP_FRAC,
@@ -41,6 +42,7 @@ KEEP_LANG = "en"
 MAX_CONTAMINATED_SHINGLES = 2
 
 
+@query(family="cur")
 def corpus_keep_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-11: a ``cur.keep`` shared pin — corpus_keep_full (and
     # through it training_manifest) re-derived this whole five-gate
@@ -157,6 +159,7 @@ MAX_SURPRISAL = 3.6        # unigram-LM tier: gibberish/noise ceiling (nats)
 MIN_NOVELTY = 0.01         # n-gram tier: must contribute SOMETHING new
 
 
+@query(family="cur")
 def corpus_keep_full_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """corpus_keep + the round-3 tiers in one plan: a document ships
     to training only if it additionally (a) is not dominated by
@@ -270,6 +273,7 @@ N_SHARDS = 8
 _SHARD_SEED = 41
 
 
+@query(family="cur")
 def training_manifest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(split, shard, n_docs, n_tokens, n_sources): the manifest a
     training run consumes — every document that SURVIVES the full
@@ -355,6 +359,7 @@ TRAINING_MANIFEST_ORACLE = _build_manifest_oracle()
 CURRICULUM_BOUNDS = (200, 400, 800)
 
 
+@query()
 def curriculum_pacing_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(stage, n_docs, n_tokens, mean_chars, cum_token_pml): the
     length-based CURRICULUM schedule — documents banded short to long
@@ -461,6 +466,7 @@ CURRICULUM_PACING_ORACLE = _curriculum_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def gate_ordering_plan_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(position, gate, n_pass, n_total, surviving_frac,
     expected_rows): the cascade-ordering plan for the corpus quality
@@ -629,6 +635,7 @@ FROM planned
 _SKY_FP = 1_000_000_000
 
 
+@query()
 def skyline_quality_length_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -757,6 +764,7 @@ GATE_COSTS: dict[str, int] = {
 }
 
 
+@query()
 def gate_ordering_cost_plan_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

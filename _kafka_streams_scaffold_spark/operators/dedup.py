@@ -34,12 +34,14 @@ from .. import tables
 from ..pinning import parallel as _parallel
 from ..pinning import pin as _pin
 from ..pinning import shared_pin as _shared_pin
+from ..registry import query
 from .textops import fingerprint_expr
 
 # --------------------------------------------------------------------------
 # Exact dedup
 # --------------------------------------------------------------------------
 
+@query()
 def exact_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group identical (normalized) texts; keep the smallest doc_id as
     the canonical representative."""
@@ -264,6 +266,7 @@ def df_capped_shingles(shingle_df: DataFrame) -> DataFrame:
     return shingle_df.join(F.broadcast(hot), "shingle", "left_anti")
 
 
+@query(oracle="NGRAM_JACCARD_ORACLE", family="dedup")
 def ngram_jaccard_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.table(spark, sf_dir, "documents")
     inter = _capped_inter_table(docs)
@@ -393,6 +396,7 @@ def lsh_candidates(sigs: DataFrame) -> DataFrame:
     )
 
 
+@query(oracle="MINHASH_LSH_ORACLE", family="dedup")
 def minhash_lsh_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate generation + exact-jaccard verification.
 
@@ -520,6 +524,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return bit_sums.select("doc_id", F.expr(combine).alias("simhash"))
 
 
+@query()
 def simhash_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_signatures(tables.table(spark, sf_dir, "documents"))
 
@@ -546,6 +551,7 @@ FROM bit_sums
 """
 
 
+@query()
 def simhash_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by SimHash: block on 5 bands (pigeonhole-complete
     for the d <= HAMMING_THRESHOLD = 4 contract — see SIMHASH_BANDS),
@@ -629,6 +635,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {HAMMING_THRESHOLD}
 BENCHMARK_DOC_MAX = 50  # doc_id < 50 stands in for the benchmark/eval set
 
 
+@query()
 def contamination_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-set decontamination: which corpus documents share
     word-3-gram shingles with the benchmark set (here: doc_id <
@@ -675,6 +682,7 @@ GROUP BY s.doc_id
 BOILER_DENOM = 10
 
 
+@query()
 def boilerplate_ngrams_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document boilerplate load: how many of its distinct
     3-gram shingles occur in more than 10% of ALL documents, and the
@@ -750,6 +758,7 @@ GROUP BY s.doc_id
 # --------------------------------------------------------------------------
 
 
+@query()
 def doc_ngram_novelty_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_shingles, n_novel, novelty): for every document, the
     fraction of its distinct 3-gram shingles whose FIRST corpus
@@ -818,6 +827,7 @@ _INC_BUCKET_DUCK = (
 )
 
 
+@query(oracle="_incremental_oracle")
 def incremental_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_corpus_dups, best_match, min_hamming): for every
     INCOMING document (content-stable ~10% split), its near-duplicates
@@ -924,6 +934,7 @@ cand AS (
 )"""
 
 
+@query(family="dedup")
 def edit_distance_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, edit_dist, edit_sim): near-dup pairs whose
     EDIT-DISTANCE similarity over a bounded text prefix clears
@@ -1007,6 +1018,7 @@ _LINE_SPLIT_DUCK = (
 )
 
 
+@query()
 def line_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_lines, n_dup_lines, dup_fraction): per-document
     fraction of lines that appear VERBATIM elsewhere in the corpus —
@@ -1077,6 +1089,7 @@ GROUP BY l.doc_id
 CONTAINMENT_THRESHOLD = 0.9
 
 
+@query(family="dedup")
 def containment_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(inner_doc, outer_doc, containment, jaccard): pairs where the
     SMALLER document's shingles are almost all present in the larger
@@ -1206,6 +1219,7 @@ def _tier_pairs(spark: SparkSession, sf_dir: str, tier: str) -> DataFrame:
     return _shared_pin((f"dedup.tier_pairs.{tier}", docs), build)
 
 
+@query(family="dedup")
 def dedup_tier_agreement_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(tier_a, tier_b, n_a, n_b, n_both): pairwise overlap between
     the four near-dup detectors' pair sets (SimHash bands, MinHash
@@ -1359,6 +1373,10 @@ PF_TAU_NUM = 4
 PF_TAU_DEN = 5
 
 
+# Lossless prefix-filtered set-similarity join: the oracle is the
+# NAIVE exact tau-join, so the hash check is a machine-checked
+# completeness proof of the prefix filter.
+@query(family="dedup")
 def prefix_filter_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-12: the PPJoin pair set is a ``dedup.``-scoped SHARED PIN
     (the ``_tier_pairs`` pattern extended to the non-tier blocking
@@ -1585,6 +1603,7 @@ def _winnow_fps(docs: DataFrame) -> DataFrame:
     return _shared_pin(("dedup.winnow_fps", docs), build)
 
 
+@query(family="dedup")
 def winnowing_fingerprints_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_grams, n_fingerprints, min_fp, fp_checksum): the
     winnowing fingerprint set of each document — slide a window of
@@ -1676,6 +1695,7 @@ WINNOWING_FINGERPRINTS_ORACLE = _winnow_oracle()
 WINNOW_MIN_SHARED = 2  # shared fingerprints to become a candidate pair
 
 
+@query(family="dedup")
 def winnowing_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-12: shared-pinned pair set (see prefix_filter_pairs_query
     — same pattern, same reason: blocking_recall_audit re-derived this
@@ -1817,6 +1837,7 @@ SNM_KEY_LEN = 24  # normalized sort-key prefix length
 SNM_BLOCK_LEN = 4  # leading chars that define the block
 
 
+@query(family="dedup")
 def sorted_neighborhood_pairs_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1986,6 +2007,7 @@ _BLOCKING_STRATEGIES = (
 )
 
 
+@query(family="dedup")
 def blocking_recall_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(strategy, n_emitted, n_true, n_hit, recall): every candidate-
     generation strategy in the module — MinHash bands, SimHash
@@ -2134,6 +2156,7 @@ BLOCKING_RECALL_AUDIT_ORACLE = _blocking_recall_oracle()
 # --------------------------------------------------------------------------
 
 
+@query(family="dedup")
 def detector_kappa_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_docs, flagged_minhash, flagged_simhash, flagged_both,
     observed_agreement, expected_agreement, kappa): Cohen's kappa
@@ -2266,6 +2289,7 @@ FROM tab
 # --------------------------------------------------------------------------
 
 
+@query(family="dedup")
 def minhash_estimate_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, est_matches, est_jaccard, exact_jaccard,
     abs_err): for every LSH candidate pair, the MinHash ESTIMATE of
@@ -2384,6 +2408,7 @@ MINHASH_ESTIMATE_AUDIT_ORACLE = _minhash_estimate_oracle()
 # --------------------------------------------------------------------------
 
 
+@query(family="dedup")
 def dedup_token_savings_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(tier, n_docs_dropped, tokens_dropped, tokens_total,
     savings_pml): the TRAINING-TOKEN value of each near-dup detector —
@@ -2504,6 +2529,7 @@ DEDUP_TOKEN_SAVINGS_ORACLE = _token_savings_oracle()
 # --------------------------------------------------------------------------
 
 
+@query(family="dedup")
 def source_dedup_matrix_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source_a, source_b, n_pairs, n_cross): the near-dup pair mass
     between every ordered source pair (source_a <= source_b
@@ -2562,6 +2588,7 @@ MCNEMAR_A = "minhash"
 MCNEMAR_B = "simhash"
 
 
+@query(family="dedup")
 def detector_mcnemar_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_discordant_a, n_discordant_b, n_both, chi2): McNemar's
     paired test on the two cheap near-dup detectors' decisions over
@@ -2666,6 +2693,7 @@ DETECTOR_MCNEMAR_ORACLE = _mcnemar_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def simhash_threshold_sweep_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2762,6 +2790,7 @@ FROM cand GROUP BY 1
 # --------------------------------------------------------------------------
 
 
+@query(family="dedup")
 def dup_capture_recapture_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2863,6 +2892,7 @@ DUP_CAPTURE_RECAPTURE_ORACLE = _capture_recapture_oracle()
 _NOV_FP = 1_000_000_000
 
 
+@query()
 def novelty_decay_curve_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(decile, n_docs, mean_novelty): how per-document 3-gram novelty
     (the ``doc_ngram_novelty`` fraction of shingles this doc is the
@@ -2971,6 +3001,7 @@ def _tier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(family="dedup")
 def detector_cochran_q_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_univ, t_simhash, t_minhash, t_ngram, t_edit, sum_r, sum_r2,
     q): Cochran's Q test across ALL FOUR near-dup detectors at once —
@@ -3083,6 +3114,7 @@ DETECTOR_COCHRAN_Q_ORACLE = _cochran_q_oracle()
 # --------------------------------------------------------------------------
 
 
+@query(family="dedup")
 def fleiss_kappa_detectors_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3221,6 +3253,7 @@ FLEISS_KAPPA_DETECTORS_ORACLE = _fleiss_kappa_oracle()
 # --------------------------------------------------------------------------
 
 
+@query(family="dedup")
 def kendall_w_detectors_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_docs, n_tiers, s4, tie_sum, w): Kendall's coefficient of
     concordance W across ALL FOUR detectors' per-document dup-DEGREE
@@ -3436,6 +3469,7 @@ def _lsh_scheme_curve(bands: int, rows: int) -> tuple[float, float]:
     return t50, p_hit
 
 
+@query(family="dedup")
 def lsh_param_plan_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bands, rows_per_band, n_buckets, collision_buckets,
     max_bucket, cand_pairs, t50, p_hit): the LSH banding PLANNER —

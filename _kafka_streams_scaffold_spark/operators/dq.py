@@ -24,12 +24,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 
 def _cnt(cond: F.Column) -> F.Column:
     return F.sum(F.when(cond, 1).otherwise(0)).cast("bigint")
 
 
+@query()
 def data_quality_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Violation counts per named rule, always emitting every rule
     (zero-violation rules appear with 0 — an audit that silently drops
@@ -139,6 +141,7 @@ WHERE NOT EXISTS (
 # Distribution drift (chi-square between time halves)
 # --------------------------------------------------------------------------
 
+@query()
 def distribution_drift_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bucket, n_baseline, n_current, p_baseline, p_current,
     chi2_contrib): data-drift audit of the event-value distribution —
@@ -251,6 +254,7 @@ import math as _math
 _BENFORD_P = {d: _math.log10(1.0 + 1.0 / d) for d in range(1, 10)}
 
 
+@query()
 def benford_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(digit, n, p_observed, p_expected, chi2_contrib): first-
     significant-digit distribution of order totals against Benford's
@@ -341,6 +345,7 @@ _FK_EDGES = [
 ]
 
 
+@query()
 def referential_integrity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(relationship, n_rows, n_distinct_fk, n_orphans): orphan audit
     over the WHOLE foreign-key graph — one row per FK edge, always
@@ -425,6 +430,7 @@ KANON_K = 5  # the usual "safe" equivalence-class floor
 _QI_COLS = ("c_nationkey", "c_mktsegment")
 
 
+@query()
 def k_anonymity_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(class_size_bucket, n_classes, n_rows, at_risk): the
     k-anonymity readout over the customer table's quasi-identifier
@@ -481,6 +487,7 @@ GROUP BY 1
 # --------------------------------------------------------------------------
 
 
+@query()
 def freshness_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, last_seen, lag_minutes, n_last_day): per event
     type, how stale its newest event is relative to the NEWEST event
@@ -561,6 +568,7 @@ _ENUM_DOMAINS = [
 ]
 
 
+@query()
 def enum_domain_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(contract, n_rows, n_violations, example_value): every
     categorical column checked against its declared enum — one
@@ -610,6 +618,7 @@ ENUM_DOMAIN_AUDIT_ORACLE = _enum_oracle()
 # Sequence integrity: gaps/duplicates in the event id space
 # --------------------------------------------------------------------------
 
+@query()
 def sequence_gap_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row audit of the event_id sequence: (n_rows, min_id,
     max_id, n_missing, n_dup). A dense producer sequence with
@@ -657,6 +666,7 @@ FROM events
 # Out-of-order depth: the watermark-tuning audit
 # --------------------------------------------------------------------------
 
+@query()
 def watermark_lag_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, n_events, n_late, max_late_s, avg_late_s): how far
     event timestamps run BEHIND the running maximum in arrival order
@@ -731,6 +741,7 @@ _LDIV_SENSITIVE = "cast(floor(c_acctbal / 2000.0) as bigint)"
 _LDIV_SENSITIVE_DUCK = "CAST(floor(c_acctbal / 2000.0) AS BIGINT)"
 
 
+@query()
 def l_diversity_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l, n_classes, n_rows, at_risk): the l-diversity companion to
     k_anonymity_audit — k-anonymity alone doesn't stop attribute
@@ -793,6 +804,7 @@ TCLOSE_T_NUM = 1  # threshold t = 1/5
 TCLOSE_T_DEN = 5
 
 
+@query()
 def t_closeness_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(c_nationkey, c_mktsegment, n_rows, t_num, t_den, t_closeness,
     at_risk): the t-closeness readout (Li, Li & Venkatasubramanian
@@ -964,6 +976,7 @@ _DP_H_DUCK = (
 )
 
 
+@query()
 def dp_laplace_counts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, day, true_n, noise_fp, noisy_n): per-(type, day)
     event counts released through the Laplace mechanism (eps = 1,
@@ -1037,6 +1050,7 @@ DP_LAPLACE_COUNTS_ORACLE = _dp_oracle()
 DP_TOPK_K = 3  # released list length
 
 
+@query()
 def dp_topk_release_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, true_n, noise_fp, noisy_n): the DP_TOPK_K most
     frequent event types released via REPORT-NOISY-MAX — per-type
@@ -1129,6 +1143,7 @@ _FD_CANDIDATES = (
 )
 
 
+@query()
 def fd_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lhs, rhs, n_lhs_values, n_violating, holds): TANE-style
     functional-dependency check for each candidate lhs -> rhs over
@@ -1219,6 +1234,7 @@ FD_AUDIT_ORACLE = _fd_oracle()
 DP_CLIP_CENTS = 10_000  # clip bound C: values clipped to [0, $100]
 
 
+@query()
 def dp_clipped_mean_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, n, clipped_sum_cents, noise_fp, noisy_mean_cents):
     the differentially-private mean event value per type — each
@@ -1302,6 +1318,7 @@ DP_CLIPPED_MEAN_ORACLE = _dp_clipped_mean_oracle()
 _PSI_FP = 1_000_000_000_000  # 1e12 per-bucket fixed-point scale
 
 
+@query()
 def psi_drift_score_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bucket, n_baseline, n_current, term_fp, psi_contrib): the
     Population Stability Index between the baseline and current

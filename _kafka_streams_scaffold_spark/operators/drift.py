@@ -26,12 +26,14 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..pinning import pin as _pin
+from ..registry import query
 
 # --------------------------------------------------------------------------
 # Exact two-sample Kolmogorov-Smirnov over per-source doc lengths
 # --------------------------------------------------------------------------
 
 
+@query()
 def ks_drift_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src_a, src_b, n_a, n_b, ks_num, ks): the EXACT two-sample KS
     statistic between every pair of sources on the ``n_chars``
@@ -171,6 +173,7 @@ def _mmd_phi(vec: str, d: int, engine: str) -> str:
     return f"(({terms}) * ({terms}))"
 
 
+@query()
 def mmd_label_drift_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(label_a, label_b, n_a, n_b, mmd2): squared Maximum Mean
     Discrepancy between every pair of embedding labels under a
@@ -279,6 +282,7 @@ MMD_LABEL_DRIFT_ORACLE = _mmd_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def ab_proportion_test_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_a, n_b, conv_a, conv_b, z): the two-proportion z-statistic
     for "did arm B convert differently from arm A", with users
@@ -394,6 +398,7 @@ WHERE n_a + n_b > 0
 _CENTS = "CAST(floor(value * 100) AS BIGINT)"
 
 
+@query()
 def simpson_reversal_audit_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -526,6 +531,7 @@ def _jl_proj(vec: str, j: int, engine: str) -> str:
     return "(" + " + ".join(parts) + ")"
 
 
+@query()
 def jl_projection_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bucket, n_pairs): the distortion histogram of a Rademacher
     Johnson-Lindenstrauss projection 64 -> JL_K — for each pair in a
@@ -640,6 +646,7 @@ _LN2 = 0.6931471805599453
 _JS_FP = 1_000_000_000_000  # 1e12 fixed-point scale for per-token terms
 
 
+@query()
 def js_source_drift_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_src, n_rest, rest_seen, core_fp, jsd): the
     Jensen-Shannon divergence between each source's unigram token
@@ -788,6 +795,7 @@ FROM per_src
 _CUPED_SPLIT = "1998-01-01"
 
 
+@query()
 def cuped_uplift_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(variant, n_users, x_mean, y_mean, theta, y_cuped): the CUPED
     (Controlled-experiment Using Pre-Existing Data) readout of an A/B
@@ -931,6 +939,7 @@ FROM pv CROSS JOIN mom m
 # --------------------------------------------------------------------------
 
 
+@query()
 def did_uplift_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_a, n_b, pre_a, post_a, pre_b, post_b, uplift_naive, did):
     the difference-in-differences estimate over the SAME per-customer
@@ -1039,6 +1048,7 @@ FROM cells
 # --------------------------------------------------------------------------
 
 
+@query()
 def smd_balance_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(covariate, n_a, n_b, mean_a, mean_b, smd): the standardized
     mean difference of three pre-treatment covariates between the
@@ -1231,6 +1241,7 @@ _PH_DELTA = 25
 _PH_LAMBDA = 500
 
 
+@query()
 def page_hinkley_drift_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(day, n_events, v_stat, ph_stat, alarm): the Page-Hinkley
     sequential change detector over the daily event-count series —
@@ -1353,6 +1364,7 @@ FROM v
 # --------------------------------------------------------------------------
 
 
+@query()
 def ad_ksample_sources_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_total, n_groups, n_values, a2akn, mean_h0): the k-sample
     Anderson-Darling statistic (Scholz & Stephens 1987, the

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..functions.xhash import hash60_duck, hash60_spark
+from ..registry import query
 
 N_FOLDS = 5
 _FOLD_SEED = 31
@@ -33,6 +34,7 @@ _FH_SEED = 37
 # K-fold leave-out target encoding
 # --------------------------------------------------------------------------
 
+@query()
 def target_encoding_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, fold, n_rows, encoding_cents): the leakage-safe
     mean-target encoding table — for every (category, fold), the mean
@@ -130,6 +132,7 @@ CROSS JOIN grand g
 # Hashing-trick bag-of-words features
 # --------------------------------------------------------------------------
 
+@query()
 def feature_hashing_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, bucket, weight): sparse hashed bag-of-words rows —
     every token hashed into HASH_BUCKETS buckets, per-(doc, bucket)
@@ -177,6 +180,7 @@ CAL_BUCKETS = 10
 _CAL_FP = 10**6
 
 
+@query()
 def calibration_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bucket, n_test, avg_pred, actual_rate, brier): the reliability
     table + Brier score of a leakage-free categorical rate model — the

@@ -26,12 +26,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 # --------------------------------------------------------------------------
 # Mann-Whitney U / AUC: each source's doc-length shift vs the rest
 # --------------------------------------------------------------------------
 
 
+@query()
 def mann_whitney_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_src, n_rest, u2, auc): the exact Mann-Whitney U of
     each source's ``n_chars`` sample against the REST of the corpus,
@@ -145,6 +147,7 @@ FROM r2 r, tot t
 # --------------------------------------------------------------------------
 
 
+@query()
 def kendall_tau_trend_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_days, n_pairs, n_concordant, n_discordant, n_ties, tau_a):
     Kendall's tau over the (day-index, daily purchase cents) series —
@@ -234,6 +237,7 @@ FROM (SELECT CAST(count(*) AS BIGINT) AS n_days FROM daily) n, pairs p
 # --------------------------------------------------------------------------
 
 
+@query()
 def spearman_trend_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_days, num, den_x, den_y, rho): Spearman's rank correlation
     of daily purchase cents against time — Pearson on (2x-scaled)
@@ -351,6 +355,7 @@ FROM m
 _CVM_FP = 1_000_000_000  # per-term fixed-point scale (1e9)
 
 
+@query()
 def cvm_drift_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src_a, src_b, n_a, n_b, t_fp, cvm): the Cramér-von Mises
     two-sample statistic between every pair of sources on ``n_chars``
@@ -502,6 +507,7 @@ FROM terms GROUP BY 1, 2, 3, 4
 # --------------------------------------------------------------------------
 
 
+@query()
 def pettitt_changepoint_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -613,6 +619,7 @@ LIMIT 1
 _WILSON_Z = 1.96  # 95% two-sided normal quantile, baked literal
 
 
+@query()
 def wilson_ci_segments_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_docs, n_en, p_hat, ci_lo, ci_hi): each source's
     English-document proportion with its Wilson score 95% interval —
@@ -701,6 +708,7 @@ FROM agg
 # --------------------------------------------------------------------------
 
 
+@query()
 def eb_rate_shrinkage_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_docs, n_en, raw_rate, m_strength, shrunk_rate): each
     source's English-doc rate shrunk toward the cross-source mean by
@@ -829,6 +837,7 @@ FROM rates r, strength s
 # --------------------------------------------------------------------------
 
 
+@query()
 def cramers_v_association_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -962,6 +971,7 @@ FROM agg
 # --------------------------------------------------------------------------
 
 
+@query()
 def hodges_lehmann_shift_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1083,6 +1093,7 @@ FROM (
 # --------------------------------------------------------------------------
 
 
+@query()
 def source_concentration_audit_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1179,6 +1190,7 @@ FROM agg, top
 # --------------------------------------------------------------------------
 
 
+@query()
 def quantile_normalize_map_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1307,6 +1319,7 @@ _BH_Q_INV = 20      # FDR level q = 1/20 = 0.05 as an exact integer
 _BH_FP = 10**12     # p-value fixed-point scale
 
 
+@query()
 def bh_fdr_drift_gates_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src_a, src_b, p_fp, p_value, p_rank, rejected): the
     Benjamini-Hochberg step-up procedure at FDR q = 0.05 over the
@@ -1447,6 +1460,7 @@ BH_FDR_DRIFT_GATES_ORACLE = _bh_oracle()
 LJUNG_LAGS = 7
 
 
+@query()
 def ljung_box_stat_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lag, n_days, r, q_cum): lag-1..7 autocorrelations of daily
     purchase cents with the cumulative Ljung-Box Q — the portmanteau
@@ -1579,6 +1593,7 @@ FROM per_lag
 # --------------------------------------------------------------------------
 
 
+@query()
 def mann_kendall_trend_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_days, s_stat, var18, z): the Mann-Kendall trend TEST on
     daily purchase cents — S = #concordant - #discordant day pairs
@@ -1691,6 +1706,7 @@ FROM v
 _LOO_FP = 1_000_000_000
 
 
+@query()
 def loo_source_sensitivity_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1811,6 +1827,7 @@ LOO_SOURCE_SENSITIVITY_ORACLE = _loo_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def welch_t_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_src, n_rest, mean_src, mean_rest, welch_t,
     cohens_d): Welch's unequal-variance t statistic and Cohen's d for
@@ -1934,6 +1951,7 @@ FROM m
 # --------------------------------------------------------------------------
 
 
+@query()
 def cochran_armitage_trend_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2062,6 +2080,7 @@ FROM m
 # --------------------------------------------------------------------------
 
 
+@query()
 def anova_source_lengths_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2172,6 +2191,7 @@ FROM agg
 # --------------------------------------------------------------------------
 
 
+@query()
 def interarrival_burstiness_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2280,6 +2300,7 @@ FROM d
 _TS_CI_Z = 1.96
 
 
+@query()
 def theil_sen_ci_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_days, n_pairs, ts_slope, ci_lo, ci_hi): the Theil-Sen daily
     revenue slope with Sen's (1968) rank-based 95% confidence
@@ -2451,6 +2472,7 @@ GROUP BY b.n, b.m
 _CCF_MAX_LAG = 7
 
 
+@query()
 def cross_correlation_lags_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2602,6 +2624,7 @@ _SPRT_UPPER = _math.log(0.95 / 0.05)
 _SPRT_LOWER = _math.log(0.05 / 0.95)
 
 
+@query()
 def sprt_daily_decision_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2737,6 +2760,7 @@ FROM flagged
 _QQ_PS = (10, 25, 50, 75, 90)
 
 
+@query()
 def qq_shift_profile_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, p, n_src, src_q, pool_q, shift): each source's exact
     doc-length quantiles at p in {10,25,50,75,90} against the pooled
@@ -2870,6 +2894,7 @@ QQ_SHIFT_PROFILE_ORACLE = _qq_oracle()
 _LR_FP = 1_000_000_000  # 1e9 per-time fixed point for O-E and Var terms
 
 
+@query()
 def logrank_cohorts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_times, n_a, n_b, d_total, ome_fp, var_fp, chi2): the
     log-rank (Mantel-Cox) test between the two parity cohorts'
@@ -3073,6 +3098,7 @@ LOGRANK_COHORTS_ORACLE = _logrank_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def kruskal_wallis_sources_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3227,6 +3253,7 @@ WHERE t.n > 1 AND a.n_groups > 1
 # --------------------------------------------------------------------------
 
 
+@query()
 def brown_forsythe_lengths_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3381,6 +3408,7 @@ FROM agg
 # --------------------------------------------------------------------------
 
 
+@query()
 def friedman_event_mix_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_blocks, k_treatments, s4, denom4, chi2): the Friedman
     blocked-rank test over the day x event-type volume matrix — within
@@ -3543,6 +3571,7 @@ WHERE d.n > 0 AND d.k > 1
 # --------------------------------------------------------------------------
 
 
+@query()
 def wilcoxon_signed_rank_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3713,6 +3742,7 @@ FROM sums s CROSS JOIN ties ti CROSS JOIN total t
 # --------------------------------------------------------------------------
 
 
+@query()
 def mood_median_test_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_cells, n_groups, grand_median, n_above, chi2): Mood's
     median test of per-day order counts across the five order
@@ -3847,6 +3877,7 @@ FROM agg a CROSS JOIN med m
 # --------------------------------------------------------------------------
 
 
+@query()
 def cliffs_delta_sources_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3986,6 +4017,7 @@ FROM pairs
 # --------------------------------------------------------------------------
 
 
+@query()
 def jonckheere_trend_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_total, n_groups, j2, e2, var_j, z): the Jonckheere-Terpstra
     test of an ORDERED alternative — do orders' line-item counts
@@ -4248,6 +4280,7 @@ FROM gm g CROSS JOIN tm t CROSS JOIN jstat j
 # --------------------------------------------------------------------------
 
 
+@query()
 def dunn_posthoc_sources_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -4405,6 +4438,7 @@ WHERE a.source < b.source
 # --------------------------------------------------------------------------
 
 
+@query()
 def ansari_bradley_halves_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -4591,6 +4625,7 @@ FROM agg
 _CMH_VALUE_THRESHOLD = 50.0
 
 
+@query()
 def cmh_event_value_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_strata, n_events, sum_a, sum_e, sum_v, cmh): the
     Cochran-Mantel-Haenszel test of click-vs-view association with
@@ -4724,6 +4759,7 @@ FROM agg
 # --------------------------------------------------------------------------
 
 
+@query()
 def somers_d_priority_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_total, c_pairs, d_pairs, tx_pairs, ty_pairs, d_yx, d_xy,
     tau_b): ordinal association between an order's priority level
@@ -4916,6 +4952,7 @@ FROM cd CROSS JOIN tx t CROSS JOIN ty y
 # --------------------------------------------------------------------------
 
 
+@query()
 def welch_anova_sources_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -5122,6 +5159,7 @@ FROM fin
 # --------------------------------------------------------------------------
 
 
+@query()
 def quade_event_mix_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_blocks, k_treatments, a4, b4, f_stat): the Quade test over
     the same day x event-type volume matrix as ``friedman_event_mix``

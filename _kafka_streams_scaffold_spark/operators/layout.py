@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 Z_BITS = 16  # bits kept per dimension after range normalization
 Z_PREFIX_BITS = 6  # top bits of the z-value = "file" boundary (64 buckets)
@@ -49,6 +50,7 @@ def _interleave(x: str, y: str, engine: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+@query()
 def zorder_layout_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(zbucket, n_rows, custkey_lo, custkey_hi, day_lo, day_hi):
     orders bucketed by the top Z_PREFIX_BITS of their Morton key over
@@ -137,6 +139,7 @@ ZORDER_LAYOUT_ORACLE = _zorder_oracle()
 COMPACTION_TARGET_CHARS = 2_000_000  # ~2 MB of text per output file
 
 
+@query()
 def compaction_plan_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_docs, total_chars, target_files, docs_per_file): the
     write-side layout plan a lakehouse maintenance job computes before
@@ -201,6 +204,7 @@ SKIP_BUCKETS = 64  # files per simulated layout
 _BOX_LO_PCT, _BOX_HI_PCT = 45, 55
 
 
+@query()
 def zone_map_skip_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(layout, n_buckets, buckets_scanned, rows_scanned, rows_matching):
     the file-skipping effectiveness of three physical layouts of the
@@ -413,6 +417,7 @@ def _hrw_owner(n_shards: int, engine: str) -> str:
     return f"({g} % {n_shards})"
 
 
+@query(oracle="RENDEZVOUS_RESHARD_ORACLE")
 def rendezvous_reshard_audit_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -529,6 +534,7 @@ def _hilbert_levels(x0: str, y0: str) -> list[tuple[str, str, str]]:
     return levels
 
 
+@query()
 def hilbert_layout_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(hbucket, n_rows, custkey_lo, custkey_hi, day_lo, day_hi):
     orders bucketed by the top HB_PREFIX_BITS of their HILBERT index
@@ -658,6 +664,7 @@ def _morton8(x: str, y: str, engine: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+@query()
 def layout_locality_audit_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -838,6 +845,7 @@ LAYOUT_LOCALITY_AUDIT_ORACLE = _locality_oracle()
 BUCKET_TARGET_ROWS = 1 << 16  # rows per bucket the plan aims for
 
 
+@query()
 def bucket_plan_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(tbl, key, n_rows, ndv, rows_per_key_x1000, buckets): the
     bucket-count plan for the three join keys this repo's heavy
@@ -921,6 +929,7 @@ BUCKET_PLAN_ORACLE = _bucket_plan_oracle()
 DEPTH_FILE_ROWS = 1000  # synthetic file = contiguous o_orderkey range
 
 
+@query()
 def clustering_depth_audit_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..pinning import pin as _pin
+from ..registry import query
 from .textops import tokens_expr
 
 # DuckDB twin of textops.tokens_expr — identical \W+ split, lowercase,
@@ -38,6 +39,7 @@ _DUCK_TOKS = (
 # Hapax legomena rate per source
 # --------------------------------------------------------------------------
 
+@query()
 def hapax_rate_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_terms, n_hapax, hapax_ratio): per source, the number
     of distinct terms, how many occur exactly once in that source's
@@ -84,6 +86,7 @@ FROM term_counts GROUP BY source
 # Tokenizer fertility per language
 # --------------------------------------------------------------------------
 
+@query()
 def tokenizer_fertility_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lang, n_docs, n_tokens, n_chars, chars_per_token): corpus-level
     tokenizer fertility proxy per language — how many characters one
@@ -131,6 +134,7 @@ _COOC_TOP_V = 40  # candidate vocabulary: top-V terms by document frequency
 _COOC_MIN_C = 2  # emit pairs co-occurring in >= this many documents
 
 
+@query()
 def term_cooccurrence_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(term_a, term_b, c_ab, c_a, c_b, lift_num, lift_den): document
     co-occurrence counts for unordered pairs of the top-V
@@ -229,6 +233,7 @@ CROSS JOIN nd
 # Log2-bucketed document-length histogram per source
 # --------------------------------------------------------------------------
 
+@query()
 def doclen_log_hist_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, bucket, bucket_lo, n_docs): histogram of documents per
     source over power-of-two length buckets — bucket = floor(log2
@@ -278,6 +283,7 @@ FROM per_doc GROUP BY source, bucket
 _PREFIX_LEN = 64
 
 
+@query()
 def prefix_dup_groups_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(prefix_md5, n_docs, min_doc_id, max_doc_id): groups of >= 2
     documents sharing an identical first-64-character prefix — the
@@ -324,6 +330,7 @@ GROUP BY 1 HAVING count(*) >= 2
 ZIPF_TOP = 1000  # head size the power law is fit over
 
 
+@query()
 def zipf_fit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_types, n_fit, slope, intercept, r2): the least-squares fit
     of ln(freq) against ln(rank) over the top-ZIPF_TOP vocabulary —
@@ -460,6 +467,7 @@ FROM sums CROSS JOIN nt
 # --------------------------------------------------------------------------
 
 
+@query()
 def chao1_vocab_estimate_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(v_obs, s1, s2, n_tokens, chao1): the Chao1 lower-bound
     estimate of the TRUE vocabulary size behind the corpus sample —
@@ -531,6 +539,7 @@ WHERE v_obs > 0
 # Good-Turing unseen-mass estimate per source
 # --------------------------------------------------------------------------
 
+@query()
 def good_turing_unseen_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_tokens, n_terms, n1, n2, p_unseen, r1_star): the
     Turing estimator of the probability mass a source's NEXT token is
@@ -601,6 +610,7 @@ FROM term_counts GROUP BY source
 _HILL_FP = 1_000_000_000  # 1e9 fixed-point scale for per-doc ln terms
 
 
+@query()
 def hill_tail_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_docs, k, x_k1, sum_fp, hill, alpha): the Hill
     estimator of each source's document-length tail index — over the
@@ -736,6 +746,7 @@ _DELTA_F_FP = 1_000_000_000_000   # 1e12 fixed point for relative freqs
 _DELTA_Z_FP = 1_000_000_000       # 1e9 fixed point for per-term |z1-z2|
 
 
+@query()
 def burrows_delta_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src_a, src_b, n_terms, delta_fp, delta): Burrows' Delta — the
     stylometry-standard distance between every pair of sources: over
@@ -921,6 +932,7 @@ GROUP BY 1, 2
 _ENT_FP = 1_000_000  # 1e6 fixed point for per-term ln(n/c), char_entropy's
 
 
+@query()
 def token_entropy_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_tokens, n_terms, h_fp, entropy_nats, evenness): the
     Shannon entropy of each source's unigram token distribution and
@@ -1021,6 +1033,7 @@ FROM per_src
 TAIL_HEAD_K = 10  # global head-vocabulary size the tail is measured against
 
 
+@query()
 def tail_token_share_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_tokens, tail_tokens, tail_share): per source, the
     fraction of token mass carried by terms OUTSIDE the corpus-global
@@ -1105,6 +1118,7 @@ FROM totals t LEFT JOIN tails l ON l.source = t.source
 _LO_ALPHA0 = 500  # Dirichlet prior mass, split over the vocabulary
 
 
+@query()
 def log_odds_terms_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, tok, c_src, c_rest, z): the Monroe/Colaresi/Quinn
     "fightin' words" statistic — for every (source, term) cell, the

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 from .dedup import MINHASH_LSH_ORACLE, minhash_lsh_pairs_query
 
 # Analyst-prior m-probabilities as exact rationals over M_DEN.
@@ -88,6 +89,7 @@ def _attr_exprs() -> dict[str, str]:
     }
 
 
+@query(oracle="FS_LINKAGE_ORACLE", family="dedup")
 def fs_linkage_scores_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, agree_mask, fs_score): every MinHash-LSH
     candidate pair scored with the Fellegi-Sunter sum of per-field
@@ -250,6 +252,7 @@ FS_LINKAGE_ORACLE = _fs_oracle()
 FS_MATCH_MIN_FP = 0  # match decision: fs_score > 0 (likelier same entity)
 
 
+@query(family="dedup")
 def linkage_entities_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(entity_id, n_members, n_sources, max_score): the LAST step of
     the record-linkage pipeline — pairwise Fellegi-Sunter match

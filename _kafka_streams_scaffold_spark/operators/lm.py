@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..pinning import pin as _pin
+from ..registry import query
 from .textops import tokens_expr
 
 _D38 = "decimal(38,0)"
@@ -67,6 +68,7 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-document unigram-LM surprisal
 # --------------------------------------------------------------------------
 
+@query(oracle="UNIGRAM_LM_ORACLE")
 def unigram_lm_score_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_tokens, avg_surprisal) — mean nats/token under the
     corpus unigram LM (no smoothing needed: every scored token is in
@@ -127,6 +129,7 @@ GROUP BY doc_id
 # Per-source KL divergence vs the corpus distribution
 # --------------------------------------------------------------------------
 
+@query(oracle="SOURCE_KL_ORACLE")
 def source_kl_divergence_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_tokens, kl_nats) — KL(p_source || p_corpus) =
     sum_t p_s(t) * ln(p_s(t)/p(t)), the domain-shift audit run before
@@ -209,6 +212,7 @@ MAX_KEEP_PCT = 90
 CHARS_PER_PCT = 8  # +1 keep-% per 8 chars above the floor
 
 
+@query()
 def quality_weighted_sample_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents kept with probability proportional to length: keep-%
     = clamp(20 + n_chars/8, 20..90), decided by the same content-stable
@@ -256,6 +260,7 @@ WHERE bucket < keep_pct
 MIX_ALPHA_DENOM = 2  # alpha = 1/2: sqrt-temperature scaling
 
 
+@query()
 def mixture_weights_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_tokens, weight): per-source sampling weights
     proportional to n_tokens^(1/2) — the temperature-scaled mixture
@@ -315,6 +320,7 @@ FROM sq, tot
 BIGRAM_MIN_COUNT = 5  # a context must be seen this often to predict
 
 
+@query()
 def bigram_next_token_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(token, next_token, pair_n, token_n): the argmax next token for
     every context token seen >= BIGRAM_MIN_COUNT times — the simplest
@@ -404,6 +410,7 @@ WHERE t.token_n >= {BIGRAM_MIN_COUNT}
 # --------------------------------------------------------------------------
 
 
+@query(oracle="BIGRAM_LM_ORACLE")
 def bigram_lm_score_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_bigrams, avg_surprisal): mean nats/token under the
     corpus BIGRAM LM — p(w2|w1) = c(w1 w2)/c(w1 ·), the first-order
@@ -513,6 +520,7 @@ GROUP BY p.doc_id
 KN_D_NUM, KN_D_DEN = 3, 4
 
 
+@query()
 def kneser_ney_bigram_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(token, next_token, pair_n, ctx_n, n1_ctx, n1_next, p_kn): the
     Kneser-Ney smoothed conditional bigram model over the corpus —
@@ -644,6 +652,7 @@ _LR_FP_DUCK = (
 )
 
 
+@query()
 def dsir_importance_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_feats, dsir_sum, dsir_avg): per-document DSIR
     importance weight (Xie et al. 2023, "Data Selection for Language
@@ -770,6 +779,7 @@ GROUP BY doc_id
 # --------------------------------------------------------------------------
 
 
+@query()
 def source_ablation_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_docs, token_share, kl_drop_vs_full, mean_chars_delta):
     for every source, what REMOVING it does to the corpus — the

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 POISON_VALUE = "quack"
 
@@ -43,6 +44,7 @@ def quarantine(df: DataFrame, value_col: str = "text") -> DataFrame:
     return df.filter(is_poison(F.col(value_col)))
 
 
+@query()
 def uppercase_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.table(spark, sf_dir, "documents")
     return uppercase(docs).select("doc_id", "value")
@@ -64,6 +66,7 @@ def json_enrich(df: DataFrame, props_col: str = "props") -> DataFrame:
     )
 
 
+@query()
 def json_enrich_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return json_enrich(tables.table(spark, sf_dir, "events"))
 
@@ -84,6 +87,7 @@ FROM events
 """
 
 
+@query()
 def json_props_stats_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schemaless-JSON aggregation (E2/P3 composed): extract a field
     from the dynamic ``props`` payload and aggregate it per event

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..pinning import pin as _pin
+from ..registry import query
 
 FEATURE_SCHEMA = (
     "doc_id long, modality string, n_bytes long, first_byte int, checksum string"
@@ -112,6 +113,7 @@ def decode_features(df: DataFrame, decode: str = "fake") -> DataFrame:
     return df.mapInPandas(_batches, schema=FEATURE_SCHEMA)
 
 
+@query()
 def multimodal_features_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_features(
         with_payload(tables.spread(tables.table(spark, sf_dir, "documents"), "doc_id"))
@@ -155,6 +157,7 @@ def frame_sample(df: DataFrame, n_frames: int = N_FRAMES) -> DataFrame:
     return df.mapInPandas(_batches, schema=FRAME_SCHEMA)
 
 
+@query()
 def frame_sample_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return frame_sample(with_payload(tables.spread(tables.table(spark, sf_dir, "documents"), "doc_id")))
 
@@ -214,6 +217,7 @@ def resize_payload(df: DataFrame, target: int = RESIZE_TARGET) -> DataFrame:
     return df.mapInPandas(_batches, schema=RESIZE_SCHEMA)
 
 
+@query()
 def resize_payload_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resize_payload(
         with_payload(
@@ -284,6 +288,7 @@ _BSUM_DUCK = (
 )
 
 
+@query(family="mm")
 def payload_phash_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, b0..b3): a 64-bit PERCEPTUAL fingerprint of each
     payload's leading 8x8 byte grid — bit i set when byte_i exceeds
@@ -339,6 +344,7 @@ def _shared_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(family="mm")
 def phash_dup_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, hamming): payload pairs whose perceptual
     fingerprints differ in at most PHASH_HAM_MAX of 64 bits,
@@ -431,6 +437,7 @@ WHERE {" + ".join(f"bit_count(xor(fa.b{i}, fb.b{i}))" for i in range(PHASH_BLOCK
 # --------------------------------------------------------------------------
 
 
+@query(family="mm")
 def phash_threshold_sweep_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..functions.xhash import hash60_duck, hash60_spark
+from ..registry import query
 from .textops import tokens_expr
 
 NB_BUCKETS = 1024
@@ -55,6 +56,7 @@ _DUCK_TOKS = (
 )
 
 
+@query()
 def nb_lang_confusion_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(true_lang, pred_lang, n_docs): the held-out confusion matrix
     of a multinomial NB language classifier trained on the ~70% train

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..pinning import pin as _pin
+from ..registry import query
 from ..tables import EMBED_DIM as DIM
 
 PCA_FP = 10_000     # per-component fixed-point scale
@@ -93,6 +94,7 @@ def _cov_frames(spark: SparkSession, sf_dir: str):
     return cov, n_row
 
 
+@query()
 def pca_top_component_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(pos, loading, eigenvalue, explained_frac): the PCA_ITERS-step
     power-iteration estimate of the embedding covariance's dominant
@@ -289,6 +291,7 @@ PCA_TOP_COMPONENT_ORACLE = _pca_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def participation_ratio_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n, dim, trace_c, trace_c2, participation_ratio, effective_frac):
     the embedding spectrum's participation ratio PR = trace(C)^2 /

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..functions.xhash import hash60_duck, hash60_spark
+from ..registry import query
 from .similarity import DIM, N_QUERIES, TOP_K
 
 PQ_M = 8  # subspaces
@@ -274,6 +275,7 @@ def pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(family="sim")
 def pq_codes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, codes): the stored PQ artifact — each vector's M
     per-subspace centroid ids against the trained codebook, rendered
@@ -340,6 +342,7 @@ def _adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(family="sim")
 def pq_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_id, adc_fp, rank): pure ADC top-k — queries keep raw
     vectors, corpus is codes-only. LUT = Q x M x K fixed-point
@@ -352,6 +355,7 @@ def pq_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 PQ_RERANK = 80  # ADC shortlist size entering exact re-rank
 
 
+@query(family="sim")
 def pq_ann_rerank_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_id, exact_fp, rank): the production PQ search — ADC
     prunes the corpus to a PQ_RERANK shortlist per query in the
@@ -413,6 +417,7 @@ def _exact_fp_sql(a: str, b: str, engine: str) -> str:
     return " + ".join(parts)
 
 
+@query(family="sim")
 def pq_recall_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_exact, n_hits, recall): recall@k of the shipped PQ
     search (ADC shortlist + exact re-rank) against the exact

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 
 def select_compound_key(
@@ -49,6 +50,7 @@ def aggregate_count_and_total(df: DataFrame, quantity_col: str = "value") -> Dat
     )
 
 
+@query()
 def purchases_agg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = tables.table(spark, sf_dir, "events")
     return aggregate_count_and_total(select_compound_key(events))
@@ -62,6 +64,7 @@ def range_scan(agg: DataFrame, customer_key: str) -> DataFrame:
     return agg.filter(F.col("key").startswith(f"{customer_key}-"))
 
 
+@query(name="purchases_range_scan")
 def range_scan_query(spark: SparkSession, sf_dir: str, customer: str = "7") -> DataFrame:
     return range_scan(purchases_agg_query(spark, sf_dir), customer)
 

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 _QMAX = 127
 
@@ -43,6 +44,7 @@ _Q_CODES = (
 )
 
 
+@query()
 def embedding_quantize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, scale, q): per-vector symmetric int8 codes plus the
     dequantization scale. all-zero vectors quantize to zero codes with
@@ -80,6 +82,7 @@ FROM embeddings
 _ERR_SCALE = 10**9
 
 
+@query()
 def quantization_error_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row corpus audit: (n_vecs, n_elems, mean_abs_err) of int8
     reconstruction (q * scale vs original). ONE scan — quantize,
@@ -146,6 +149,7 @@ from .similarity import N_QUERIES, TOP_K, _dot_sql, _norm_sql  # noqa: E402
 _SSQ_SPARK = "aggregate(q, 0L, (acc, c) -> acc + cast(c as bigint) * c)"
 
 
+@query(family="sim")
 def int8_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_id, dot_int, qcos, rank): top-k cosine search run
     entirely in the int8 domain — the serving-tier search a real
@@ -291,6 +295,7 @@ def _int8_vs_exact_recall(
     )
 
 
+@query(family="sim")
 def int8_ann_recall_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_exact, n_hits, recall): recall@k of the int8-domain
     search against the exact float cosine top-k (ann_topk) — the
@@ -376,6 +381,7 @@ _SIG_LO = _BIT_WORD.format(start=1)
 _SIG_HI = _BIT_WORD.format(start=33)
 
 
+@query()
 def binary_signatures_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, sig_lo, sig_hi, n_pos): the packed sign-bit signature
     of every vector plus its population count (number of positive
@@ -419,6 +425,7 @@ FROM sig
 """
 
 
+@query(family="sim")
 def binary_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_id, hamming, rank): top-k nearest neighbors in the
     1-bit domain — Hamming distance over the packed signatures,
@@ -502,6 +509,7 @@ SELECT q_id, n_id, hamming, rank FROM (
 """
 
 
+@query(family="sim")
 def binary_ann_recall_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_exact, n_hits, recall): recall@k of the 1-bit Hamming
     search against the exact float cosine top-k — the honest price
@@ -576,6 +584,7 @@ _W_SPARK = "array(" + ", ".join(f"{w!r}d" for w in _NDCG_W) + ")"
 _W_DUCK = "[" + ", ".join(repr(w) for w in _NDCG_W) + "]"
 
 
+@query(family="sim")
 def quantized_ann_ndcg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(tier, q_id, dcg_fp, idcg_fp, ndcg): nDCG@k of the int8 and
     binary ANN tiers against the exact float cosine ranking — the
@@ -747,6 +756,7 @@ def _rbo_weights() -> dict[int, int]:
 _RBO_W = _rbo_weights()
 
 
+@query(family="sim")
 def rank_biased_overlap_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_common, rbo): truncated rank-biased overlap at depth
     TOP_K (p = 0.9) between the int8-domain ranking and the exact

@@ -26,12 +26,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 # --------------------------------------------------------------------------
 # Equi + range: clicks by the same user in the 10 minutes before an error
 # --------------------------------------------------------------------------
 
 
+@query()
 def prior_clicks_before_error_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables.table(spark, sf_dir, "events")
     errors = ev.filter(F.col("event_type") == "error").select(
@@ -73,6 +75,7 @@ GROUP BY e.event_id
 _WINDOW = "INTERVAL 15 MINUTES"
 
 
+@query()
 def error_window_counts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For every error event: how many events (any user, any type,
     including the error itself) fall in [ts, ts + 15 min).

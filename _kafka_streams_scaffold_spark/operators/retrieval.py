@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..pinning import pin as _pin
+from ..registry import query
 from ..tables import EMBED_DIM as DIM
 from .similarity import (
     _DUCK_ASSIGN_CTES,
@@ -69,6 +70,7 @@ from .similarity import (
 # --------------------------------------------------------------------------
 
 
+@query(family="sim")
 def ann_hubness_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(in_degree, n_vecs): exact histogram of how many neighbor
     lists each vector appears in (its k-occurrence) over the
@@ -117,6 +119,7 @@ FROM deg GROUP BY 1
 KCENTER_K = 6  # exemplars selected; bounded driver loop of K rounds
 
 
+@query()
 def kcenter_coreset_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(sel_round, vec_id, d2): the first KCENTER_K centers chosen by
     Gonzalez' farthest-point greedy — seed with the smallest vec_id,
@@ -287,6 +290,7 @@ def _maxsim_expr(q: str, d: str, engine: str) -> str:
     return "(" + " + ".join(per_i) + ")"
 
 
+@query()
 def maxsim_late_interaction_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -404,6 +408,7 @@ ROCCHIO_TOP = 5
 _ROCCHIO_FP = 1_000_000_000  # centroid fixed-point scale
 
 
+@query()
 def rocchio_expansion_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_id, cosine2, rank): one Rocchio PRF round — exact
     cosine top-ROCCHIO_FB neighbors per query (vec_id <
@@ -584,6 +589,7 @@ FACLOC_POOL = 32    # candidate pool: vec_id < FACLOC_POOL
 _FL_FP = 1_000_000  # similarity fixed-point scale
 
 
+@query()
 def facility_location_coreset_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -739,6 +745,7 @@ FACILITY_LOCATION_CORESET_ORACLE = _facloc_oracle()
 # --------------------------------------------------------------------------
 
 
+@query(family="sim")
 def label_purity_null_baseline_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -822,6 +829,7 @@ WHERE n_edges > 0
 ANISO_FP = 10_000  # per-component fixed-point scale for normalized coords
 
 
+@query()
 def embedding_anisotropy_audit_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -942,6 +950,7 @@ FROM tot t, ssq s
 _TWONN_FP = 1_000_000_000
 
 
+@query(family="sim")
 def twonn_intrinsic_dim_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1051,6 +1060,7 @@ FROM (SELECT CAST(count(*) AS BIGINT) AS n_vecs FROM embeddings) n, agg a
 # --------------------------------------------------------------------------
 
 
+@query(family="sim")
 def mrr_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_queries, n_hits, mrr): mean reciprocal rank of each query's
     EXACT cosine nearest neighbor within the IVF search's top-K list
@@ -1167,6 +1177,7 @@ FROM rr
 # --------------------------------------------------------------------------
 
 
+@query(family="sim")
 def local_clustering_coeff_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1284,6 +1295,7 @@ LOCAL_CLUSTERING_COEFF_ORACLE = _lcc_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def label_anisotropy_audit_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1401,6 +1413,7 @@ WHERE t.n_vecs > 1
 NZV_VAR_FRAC = 0.01  # flag dims under 1% of the mean per-dim variance
 
 
+@query()
 def nzv_dimension_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(pos, var_fp, var_frac_of_mean, is_nzv): per-dimension variance
     of the embedding corpus with a near-zero-variance flag — the

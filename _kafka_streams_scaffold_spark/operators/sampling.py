@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 TRAIN_PCT = 80
 VAL_PCT = 10  # test = remainder
@@ -34,6 +35,7 @@ def with_bucket(docs: DataFrame) -> DataFrame:
     return docs.withColumn("bucket", F.expr(_BUCKET_SPARK))
 
 
+@query()
 def dataset_split_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign every document to train/val/test by hash bucket
     (80/10/10). Pure per-row expression: no shuffle, no state, scans
@@ -59,6 +61,7 @@ FROM (SELECT doc_id, source, {_BUCKET_DUCK} AS bucket FROM documents)
 """
 
 
+@query()
 def stratified_sample_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """~10% sample per source stratum via the same hash bucket. The
     WHERE is a plain predicate, so at scale it rides the scan (no
@@ -118,6 +121,7 @@ def _rate_duck() -> str:
     return f"CASE {whens} ELSE {MIXTURE_DEFAULT_PCT} END"
 
 
+@query()
 def mixture_sample_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted mixture sampling: keep `rate%` of each source, chosen
     by the content-stable hash bucket.
@@ -156,6 +160,7 @@ WHERE bucket < rate_pct
 SOURCE_CAP = 15
 
 
+@query()
 def source_cap_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep at most 15 documents per source, preferring the longest
     (n_chars as the quality proxy), doc_id as the deterministic
@@ -194,6 +199,7 @@ WHERE rank <= {SOURCE_CAP}
 """
 
 
+@query()
 def quality_tiers_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every document bucketed into length quartiles (tier 1 =
     shortest .. 4 = longest) — the scalable form of NTILE(4): a global
@@ -244,6 +250,7 @@ FROM documents, cuts
 TOKEN_BUDGET = 10_000
 
 
+@query()
 def token_budget_selection_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -288,6 +295,9 @@ def token_budget_selection_query(
 TB_BUCKETS = 32  # score-histogram resolution for the two-pass form
 
 
+# Two-pass scale form: SAME oracle as the exact form — the driver
+# hash check doubles as the equivalence proof.
+@query(oracle="TOKEN_BUDGET_SELECTION_ORACLE")
 def token_budget_selection_2p_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -396,6 +406,7 @@ TOKEN_BUDGET_SELECTION_ORACLE = _token_budget_oracle()
 ALLOCATION_BUDGET = 1000  # units to split across sources
 
 
+@query()
 def budget_allocation_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, weight_chars, alloc): split a fixed sampling budget
     across sources proportionally to their character mass using the
@@ -482,6 +493,7 @@ FROM ranked
 # --------------------------------------------------------------------------
 
 
+@query(family="dedup")
 def split_leakage_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(split_a, split_b, n_pairs, max_jaccard): near-duplicate pairs
     (exact capped-shingle Jaccard >= JACCARD_THRESHOLD, the
@@ -592,6 +604,7 @@ SPLIT_LEAKAGE_AUDIT_ORACLE = _split_leakage_oracle()
 _EPOCH_SEED = 13
 
 
+@query()
 def epoch_interleave_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, shuffle_rank, global_pos): a deterministic
     training-epoch ordering — documents are shuffled WITHIN each
@@ -684,6 +697,7 @@ SYS_SAMPLE_K = 100  # evenly spaced pointers over the weight mass
 _SYS_BUCKET = 500  # docs per cumsum bucket (pass-1 granularity)
 
 
+@query()
 def systematic_weighted_sample_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -792,6 +806,7 @@ WHERE (({SYS_SAMPLE_K} * cum + tw - 1) // tw)
 BATCH_DOCS = 64  # training micro-batch size the audit simulates
 
 
+@query(oracle="BATCH_MIX_ORACLE")
 def batch_mix_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(batch, n_docs, n_sources, mix_entropy): cut the DETERMINISTIC
     epoch order (epoch_interleave's global_pos) into consecutive
@@ -881,6 +896,7 @@ BATCH_MIX_ORACLE = _batch_mix_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def ht_estimate_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(k_points, n_sampled_docs, true_total_tokens, ht_estimate,
     rel_err): estimate the corpus TOKEN total from the systematic
@@ -1015,6 +1031,7 @@ PRIORITY_K = 200  # sample size
 _PRIORITY_SEED = "ps-v1|"
 
 
+@query()
 def priority_sample_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, priority): a uniform random sample of exactly
     PRIORITY_K documents drawn as the BOTTOM-K of a keyed md5
@@ -1061,6 +1078,7 @@ LIMIT {PRIORITY_K}
 NEYMAN_TOTAL = 1000  # total sample units to allocate across strata
 
 
+@query()
 def neyman_allocation_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_h, sd_chars, alloc): the variance-OPTIMAL sample
     allocation across source strata for estimating mean document
@@ -1161,6 +1179,7 @@ _WPS_H_DUCK = (
 )
 
 
+@query()
 def weighted_priority_sample_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1239,6 +1258,7 @@ _KFOLD_MOD = 4294967296
 _KFOLD_PREMOD = 2147483648
 
 
+@query()
 def group_kfold_split_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(fold, n_users, n_events, n_purchases, purchase_rate): the
     group-aware K-fold assignment over events — every USER (the
@@ -1310,6 +1330,7 @@ GROUP BY 1
 WATERFILL_BUDGET_CHARS = 100_000
 
 
+@query()
 def waterfill_allocation_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, demand_chars, allocated_chars, saturated): the
     max-min fair split of a WATERFILL_BUDGET_CHARS character budget
@@ -1431,6 +1452,7 @@ WHERE NOT s.saturated
 # --------------------------------------------------------------------------
 
 
+@query()
 def sqrt_temperature_mix_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1518,6 +1540,7 @@ FROM mass m, tot t
 # --------------------------------------------------------------------------
 
 
+@query()
 def split_srm_check_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_rows, n_train, n_val, n_test, chi2, srm_flag): the
     sample-ratio-mismatch test on ``dataset_split``'s hash-bucket
@@ -1637,6 +1660,7 @@ FROM agg
 _UNIF_CHI2_BAR = 123.225  # chi2 0.95 quantile at df = 99, baked literal
 
 
+@query()
 def hash_bucket_uniformity_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1733,6 +1757,7 @@ _HOEFF_C = 3.6888794541139363
 _HOEFF_TARGET_EPS = 0.01
 
 
+@query()
 def sample_size_epsilon_plan_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

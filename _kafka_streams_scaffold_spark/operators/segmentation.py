@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 from .money import dec
 
 # --------------------------------------------------------------------------
@@ -82,6 +83,7 @@ base AS (
 _QS = (0.25, 0.5, 0.75)
 
 
+@query()
 def rfm_segments_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(c_mktsegment, r_score, f_score, m_score, n_cust, m_total_cents):
     customers bucketed into per-segment RFM quartile cells. Each
@@ -205,6 +207,7 @@ FROM scored GROUP BY c_mktsegment, r_score, f_score, m_score
 # Per-segment spend inequality (Gini)
 # --------------------------------------------------------------------------
 
+@query()
 def spend_gini_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(c_mktsegment, n_cust, total_cents, gini): Gini coefficient of
     lifetime spend across customers, per market segment — the
@@ -279,6 +282,7 @@ FROM agg
 # Inter-order cadence per segment
 # --------------------------------------------------------------------------
 
+@query()
 def order_gap_stats_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(c_mktsegment, n_gaps, avg_gap_days, max_gap_days): the cadence
     between a customer's consecutive orders, rolled up per market
@@ -350,6 +354,7 @@ GROUP BY c.c_mktsegment
 # --------------------------------------------------------------------------
 
 
+@query()
 def lorenz_curve_points_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(decile, n_users, cum_users_frac, cum_cents, cum_share): the
     Lorenz curve of per-user purchase spend at decile resolution —

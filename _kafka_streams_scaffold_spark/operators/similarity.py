@@ -37,6 +37,7 @@ from .. import tables
 from ..functions.xhash import hash60_duck, hash60_spark
 from ..pinning import pin as _pin
 from ..pinning import shared_pin as _shared_pin
+from ..registry import query
 from ..tables import EMBED_DIM as DIM  # load-time quarantine owns the dim
 TOP_K = 5
 N_QUERIES = 10
@@ -80,6 +81,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(family="sim")
 def ann_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 neighbors for query vectors vec_id < 10.
 
@@ -180,6 +182,7 @@ def ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(family="sim")
 def ivf_near_dup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate vectors (cosine >= 0.3) within each quantizer
     cell.
@@ -240,6 +243,7 @@ def ivf_near_dup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DYN_SEED = 23
 
 
+@query(family="sim")
 def dyn_ivf_assign_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical quantizer assignment with DYNAMIC cell count:
     within each coarse cell, ``ceil(cell_n / IVF_TARGET_CELL)``
@@ -394,6 +398,9 @@ def _bucket_expr(vec_col: str) -> F.Column:
     return F.expr("(" + " + ".join(bits) + ")")
 
 
+# Approximate by construction (bucketed recall < 1): rows-only
+# check; lsh_ann_recall hash-checks its quality.
+@query(oracle=None)
 def lsh_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k: rank only within the query's sign bucket.
     Registered without an oracle (approximate recall); compare against
@@ -441,6 +448,7 @@ def _duck_bucket_expr(vec_col: str) -> str:
     return "(" + " + ".join(bits) + ")"
 
 
+@query(family="sim")
 def lsh_ann_recall_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the SRP-LSH search against the exact baseline,
     per query: |lsh_ann top-k ∩ ann_topk top-k| / |ann_topk top-k|.
@@ -533,6 +541,7 @@ GROUP BY e.q_id
 _FP_SCALE = 1_000_000
 
 
+@query()
 def label_centroids_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean vector per label cell — one k-means update step, the
     operator that *produces* the coarse quantizer ivf_near_dup blocks
@@ -624,6 +633,7 @@ def _vec_cell_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(family="sim")
 def ivf_assign_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign every vector to its nearest label centroid (squared
     euclidean): label_centroids is the quantizer-update step, this is
@@ -746,6 +756,7 @@ DYN_IVF_ASSIGN_ORACLE = _DYN_ORACLE_TEMPLATE.replace(
 N_PROBE = 3
 
 
+@query(family="sim")
 def ivf_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k search: rank the quantizer cells per query, probe the
     N_PROBE nearest, and run exact cosine only against vectors
@@ -864,6 +875,7 @@ WHERE rank <= {TOP_K}
 OUTLIER_RATIO = 2.0
 
 
+@query(family="sim")
 def embedding_outliers_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector outlier score: squared distance to the assigned IVF
     centroid, ranked and thresholded against the cell's mean distance
@@ -996,6 +1008,7 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(family="sim")
 def knn_graph_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-KNN_K cosine neighbor graph over EVERY vector, blocked by
     the assigned IVF cell, with a mutual-edge flag — the construction
@@ -1132,6 +1145,7 @@ _LOF_D_SCALE = 10**9
 _LOF_LRD_SCALE = 10**15
 
 
+@query(oracle="KNN_LOF_ORACLE", family="sim")
 def knn_lof_outliers_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, n_nbrs, lof, is_outlier): Local Outlier Factor
     (Breunig et al., SIGMOD 2000) over the cell-blocked kNN graph —
@@ -1245,6 +1259,7 @@ FROM sums s JOIN lrd l ON l.q_id = s.q_id
 # --------------------------------------------------------------------------
 
 
+@query()
 def embedding_diversity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean pairwise squared distance within each label cell — the
     corpus-diversity dial (collapsed/duplicated clusters score near 0;
@@ -1341,6 +1356,7 @@ WHERE n.n > 1
 # --------------------------------------------------------------------------
 
 
+@query(family="sim")
 def knn_triangles_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row triad census of the mutual-kNN graph: (n_edges,
     n_triangles, closure) where closure = 3*triangles / open wedges.
@@ -1433,6 +1449,7 @@ FROM tri, wedges
 # Multi-probe SRP-LSH (deterministic probe set -> fully hash-checked)
 # --------------------------------------------------------------------------
 
+@query()
 def lsh_multiprobe_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_id, cosine, rank): SRP-LSH search probing the query's
     own sign bucket PLUS every bucket at Hamming distance 1 (flip one
@@ -1524,6 +1541,7 @@ WHERE rank <= {TOP_K}
 """
 
 
+@query(family="sim")
 def lsh_multiprobe_recall_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_exact, n_hits, recall): recall@k of the multi-probe
     search vs the exact baseline — registered alongside
@@ -1611,6 +1629,7 @@ import math as _m
 _RRF_L = _m.lcm(*[RRF_K + r for r in range(1, TOP_K + 1)])
 
 
+@query(family="sim")
 def ann_rank_fusion_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_id, n_tiers, rrf_scaled, fused_rank): reciprocal-rank
     fusion of the three registered ANN tiers (exact cosine top-k, IVF
@@ -1702,6 +1721,7 @@ def _mrl_dot_duck(a: str, b: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+@query(family="sim")
 def matryoshka_recall_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, n_exact, n_hits, recall): recall@k of cosine search over
     the FIRST MRL_DIM dimensions against the full-dimensional exact
@@ -1820,6 +1840,7 @@ GROUP BY e.q_id
 _COH_SCALE = 10**9
 
 
+@query()
 def cluster_cohesion_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(label, n_members, avg_cos, min_cos): how tightly each label's
     members hug their own centroid — the cohesion audit run after any
@@ -1941,6 +1962,7 @@ GROUP BY label
 # --------------------------------------------------------------------------
 
 
+@query(family="sim")
 def knn_label_purity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(label, n_nodes, n_edges, n_same, purity): per-class neighbor
     label agreement over the kNN graph — the leave-one-out kNN
@@ -2031,6 +2053,7 @@ MMR_C = 16  # candidate pool per query entering the re-rank
 # compute bit-identically.
 
 
+@query()
 def mmr_rerank_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(q_id, step, vec_id, rel, mmr_score): Maximal Marginal
     Relevance re-ranking (Carbonell & Goldstein '98) — for each query
@@ -2247,6 +2270,7 @@ MMR_RERANK_ORACLE = _mmr_oracle()
 PROBE_CURVE_LEVELS = (1, 2, 4)
 
 
+@query(family="sim")
 def ivf_probe_recall_curve_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2404,6 +2428,7 @@ LEFT JOIN hits h ON h.nprobe = l.nprobe
 # --------------------------------------------------------------------------
 
 
+@query()
 def ivf_margin_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bucket, n_vecs): histogram of each vector's RELATIVE
     assignment margin — (d2nd - d1st) / d2nd over the IVF cell
@@ -2476,6 +2501,7 @@ GROUP BY 1
 _SIL_FP = 1_000_000_000
 
 
+@query()
 def simplified_silhouette_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2603,6 +2629,7 @@ FROM sil GROUP BY 1
 # --------------------------------------------------------------------------
 
 
+@query()
 def centroid_shift_drift_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2727,6 +2754,7 @@ JOIN (SELECT label, n FROM counts WHERE half = 1) n1 ON n1.label = d.label
 # --------------------------------------------------------------------------
 
 
+@query(family="sim")
 def ncc_confusion_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(orig_label, assigned_label, n, row_frac, is_correct): the
     confusion matrix of the nearest-class-centroid classifier over
@@ -2791,6 +2819,7 @@ FROM counts c JOIN row_tot r USING (orig_label)
 _AA_FP = 1_000_000_000  # 1e9 fixed point for 1/ln(deg) terms
 
 
+@query(family="sim")
 def adamic_adar_links_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_a, vec_b, cn, aa_fp, aa): Adamic-Adar link-prediction
     scores over the cell-blocked kNN graph — for every pair of
@@ -2873,6 +2902,7 @@ GROUP BY 1, 2
 _DB_FP = 1_000_000_000  # 1e9 per-vector own-centroid distance fixed point
 
 
+@query()
 def davies_bouldin_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(label, n_vecs, s_mean, worst_label, db_ratio): the
     Davies-Bouldin clustering-quality readout per label — dispersion
@@ -3054,6 +3084,7 @@ FROM best WHERE rn = 1
 # --------------------------------------------------------------------------
 
 
+@query(family="sim")
 def cell_label_gini_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cell, n_vecs, n_labels, majority_label, gini_num, gini): the
     Gini impurity of the TRUE label distribution inside each IVF
@@ -3141,6 +3172,7 @@ FROM agg a JOIN maj m USING (cell)
 _VM_FP = 1_000_000  # 1e6 fixed point for per-cell ln terms (token_entropy's)
 
 
+@query(family="sim")
 def v_measure_cells_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n, n_cells, n_labels, hlc_fp, hcl_fp, hl_fp, hc_fp,
     homogeneity, completeness, v_measure): the information-theoretic
@@ -3318,6 +3350,7 @@ CROSS JOIN dims d CROSS JOIN cond co CROSS JOIN hl h1 CROSS JOIN hc h2
 # --------------------------------------------------------------------------
 
 
+@query(family="sim")
 def recall_at_k_curve_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(k, n_exact, n_hits, recall): the IVF search's recall measured
     against the exact top-k reference at EVERY cutoff k in {1, 3,

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 TOP_N_EVENTS = 20
 
@@ -38,6 +39,7 @@ TOP_N_EVENTS = 20
 # Exact distinct users per (event_type, day)
 # --------------------------------------------------------------------------
 
+@query()
 def distinct_users_daily_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables.table(spark, sf_dir, "events")
     return (
@@ -78,6 +80,12 @@ def approx_distinct_users_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 APPROX_DISTINCT_TOL = 5 * APPROX_RSD
 
 
+# Sketch estimates are engine-specific, so the registered form
+# asserts the error bound IN the result (exact values + universally
+# true within-bound booleans the oracle hash-checks); the tight
+# per-sigma accuracy assertions live in tests/test_sketches.py
+# against the raw-estimate variants.
+@query(name="approx_distinct_users")
 def approx_distinct_check_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The HLL++ estimate with its error bound asserted IN the result:
     emits the exact distinct count plus a within_bound boolean the
@@ -113,6 +121,7 @@ GROUP BY event_type
 _QS = (0.25, 0.5, 0.75, 0.95)
 
 
+@query()
 def value_percentiles_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All quantiles in ONE array-form ``percentile`` aggregate: each
     scalar ``percentile(value, q)`` call carries its own full per-group
@@ -145,6 +154,7 @@ GROUP BY event_type
 # Global top-k by value (deterministic tiebreak on event_id)
 # --------------------------------------------------------------------------
 
+@query()
 def top_events_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables.table(spark, sf_dir, "events")
     return (
@@ -200,6 +210,7 @@ def approx_percentiles_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 APPROX_PCT_RANK_SLACK = 0.01
 
 
+@query(name="approx_percentiles", oracle="APPROX_PCT_CHECK_ORACLE")
 def approx_percentiles_check_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketched quantiles with the rank-error bound asserted IN the
     result: emits the exact quantiles (hash-comparable) plus one
@@ -271,6 +282,7 @@ _BUCKET_EXPR = (
 )
 
 
+@query()
 def value_histogram_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-bin histogram of event values per type: 20 equal bins
     over [0, 500), out-of-range values landing in the SQL-standard
@@ -304,6 +316,7 @@ GROUP BY event_type, {_BUCKET_EXPR}
 HH_DENOM = 10  # support = 1/HH_DENOM of all events
 
 
+@query(name="heavy_hitters")
 def heavy_hitters_check_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-hitter detection with the sketch's guarantee asserted IN
     the result: ``freqItems`` (Spark's one-pass misra-gries-style
@@ -351,6 +364,7 @@ WHERE cnt * {HH_DENOM} > total
 EQUI_DEPTH_BUCKETS = 10
 
 
+@query()
 def equi_depth_histogram_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bucket, n_orders, lo, hi, sum_cents): exact equi-DEPTH
     histogram of order totals — ntile(10) over the deterministic
@@ -394,6 +408,7 @@ def equi_depth_histogram_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 ED2P_ACCURACY = 10_000  # percentile_approx accuracy: rank error <= n/ED2P_ACCURACY
 
 
+@query(oracle="EQUI_DEPTH_2P_ORACLE")
 def equi_depth_histogram_2p_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -515,6 +530,7 @@ def _cms_cell(engine: str, d: int) -> str:
     )
 
 
+@query()
 def cms_user_counts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, true_n, cms_estimate, overcount, never_undercounts):
     a 4x512 count-min sketch of per-user event counts, audited
@@ -632,6 +648,7 @@ def _bloom_bit(engine: str, k: int, key_expr: str) -> str:
     )
 
 
+@query()
 def bloom_filter_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_members, bits_set, n_probes, n_false_positives,
     no_false_negatives): a deterministic Bloom filter over the set of
@@ -791,6 +808,7 @@ def _hll_registers(engine: str) -> tuple[str, str]:
     return reg, rank
 
 
+@query()
 def hll_user_sketch_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, n_exact, hll_estimate, within_bound): a from-
     scratch HyperLogLog over per-type distinct users whose EVERY BIT
@@ -912,6 +930,7 @@ KMV_K = 64
 _KMV_SPACE = float(1 << 60)  # md5-derived hash domain
 
 
+@query()
 def kmv_overlap_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(type_a, type_b, kmv_jaccard, exact_jaccard, n_a, n_b): the
     KMV estimate of user-set Jaccard similarity between every
@@ -1097,6 +1116,7 @@ KMV_OVERLAP_ORACLE = _kmv_oracle()
 _JS_RATE = 16  # keep keys with h % RATE == 0 (deterministic 1/16 sample)
 
 
+@query()
 def join_size_estimate_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_keys_sampled, est_size, exact_size, rel_err): the
     cardinality of orders JOIN lineitem ON orderkey, estimated from a
@@ -1187,6 +1207,7 @@ FROM est CROSS JOIN exact
 HLL_ROLL_DAYS = 7
 
 
+@query()
 def hll_rolling_distinct_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(day, n_exact, hll_estimate, m_used, small_range): trailing-
     7-day distinct users per active day, computed by MERGING daily
@@ -1356,6 +1377,7 @@ HLL_ROLLING_DISTINCT_ORACLE = _hll_rolling_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def hll_distinct_rollup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, day, n_exact, hll_estimate, m_used, small_range):
     distinct-user estimates at THREE grains at once — (type, day),
@@ -1521,6 +1543,7 @@ def _ams_sign(col: str, r: int) -> str:
     )
 
 
+@query()
 def ams_f2_estimate_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(r, est_f2, exact_f2): AMS_R independent AMS estimators of the
     second frequency moment F2 = sum_u c_u^2 of events.user_id (the

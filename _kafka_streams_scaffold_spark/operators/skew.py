@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 from .purchases import PURCHASES_AGG_ORACLE, select_compound_key
 
 N_SALTS = 16
@@ -52,6 +53,7 @@ def salted_count_and_total(
     )
 
 
+@query()
 def purchases_agg_salted_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = tables.table(spark, sf_dir, "events")
     return salted_count_and_total(select_compound_key(events))
@@ -108,6 +110,7 @@ def salted_join(
 SKEW_TOP_K = 10
 
 
+@query()
 def join_key_skew_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l_partkey, cnt, total_rows, n_keys, ratio_num, ratio_den): the
     heaviest SKEW_TOP_K join keys of lineitem.l_partkey with each
@@ -170,6 +173,7 @@ SALT_TARGET_ROWS = 8_192  # rows a single (key, salt) cell may carry
 SALT_PLAN_TOP = 10
 
 
+@query()
 def salt_factor_plan_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, freq, share_x1e6, salt_factor): for the
     SALT_PLAN_TOP heaviest join keys of the events stream, the

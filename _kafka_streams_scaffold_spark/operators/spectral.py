@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..pinning import pin as _pin
+from ..registry import query
 from .similarity import DIM, _FP_SCALE
 
 ROUNDS = 5
@@ -49,6 +50,7 @@ _V_SCALE = 10**9
 _D38 = "decimal(38,0)"
 
 
+@query()
 def power_iteration_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(pos, component) of the unit-max-norm vector after ROUNDS
     power-iteration steps from the uniform start vector."""

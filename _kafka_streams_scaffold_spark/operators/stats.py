@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 from .money import dec as _dec
 
 _P4 = "decimal(25,4)"
@@ -69,6 +70,7 @@ spend AS (
 """
 
 
+@query()
 def segment_spend_stats_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per market segment: spread of customer lifetime spend and its
     relationship to account balance (stddev, correlation, regression
@@ -144,6 +146,7 @@ FROM agg
 """
 
 
+@query()
 def segment_spend_median_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-segment median lifetime spend via dual row numbers.
 
@@ -198,6 +201,7 @@ GROUP BY c_mktsegment
 # --------------------------------------------------------------------------
 
 
+@query()
 def winsorized_event_stats_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type mean of values clamped to the exact [p1, p99]
     range — the outlier-capping preprocessing step robust pipelines
@@ -287,6 +291,7 @@ GROUP BY r.event_type
 ANOMALY_Z = 3.0
 
 
+@query()
 def event_anomalies_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events whose value sits more than 3 sample standard deviations
     from their type's mean — the outlier-surfacing twin of the
@@ -384,6 +389,7 @@ def _dual_rank_median(df: DataFrame, key: str, val: str, tiebreak: str) -> DataF
     )
 
 
+@query()
 def robust_event_outliers_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, median, mad, n_outliers, n): outliers by median /
     median-absolute-deviation — the robust twin of ``event_anomalies``.
@@ -472,6 +478,7 @@ GROUP BY d.event_type
 _CM_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
 
+@query()
 def correlation_matrix_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(col_a, col_b, n_rows, corr): the full pairwise Pearson matrix
     over lineitem's numeric measures — the feature-correlation audit a
@@ -573,6 +580,7 @@ _PROFILE_COLS = [
 ]
 
 
+@query()
 def table_profile_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(column, n_rows, n_null, n_distinct): the per-column profile a
     data catalog materializes for every ingested table — here over
@@ -632,6 +640,7 @@ TABLE_PROFILE_ORACLE = _profile_oracle()
 _DISC_QS = [50, 90, 99]  # percentiles materialized per group
 
 
+@query()
 def segment_spend_quantiles_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -709,6 +718,7 @@ GROUP BY c_mktsegment
 SEASONAL_SIGMA_SQ = 9  # (3 sigma)^2
 
 
+@query()
 def seasonal_anomalies_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, day, n_events, dow, n_days, sum_dow, sumsq_dow,
     is_anomaly): every (event type, day) with its weekday-baseline
@@ -798,6 +808,7 @@ JOIN base b ON b.event_type = d.event_type AND b.dow = d.dow
 EWMA_WINDOW = 8  # events per user contributing to the average
 
 
+@query()
 def ewma_user_value_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, event_id, value, n_window, ewma): per-event
     exponentially weighted average of each user's last EWMA_WINDOW
@@ -883,6 +894,7 @@ FROM framed
 AB_CONVERT_MIN_PURCHASES = 14  # "heavy purchaser" conversion bar
 
 
+@query()
 def ab_test_chi2_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(variant, n_users, n_converted, conv_rate, chi2): the
     experiment readout every product team runs — users hash-split
@@ -1008,6 +1020,7 @@ AB_TEST_CHI2_ORACLE = AB_TEST_CHI2_ORACLE.replace(
 # --------------------------------------------------------------------------
 
 
+@query()
 def cusum_changepoint_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, changepoint_day, n_days, cusum_scaled, direction):
     the classic CUSUM change-point locator per event type — the day
@@ -1120,6 +1133,7 @@ FROM ranked WHERE r = 1
 AUTOCORR_LAG = 7  # days
 
 
+@query()
 def weekly_autocorr_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, n_pairs, autocorr): lag-7 Pearson autocorrelation
     of each type's daily counts — near +1 means a strong weekly
@@ -1207,6 +1221,7 @@ FROM sums
 # --------------------------------------------------------------------------
 
 
+@query()
 def segment_trend_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, n_days, slope_per_day, intercept): ordinary least
     squares of daily event counts against the day index, per type —
@@ -1311,6 +1326,7 @@ FROM sums
 _TRIM_FP = 10**6  # fixed-point scale applied BEFORE the UDF
 
 
+@query()
 def trimmed_mean_by_type_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, n_values, n_kept, trimmed_mean): the 25%-trimmed
     mean of event values per type — rank-based trimming (drop the
@@ -1411,6 +1427,7 @@ GROUP BY event_type
 _MI_FP = 10**6
 
 
+@query()
 def mutual_information_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row audit: (n_docs, mi_nats, h_source_nats, h_lang_nats,
     norm_mi) — the mutual information I(source; lang) over the
@@ -1567,6 +1584,7 @@ def _boot_w(u_expr: str, engine: str) -> str:
     return f"(CASE {cases} ELSE 6 END)"
 
 
+@query()
 def bootstrap_se_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, n, mean_value, boot_se): the per-type mean event
     value with its POISSON-BOOTSTRAP standard error — the one-pass
@@ -1710,6 +1728,7 @@ KM_CENSOR_DAYS = 7  # still-active horizon: last event this close to
 _US_PER_DAY = 86_400_000_000
 
 
+@query()
 def km_user_survival_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(t_days, n_risk, n_deaths, n_censored, log_survival): the
     Kaplan-Meier estimate of user retention over observed lifetimes
@@ -1847,6 +1866,7 @@ _CONF_BUCKET_DUCK = (
 )
 
 
+@query()
 def conformal_coverage_audit_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1979,6 +1999,7 @@ CONFORMAL_COVERAGE_AUDIT_ORACLE = _conformal_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def theil_sen_trend_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_days, n_pairs, ts_slope): the Theil-Sen estimator of the
     daily purchase-revenue trend — the MEDIAN over all day pairs
@@ -2090,6 +2111,7 @@ FROM (SELECT CAST(count(*) AS BIGINT) AS n_days FROM daily) d, med m
 _NA_FP = 1_000_000_000
 
 
+@query()
 def nelson_aalen_hazard_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(t_days, n_risk, n_deaths, n_censored, cumhaz_fp): the
     Nelson-Aalen cumulative-hazard estimate over the same censored
@@ -2196,6 +2218,7 @@ WHERE n_risk > 0
 # --------------------------------------------------------------------------
 
 
+@query()
 def runs_test_randomness_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_pos, n_neg, n_runs, z): the Wald-Wolfowitz runs test on the
     sign sequence of daily purchase revenue around its median — too
@@ -2332,6 +2355,7 @@ WHERE n_pos + n_neg > 0
 # --------------------------------------------------------------------------
 
 
+@query()
 def poisson_dispersion_audit_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2402,6 +2426,7 @@ WHERE n_days > 1 AND sum_c > 0
 # --------------------------------------------------------------------------
 
 
+@query()
 def binseg_changepoints_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(level, segment, changepoint_day, n_days, cusum_scaled,
     direction): binary segmentation at depth 2 over the daily
@@ -2578,6 +2603,7 @@ FROM unioned
 # Exact weighted median (quantity-weighted price per return flag)
 # --------------------------------------------------------------------------
 
+@query()
 def weighted_median_price_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l_returnflag, w_total, median_price_cents, median_price): the
     exact QUANTITY-WEIGHTED median extended price per return flag —
@@ -2666,6 +2692,7 @@ WHERE 2 * c.cum >= t.w_total AND 2 * (c.cum - c.w) < t.w_total
 # --------------------------------------------------------------------------
 
 
+@query()
 def durbin_watson_daily_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_days, total_orders, dw_num, dw_den, dw): the Durbin-Watson
     statistic of mean-centered daily order counts — the classic

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 from .money import dec as _dec
 from .money import one_minus as _one_minus
 
@@ -45,6 +46,7 @@ from .money import one_minus as _one_minus
 # --------------------------------------------------------------------------
 
 
+@query()
 def cust_order_counts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """How many customers placed 0, 1, 2, ... non-urgent orders.
 
@@ -86,6 +88,7 @@ GROUP BY c_count
 # --------------------------------------------------------------------------
 
 
+@query()
 def promo_revenue_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Share of one month's revenue that came from PROMO parts.
 
@@ -136,6 +139,7 @@ WHERE l.l_shipdate >= TIMESTAMP '1997-06-01'
 # --------------------------------------------------------------------------
 
 
+@query()
 def top_value_parts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parts whose lifetime discounted revenue exceeds 1.5x the mean.
 
@@ -192,6 +196,7 @@ WHERE CAST(v AS DOUBLE) >
 # --------------------------------------------------------------------------
 
 
+@query()
 def brand_disjunction_revenue_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue matching an OR of three brand/size/quantity conjunctions.
 
@@ -246,6 +251,7 @@ WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 10
 # --------------------------------------------------------------------------
 
 
+@query()
 def idle_rich_customers_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-segment count/balance of above-average customers gone quiet
     (no orders since 1998 — every customer in this data has *some*
@@ -298,6 +304,7 @@ GROUP BY c_mktsegment
 # --------------------------------------------------------------------------
 
 
+@query()
 def latest_shipper_counts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per supplier: in how many multi-supplier orders was it the
     STRICT latest shipper (its last ship date later than every other
@@ -375,6 +382,7 @@ GROUP BY s.s_name
 # --------------------------------------------------------------------------
 
 
+@query()
 def top_revenue_supplier_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Suppliers whose 1997-H1 revenue equals the global maximum.
 
@@ -438,6 +446,7 @@ WHERE r.rev = (SELECT MAX(rev) FROM revenue)
 # --------------------------------------------------------------------------
 
 
+@query()
 def bulk_part_suppliers_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct suppliers who shipped MORE THAN A FIFTH of some part's
     total shipped quantity.

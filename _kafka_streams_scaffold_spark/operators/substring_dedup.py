@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 WINDOW_CHARS = 24  # min shared-span length the detector certifies
 MIN_DOCS = 2
@@ -72,6 +73,7 @@ def _windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query()
 def shared_substrings_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w, n_docs, min_doc_id): every length-W window occurring in >=
     MIN_DOCS distinct documents — the verbatim-span duplicate index.
@@ -99,6 +101,7 @@ FROM wins GROUP BY w HAVING count(*) >= {MIN_DOCS}
 """
 
 
+@query()
 def substring_dup_docs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_shared_windows, max_window_docs): documents carrying
     at least one cross-doc verbatim span, with how many of their
@@ -145,6 +148,7 @@ GROUP BY doc_id
 SPAN_WIDTHS = [24, 48, 96]
 
 
+@query()
 def multiwidth_span_profile_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

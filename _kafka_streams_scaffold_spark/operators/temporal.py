@@ -23,12 +23,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 
 # --------------------------------------------------------------------------
 # SCD Type-2 history (changelog -> validity intervals)
 # --------------------------------------------------------------------------
 
+@query()
 def scd2_history_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, event_type, valid_from, valid_to, is_current): the
     Type-2 dimension a changelog consumer materializes — each run of
@@ -91,6 +93,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 # Gap fill + forward fill (dense daily spine)
 # --------------------------------------------------------------------------
 
+@query()
 def gap_fill_daily_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(day, n_purchases, revenue_cents, ff_revenue_cents): purchase
     activity on a DENSE daily spine from the first to the last
@@ -224,6 +227,7 @@ def snapshot_diff(
     )
 
 
+@query()
 def snapshot_diff_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(o_orderkey, change): CDC between two deterministic synthetic
     snapshots of ``orders`` — old = keys not divisible by 10 with a
@@ -249,6 +253,7 @@ def snapshot_diff_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query()
 def snapshot_diff_full_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(o_orderkey, change, o_totalprice, o_orderstatus): the
     APPLY-ready CDC shape — same synthetic old/new pair as
@@ -333,6 +338,7 @@ WHERE CASE WHEN o.o_orderkey IS NULL THEN 'insert'
 # Incremental view maintenance from CDC (retraction-correct)
 # --------------------------------------------------------------------------
 
+@query()
 def ivm_status_counts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(o_orderstatus, n_orders): per-status order counts of the NEW
     snapshot, computed WITHOUT scanning it — the old snapshot's
@@ -414,6 +420,7 @@ def scd2_intervals(ev: DataFrame) -> DataFrame:
     )
 
 
+@query()
 def pit_dimension_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(state_at_purchase, n_purchases, revenue_cents): every purchase
     joined to the user's ACTIVITY-state interval valid at its
@@ -501,6 +508,7 @@ PIT_DIMENSION_JOIN_ORACLE = _pit_oracle()
 # --------------------------------------------------------------------------
 
 
+@query()
 def ivm_join_revenue_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(c_nationkey, n_pairs, revenue): the per-nation revenue view
     over orders JOIN customer, maintained INCREMENTALLY through a

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic.
 # Order matters: it is the deterministic tie-break (first wins).
@@ -80,6 +81,7 @@ def pred_lang_expr(text_col: str = "text") -> F.Column:
     return pred
 
 
+@query()
 def quality_score_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality features + a composite score.
 
@@ -143,6 +145,7 @@ FROM feat
 _BPE_PATTERN = r"[a-z]+|[0-9]|[^a-z0-9\s]"
 
 
+@query()
 def token_count_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.spread(tables.table(spark, sf_dir, "documents"), "doc_id")
     # Spark SQL string literals process backslash escapes ('\s' -> 's'),
@@ -175,6 +178,7 @@ def fingerprint_expr(text_col: str = "text") -> F.Column:
     return F.md5(normalized)
 
 
+@query(name="doc_fingerprint")
 def fingerprint_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.spread(tables.table(spark, sf_dir, "documents"), "doc_id")
     return docs.select("doc_id", fingerprint_expr().alias("fingerprint"))
@@ -191,6 +195,7 @@ FROM documents
 # Language identification (stopword-hit heuristic)
 # --------------------------------------------------------------------------
 
+@query()
 def lang_id_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predict language as the stopword list with the most token hits;
     ties and zero-hit documents resolve deterministically (declaration
@@ -243,6 +248,7 @@ FROM scored
 TFIDF_TOP_K = 3
 
 
+@query()
 def tfidf_top_terms_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 terms per document by tf-idf.
 
@@ -325,6 +331,7 @@ WHERE rank <= {TFIDF_TOP_K}
 # Text cleaning (normalization pass)
 # --------------------------------------------------------------------------
 
+@query()
 def clean_text_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalization pass every corpus gets before tokenization:
     collapse whitespace runs, strip leading/trailing space, lowercase.
@@ -359,6 +366,7 @@ _URL_RE = r"https?://[^\s]+"
 _LONGNUM_RE = r"[0-9]{6,}"
 
 
+@query()
 def pii_scan_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document PII indicator counts (emails, URLs, long digit
     runs) — the redaction pre-pass of a training pipeline. Pure
@@ -397,6 +405,7 @@ _CHUNK_SIZE = 50
 _CHUNK_STRIDE = 40
 
 
+@query()
 def doc_chunks_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split each document into overlapping token windows (size 50,
     stride 40 -> 10-token overlap) — the standard context-window prep
@@ -471,6 +480,7 @@ def _bm25_score_sql() -> str:
     )
 
 
+@query()
 def bm25_search_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 documents for a fixed conjunctive term query, scored with
     BM25. The classic two-pass shape: pass 1 aggregates corpus stats
@@ -546,6 +556,7 @@ BM25_SEARCH_ORACLE = _bm25_oracle()
 _PACK_BUDGET = 256
 
 
+@query()
 def chunk_packing_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign each chunk to a training-sequence bin under a 256-token
     budget: contiguous fill in (doc_id, chunk_idx) order, new bin when
@@ -621,6 +632,7 @@ _GOPHER_MAX_MWL = 10.0
 _GOPHER_MAX_DUP_FRAC = 0.6
 
 
+@query()
 def gopher_quality_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style per-document quality gate: word count, mean word
     length, duplicate-word fraction, longest word — and the composite
@@ -708,6 +720,7 @@ def _bigrams_col() -> F.Column:
     )
 
 
+@query()
 def doc_repetition_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: how much of it is one repeated bigram (the
     top-n-gram fraction from Gopher's repetition filters).
@@ -787,6 +800,7 @@ GROUP BY doc_id
 VOCAB_TOP = 100
 
 
+@query()
 def vocab_coverage_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-100 corpus tokens with the cumulative fraction of all token
     occurrences they cover — the curve a tokenizer/vocab designer reads
@@ -866,6 +880,7 @@ WHERE vocab_rank <= {VOCAB_TOP}
 # --------------------------------------------------------------------------
 
 
+@query()
 def source_profile_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per source: document count, token volume, language
     spread, mean length, and exact-duplicate rate — the summary table
@@ -949,6 +964,7 @@ GROUP BY source
 # --------------------------------------------------------------------------
 
 
+@query()
 def source_overlap_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise source-overlap matrix: for each unordered source pair,
     how many distinct normalized fingerprints appear in BOTH — the
@@ -997,6 +1013,7 @@ GROUP BY 1, 2
 BPE_TOP_MERGES = 20
 
 
+@query()
 def bpe_merge_candidates_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top adjacent-character-pair merge candidates weighted by word
     frequency — the inner loop of BPE tokenizer training (each
@@ -1073,6 +1090,7 @@ QUALIFY merge_rank <= {BPE_TOP_MERGES}
 _RARITY_SCALE = 1_000_000
 
 
+@query()
 def token_rarity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean and max unigram token rarity — the
     perplexity-proxy quality filter pretraining pipelines run when no
@@ -1164,6 +1182,7 @@ GROUP BY doc_id
 POSTINGS_CAP = 20  # postings materialized per term in the sample column
 
 
+@query()
 def inverted_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(term, df, total_tf, postings_head): the posting-list artifact
     a batch index build writes for a search tier — document frequency,
@@ -1228,6 +1247,7 @@ GROUP BY term
 # Language confusion matrix (declared vs detected)
 # --------------------------------------------------------------------------
 
+@query()
 def lang_confusion_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(declared_lang, pred_lang, n_docs, share_of_declared): the
     confusion matrix between each document's DECLARED language tag
@@ -1312,6 +1332,7 @@ DISTINCTIVE_TOP_K = 5
 DISTINCTIVE_MIN_COUNT = 20
 
 
+@query()
 def source_distinctive_terms_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1402,6 +1423,7 @@ WHERE rank <= {DISTINCTIVE_TOP_K}
 VOCAB_GROWTH_BUCKETS = 32
 
 
+@query()
 def vocab_growth_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bucket, n_docs, n_tokens, new_terms, cum_terms): the corpus's
     vocabulary-growth (Heaps-law) curve in ingestion order — how many
@@ -1517,6 +1539,7 @@ FROM per_doc p LEFT JOIN new_terms n ON n.bucket = p.bucket
 # --------------------------------------------------------------------------
 
 
+@query()
 def readability_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_sentences, n_words, n_syllables, flesch): Flesch
     reading ease per document — the curation signal that separates
@@ -1581,6 +1604,7 @@ FROM feat
 # --------------------------------------------------------------------------
 
 
+@query()
 def char_entropy_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_chars_counted, n_distinct_chars, entropy_bits): the
     Shannon entropy of each document's character distribution — the
@@ -1669,6 +1693,7 @@ GROUP BY 1
 # --------------------------------------------------------------------------
 
 
+@query()
 def phrase_search_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(term_a, term_b, doc_id, n_occurrences): every document
     containing the corpus's most frequent bigram as an EXACT adjacent
@@ -1771,6 +1796,7 @@ GROUP BY 1, 2, 3
 # --------------------------------------------------------------------------
 
 
+@query()
 def charset_profile_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_docs, n_chars, ascii_printable_rate, control_rate,
     replacement_rate, digit_rate, upper_rate): per-source character-
@@ -1864,6 +1890,7 @@ GROUP BY source
 # --------------------------------------------------------------------------
 
 
+@query()
 def pii_redact_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, redacted, n_redacted): the corpus with emails, URLs
     and long digit runs replaced by typed placeholders — the
@@ -1927,6 +1954,7 @@ PII_REDACT_ORACLE = _pii_redact_oracle()
 SRC_SIM_V = 200  # corpus-wide top-V terms define the comparison space
 
 
+@query()
 def source_similarity_matrix_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2041,6 +2069,7 @@ COLLOC_MIN_COUNT = 5
 COLLOC_TOP = 20
 
 
+@query()
 def collocation_pmi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, c_ab, lift, rank): the corpus' strongest collocations
     — adjacent token bigrams ranked by association lift
@@ -2149,6 +2178,7 @@ WHERE rank <= {COLLOC_TOP}
 GATE_LEXICON = ("slow", "stale", "legacy")
 
 
+@query()
 def lexicon_gate_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_docs, n_flagged, n_hits, flag_rate): per source, how
     many documents contain at least one blocklisted token, and the

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..pinning import pin as _pin
+from ..registry import query
 from .money import dec as _dec
 from .money import one_minus as _one_minus
 
@@ -69,6 +70,7 @@ def _disc_price() -> F.Column:
 # --------------------------------------------------------------------------
 
 
+@query()
 def volume_shipping_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Yearly trade volume between NATION_1 and NATION_2, both ways.
 
@@ -136,6 +138,7 @@ GROUP BY 1, 2, 3
 # --------------------------------------------------------------------------
 
 
+@query()
 def market_share_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NATION_8's share of EUROPE's ECONOMY-part revenue by year.
 
@@ -226,6 +229,7 @@ GROUP BY 1
 # --------------------------------------------------------------------------
 
 
+@query()
 def product_profit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per supplier-nation, per year profit on widget parts.
 
@@ -284,6 +288,7 @@ GROUP BY 1, 2
 # --------------------------------------------------------------------------
 
 
+@query()
 def late_order_priority_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """How many orders per priority had SOME item ship >90 days after
     the order date.
@@ -325,6 +330,7 @@ GROUP BY o_orderpriority
 # --------------------------------------------------------------------------
 
 
+@query()
 def returned_items_top_customers_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -399,6 +405,7 @@ LIMIT 20
 # --------------------------------------------------------------------------
 
 
+@query()
 def supplier_part_variety_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct supplier count per (brand, type, size), excluding one
     brand and suppliers under financial review (negative balance —
@@ -447,6 +454,7 @@ GROUP BY 1, 2, 3
 _BULK_QTY = 300
 
 
+@query()
 def large_volume_customers_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders whose total quantity exceeds 300, with their customers.
 
@@ -504,6 +512,7 @@ _MINCOST_MAX_SIZE = 15
 _MINCOST_TOPK = 100
 
 
+@query()
 def min_cost_supplier_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For STANDARD parts under size 15, the EUROPE supplier(s) whose
     best observed sale price equals the part's regional minimum.
@@ -609,6 +618,7 @@ _IMPORTANT_NATION = "NATION_8"
 _IMPORTANT_DENOM = 500
 
 
+@query()
 def important_part_values_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parts whose NATION_8-supplied sale value exceeds 1/500 of that
     nation's total — the Q11 group-HAVING-over-global-scalar shape.
@@ -672,6 +682,7 @@ _SPEED_YEAR_HI = "1996-01-01"
 _HIGH_PRIORITIES = ("1-URGENT", "2-HIGH")
 
 
+@query()
 def shipping_speed_priority_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Urgent-vs-other order counts per shipping-speed bucket — the
     Q12 shape. No shipmode column exists (SURVEY.md §2.8), so the
@@ -733,6 +744,7 @@ GROUP BY 1
 # --------------------------------------------------------------------------
 
 
+@query()
 def discount_elasticity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l_returnflag, n, mean_qty, slope, intercept, r2): per return
     flag, the least-squares fit of line-item QUANTITY on the discount
@@ -841,6 +853,7 @@ FROM sums
 # --------------------------------------------------------------------------
 
 
+@query()
 def cust_order_dist_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(c_count, custdist): how many customers placed exactly k
     non-urgent orders — TPC-H Q13's shape (LEFT OUTER join so
@@ -889,6 +902,7 @@ _PROMO_LO = "1995-09-01"
 _PROMO_HI = "1995-10-01"
 
 
+@query()
 def promo_revenue_share_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -961,6 +975,7 @@ FROM joined
 _Q17_BRAND = "Brand#12"
 
 
+@query()
 def small_qty_revenue_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_lineitems, total_extprice, avg_yearly): TPC-H Q17 — the
     average yearly revenue lost if small-quantity orders (below 20%
@@ -1036,6 +1051,7 @@ WHERE 5 * b.qty * t.n_li < t.sum_qty
 # --------------------------------------------------------------------------
 
 
+@query()
 def branded_basket_revenue_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1100,6 +1116,7 @@ WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
 _LAG_PS = (25, 50, 75, 90, 99)
 
 
+@query()
 def fulfillment_lag_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(o_orderpriority, p, n_lineitems, lag_q): exact type-1
     percentiles (25/50/75/90/99) of the order-to-ship lag in days,

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..registry import query
 
 WORD_PATTERN = r"\W+"
 
@@ -41,6 +42,7 @@ def wordcount(df: DataFrame, text_col: str = "text") -> DataFrame:
     return tokens(df, text_col).groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
 
 
+@query()
 def wordcount_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wordcount(tables.spread(tables.table(spark, sf_dir, "documents"), "doc_id"))
 
@@ -52,6 +54,7 @@ def point_lookup(df: DataFrame, word: str) -> DataFrame:
     return df.filter(F.col("word") == word)
 
 
+@query(name="wordcount_point_lookup")
 def point_lookup_query(spark: SparkSession, sf_dir: str, word: str = "spark") -> DataFrame:
     return point_lookup(wordcount_query(spark, sf_dir), word)
 

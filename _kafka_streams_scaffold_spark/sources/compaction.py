@@ -8,10 +8,14 @@ capacity does (the classic small-files problem). Compaction rewrites a
 table to ~TARGET-sized files and is a pure layout change — row
 multiset identical, asserted in tests.
 
-The rewrite stages into a side directory then swaps, the same
-crash-safe pattern as ``ParquetChangelogStore.compact``; at cluster
-scale the job runs per-partition (only partitions whose file count
-exceeds a threshold rewrite) or becomes a Delta/Iceberg OPTIMIZE.
+The rewrite is staged in a directory beside the table, on the same
+filesystem, and verified before the old table is deleted and the
+staged one renamed into its place, the same pattern as
+``ParquetChangelogStore.compact``. The swap is not atomic: between the
+delete and the rename the path does not exist, and a crash there
+leaves the rows only in the staged directory. At cluster scale the
+job runs per-partition (only partitions whose file count exceeds a
+threshold rewrite) or becomes a Delta/Iceberg OPTIMIZE.
 """
 
 from __future__ import annotations
@@ -55,7 +59,9 @@ def compact_table(
     before = table_file_stats(spark, path)
     n_out = max(1, -(-before["total_bytes"] // target_bytes))
     df = spark.read.parquet(path)
-    staged = tempfile.mkdtemp(prefix="compact-")
+    staged = tempfile.mkdtemp(
+        prefix=".compact-", dir=os.path.dirname(os.path.abspath(path))
+    )
     df.repartition(n_out).write.mode("overwrite").parquet(staged)
     # verify the rewrite BEFORE the swap: a failed job must never
     # destroy the source table

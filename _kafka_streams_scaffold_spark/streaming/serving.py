@@ -181,9 +181,13 @@ class ParquetChangelogStore:
         win on read (their batch ids are larger) and the next
         compaction folds them in. Returns the number of live keys.
 
-        Write is staged (write snapshot to a side directory, then
-        swap) so a concurrent reader never sees a half-written store;
-        at cluster scale the same job is a partition-wise rewrite or a
+        The snapshot is staged in a directory beside the store, on the
+        same filesystem, so the final rename cannot fail after the old
+        store is deleted. The swap is not atomic: between the delete
+        and the rename the path does not exist (a concurrent reader
+        fails, and after a crash there the rows are only in the staged
+        directory), and a batch appended during compaction is lost. At
+        cluster scale the same job is a partition-wise rewrite or a
         Delta/Iceberg MERGE."""
         import os
         import shutil
@@ -199,7 +203,10 @@ class ParquetChangelogStore:
             .withColumn("_batch_id", F.lit(max_batch))
             .withColumn("_deleted", F.lit(False))
         )
-        staged = tempfile.mkdtemp(prefix="changelog-compact-")
+        staged = tempfile.mkdtemp(
+            prefix=".changelog-compact-",
+            dir=os.path.dirname(os.path.abspath(self.path)),
+        )
         snapshot.write.mode("overwrite").parquet(staged)
         n = spark.read.parquet(staged).count()
         shutil.rmtree(self.path)

@@ -277,8 +277,6 @@ def test_register_raises_on_duplicate_name():
     first = names[0]
     with _pytest.raises(ValueError, match="duplicate query registration"):
         registry.register(first, registry.queries()[first])
-    # deliberate re-registration stays possible
-    registry.register(first, registry.queries()[first], replace=True)
 
 
 def test_no_registered_query_plans_cartesian_or_row_python(

@@ -11,8 +11,8 @@ For every registered query this tool determines
 - the IMPLEMENTING SOURCE: the query function's def and (when the
   registration binds one) the oracle — a module constant's assignment
   statement, or the generating helper's def for call-form oracles —
-  resolved by parsing ``registry._ensure_loaded``'s ``register(...)``
-  calls with ``ast`` (no convention guessing);
+  read from the declaration ``registry.query`` stores on the function
+  (no convention guessing);
 - the LAST-CHANGE COMMIT: walking the implementing file's git history
   (newest first) and extracting the exact source segments from each
   blob, the newest commit whose segments differ from the next-older
@@ -38,12 +38,15 @@ Usage:
 from __future__ import annotations
 
 import ast
+import inspect
 import json
 import pathlib
 import subprocess
 import sys
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
+# The package is imported from this checkout, whatever the caller's path.
+sys.path.insert(0, str(REPO))
 PKG = "_kafka_streams_scaffold_spark"
 # Derived by glob, not a literal range: the r10 verdict found the
 # hardcoded r01..r09 list would hide CORRECTNESS_r10.json's 50 green
@@ -63,58 +66,18 @@ def _git(*args: str) -> str:
 def _registrations() -> dict[str, tuple[str, str, str | None]]:
     """name -> (module relpath, funcname, oracle symbol name or None).
 
-    The oracle symbol is the constant's name for attribute-form
-    registrations and the HELPER FUNCTION's name for call-form
-    (``mod._foo_oracle()``) ones — either way a top-level statement
-    whose source segment we can track through history.
+    Read from the ``Declaration`` that ``registry.query`` stores on each
+    query function. The oracle symbol is the module attribute it names:
+    a constant, or the helper function that fills a template. Either
+    way it is a top-level statement whose source segment we can track
+    through history.
     """
-    reg_path = REPO / PKG / "registry.py"
-    tree = ast.parse(reg_path.read_text())
-
-    # alias -> module relpath, from the ImportFrom statements inside
-    # _ensure_loaded (``from .operators import dedup as d`` style)
-    alias_file: dict[str, str] = {}
-    for node in ast.walk(tree):
-        if isinstance(node, ast.ImportFrom) and node.module:
-            base = node.module  # e.g. "operators"
-            for al in node.names:
-                name = al.asname or al.name
-                rel = pathlib.Path(PKG, *base.split("."), f"{al.name}.py")
-                if (REPO / rel).exists():
-                    alias_file[name] = str(rel)
+    from _kafka_streams_scaffold_spark import registry
 
     out: dict[str, tuple[str, str, str | None]] = {}
-    for node in ast.walk(tree):
-        if not (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Name)
-            and node.func.id == "register"
-            and node.args
-            and isinstance(node.args[0], ast.Constant)
-        ):
-            continue
-        qname = node.args[0].value
-        fn = node.args[1]
-        assert isinstance(fn, ast.Attribute) and isinstance(fn.value, ast.Name), (
-            f"unexpected register() fn shape for {qname}"
-        )
-        relfile = alias_file[fn.value.id]
-        oracle = node.args[2] if len(node.args) > 2 else None
-        for kw in node.keywords:
-            if kw.arg == "oracle":
-                oracle = kw.value
-        oracle_sym: str | None = None
-        if isinstance(oracle, ast.Attribute):
-            oracle_sym = oracle.attr
-        elif isinstance(oracle, ast.Call) and isinstance(
-            oracle.func, ast.Attribute
-        ):
-            oracle_sym = oracle.func.attr
-        elif oracle is not None and not (
-            isinstance(oracle, ast.Constant) and oracle.value is None
-        ):
-            raise AssertionError(f"unexpected oracle shape for {qname}")
-        out[qname] = (relfile, fn.attr, oracle_sym)
+    for qname, fn in registry.queries().items():
+        relfile = pathlib.Path(inspect.getfile(fn)).resolve().relative_to(REPO)
+        out[qname] = (str(relfile), fn.__name__, fn.declaration.oracle)
     return out
 
 
